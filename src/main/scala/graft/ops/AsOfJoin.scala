@@ -58,25 +58,20 @@ object AsOfJoin {
     * carry-in rows, and union build + carry + probe rows into one tagged
     * relation ready for a per-(entity, bucket) cumulative merge.
     *
-    * DIAMOND note (same analysis as `BucketedWindows`): the deduped build
-    * relation feeds TWO subtrees (the per-bucket carry reduction and the
-    * build rows of the union), and the probe side feeds two more (the
-    * probe-bucket timeline and the probe rows). Catalyst cannot share them
-    * (pruning narrows the timeline branches, so ReuseExchange never
-    * fires); with `stage = identity` everything below each branch
-    * re-executes. That is the right default when both inputs are parquet
-    * scans — the narrow branches re-scan only their pruned columns — but
-    * when a side embeds expensive derivation, pass `stage` (lazy
-    * `_.localCheckpoint(false)` single-node, parquet write-then-read at
-    * cluster scale) to materialize the deduped build once. */
+    * The deduped build relation feeds two subtrees (the per-bucket carry
+    * reduction and the build rows of the union), and the probe side feeds
+    * two more (the probe-bucket timeline and the probe rows). They are NOT
+    * staged: the narrow timeline branches re-scan only their pruned
+    * columns, which is cheaper than materializing parquet-scan inputs. A
+    * caller whose side embeds expensive derivation stages it first
+    * ([[Staging]]). */
   private def prepUnion(
       probes: DataFrame,
       build: DataFrame,
       entityCol: String,
       tsCol: String,
       payload: Seq[String],
-      bucketWidth: Long,
-      stage: DataFrame => DataFrame): (DataFrame, StructType, StructType) = {
+      bucketWidth: Long): (DataFrame, StructType, StructType) = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val clash = probes.columns.toSet.intersect(payload.toSet)
     require(clash.isEmpty, s"payload columns collide with probe columns: $clash — rename one side")
@@ -86,11 +81,10 @@ object AsOfJoin {
     // One build row per (entity, ts): deterministic max over the payload
     // struct. Duplicate build timestamps would otherwise make window `last`
     // order-dependent (nondeterministic across runs).
-    val b0 = stage(
-      build
-        .groupBy(e, col(tsCol))
-        .agg(max(struct(payload.map(col): _*)).as(PAY))
-        .withColumn(B, floor(col(tsCol) / bucketWidth)))
+    val b0 = build
+      .groupBy(e, col(tsCol))
+      .agg(max(struct(payload.map(col): _*)).as(PAY))
+      .withColumn(B, floor(col(tsCol) / bucketWidth))
 
     val payType = b0.schema(PAY).dataType
     val probeType = StructType(probes.schema.fields)
@@ -143,9 +137,8 @@ object AsOfJoin {
       entityCol: String,
       tsCol: String,
       payload: Seq[String],
-      bucketWidth: Long,
-      stage: DataFrame => DataFrame = identity): DataFrame = {
-    val (unioned, _, _) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth, stage)
+      bucketWidth: Long): DataFrame = {
+    val (unioned, _, _) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth)
     val w = Window
       .partitionBy(col(entityCol), col(B))
       .orderBy(col(tsCol).asc, col(TAG).asc)
@@ -188,16 +181,14 @@ object AsOfJoin {
 
   /** Explicit sort-merge as-of join: repartitionByRange on (entity, bucket) +
     * secondary sort on (ts, tag) + single-pass streaming merge. Output rows
-    * stay (entity, bucket, ts)-sorted within partitions. */
-  /** @param stageUnion materialization hook for the unioned merge input —
-    *   the RangePartitioner's sampling pass otherwise executes the whole
-    *   prep subtree twice (see below). The default lazy local checkpoint
-    *   pins the relation's blocks for the SESSION lifetime (the returned
-    *   DataFrame's lineage is truncated onto them, so the operator cannot
-    *   release them itself); the bench loop's between-query hygiene
-    *   reclaims them, and a long-lived caller invoking asOfMerge many
-    *   times should pass `identity` (re-pays the sampling double-compute)
-    *   or its own TTL'd parquet stage. */
+    * stay (entity, bucket, ts)-sorted within partitions.
+    *
+    * The unioned merge input is staged ([[Staging]]): the RangePartitioner
+    * samples its input to place the split bounds, which would otherwise
+    * execute the whole prep subtree twice. Its blocks stay pinned for the
+    * session (the returned DataFrame's lineage is truncated onto them), so
+    * a long-lived caller releases them with `unpersist` once the result is
+    * consumed. */
   def asOfMerge(
       probes: DataFrame,
       build: DataFrame,
@@ -205,24 +196,17 @@ object AsOfJoin {
       tsCol: String,
       payload: Seq[String],
       bucketWidth: Long,
-      numPartitions: Int = 0,
-      stage: DataFrame => DataFrame = identity,
-      stageUnion: DataFrame => DataFrame = _.localCheckpoint(false)): DataFrame = {
-    val (unioned, probeType, payType) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth, stage)
+      numPartitions: Int = 0): DataFrame = {
+    val (unioned, probeType, payType) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth)
     val spark = probes.sparkSession
     val parts = if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
     // Range partitioning keeps every (entity, bucket) group in one partition
     // (equal keys compare equal → same range) while spreading a hot entity's
-    // buckets across many partitions — the explicit skew treatment.
-    //
-    // The RangePartitioner SAMPLES its input to place the split bounds,
-    // which executes the input subtree twice: once for the sample job, once
-    // for the real shuffle (r8 measurement: the build-dedupe groupBy and the
-    // carry window both ran twice). stageUnion (default: lazy local
-    // checkpoint) materializes the union on its first (sampling) pass; the
-    // shuffle pass then re-reads the blocks — the same bytes the exchange
-    // moves anyway. Block lifecycle: see the scaladoc.
-    val sorted = stageUnion(
+    // buckets across many partitions — the explicit skew treatment. The
+    // staged union is materialized by the sampling pass; the shuffle pass
+    // re-reads its blocks (unstaged, r8 measured the build-dedupe groupBy
+    // and the carry window running twice).
+    val sorted = Staging.stage(
       unioned.select(col(entityCol), col(B), col(tsCol), col(TAG), col(PAY), col(PRB)))
       .repartitionByRange(parts, col(entityCol), col(B))
       .sortWithinPartitions(col(entityCol), col(B), col(tsCol), col(TAG))

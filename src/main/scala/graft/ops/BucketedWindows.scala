@@ -58,20 +58,14 @@ object BucketedWindows {
     * (1-based long per entity) — all with exact unbucketed-window
     * semantics.
     *
-    * `stage` controls how the operator's one inherent DIAMOND — the
-    * repartitioned relation feeds BOTH the row-level windows and the
-    * per-bucket summary — is materialized. Catalyst cannot share the two
-    * subtrees (column pruning narrows the summary side's scan and join-key
-    * constraint inference adds a filter to the row side, so the canonical
-    * plans differ and ReuseExchange never fires), which means the DEFAULT
-    * `identity` re-executes everything below the diamond twice. That is
-    * fine when the input is a cheap scan; when the input embeds expensive
-    * work (the flagship's image-decode UDF — measured 2× wall), pass a
-    * staging hook: `_.localCheckpoint(false)` pins the input in the block
-    * manager lazily (single-node volumes), a parquet write-then-read stages
-    * it at cluster scale (the features a 100 TB pipeline would materialize
-    * anyway before its window pass — decoded features are ~100× smaller
-    * than pixels). Same contract as `Dedup.Stage`. */
+    * The repartitioned input feeds BOTH the row-level windows and the
+    * per-bucket summary — a DIAMOND Catalyst cannot share (column pruning
+    * narrows the summary side's scan and join-key constraint inference
+    * adds a filter to the row side, so ReuseExchange never fires).
+    * Everything below `df` therefore runs twice: fine for a scan, but a
+    * caller whose input embeds expensive work stages it first
+    * ([[Staging]]), as `FeaturePipeline.frameFeatures` does with its
+    * decoded frames. */
   def frameWindows(
       df: DataFrame,
       entityCol: String,
@@ -81,7 +75,6 @@ object BucketedWindows {
       locfCols: Seq[String],
       lagCols: Seq[String],
       tieBreak: Seq[String] = Nil,
-      stage: DataFrame => DataFrame = identity,
       broadcastCarries: Boolean = true): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     require(gap >= 0, "gap must be non-negative")
@@ -92,7 +85,7 @@ object BucketedWindows {
       if (tieBreak.isEmpty) col(tsCol) else struct(order: _*)
 
     // 1. the ONE full-data exchange; upstream runs once in its map side
-    val base = stage(df)
+    val base = df
       .withColumn(B, floor(col(tsCol) / bucketWidth))
       .repartition(e, col(B))
 

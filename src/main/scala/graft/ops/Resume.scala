@@ -97,14 +97,6 @@ object Resume {
             "rowCount LONG, featureDigest LONG, completedAt LONG"))
   }
 
-  /** Partitions of `all` (distinct `partitionCol` values) not yet completed
-    * in the manifest — the reference's skip-if-exists as a `left_anti`. */
-  def pending(all: DataFrame, partitionCol: String, manifest: DataFrame): DataFrame =
-    all
-      .select(col(partitionCol).as("partition"))
-      .distinct()
-      .join(broadcast(manifest.select("partition")), Seq("partition"), "left_anti")
-
   /** Process `features` (must carry `partitionCol`) for the pending
     * partitions only, append the data as entity-partitioned parquet, then
     * append manifest rows carrying lineage (row counts + digests + input

@@ -1,12 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.codec.ImageCodec
 import graft.feats.VecOps
-import graft.ops.{AsOfJoin, BucketedWindows, Windows}
+import graft.ops.{AsOfJoin, BucketedWindows, Staging, Windows}
 import graft.synth.SynthImages
 
 /** The flagship north-rule pipeline, end to end in ONE Spark plan
@@ -45,41 +44,23 @@ object FeaturePipeline {
     * session_id. */
   def frameFeatures(images: DataFrame): DataFrame = {
     val frames = SynthImages.withEntityTs(images)
-    val withVec = frames
-      .withColumn("vec", ImageCodec.imageFeaturesCol(col("bytes"), ResizeTo, CropTo))
-      // P9 string rewrite: `imagebind_feature_extractor.py:62`
-      .withColumn("caption_rw", regexp_replace(col("caption"), "#C C", "actor"))
-      .drop("bytes")
-    // A/B hook (perf comparisons only — NOT a supported mode): the plain
-    // entity-window formulation this bucketed stage replaced.
-    if (sys.props.get("graft.pipeline.plainWindows").contains("1")) {
-      val w = Window.partitionBy(col("entity")).orderBy(col("ts"))
-      return graft.ops.Sessionize.sessionize(
-        graft.ops.Backfill.locf(withVec, "entity", "ts", Seq("caption_rw"))
-          .withColumnRenamed("caption_rw_filled", "caption_filled")
-          .withColumn(
-            "vec_delta",
-            VecOps.vecSub(
-              col("vec").cast("array<double>"),
-              coalesce(
-                lag(col("vec"), 1).over(w).cast("array<double>"),
-                col("vec").cast("array<double>")))),
-        "entity", "ts", SessionGapFrames).drop("caption_rw")
-    }
+    // decode ONCE: frameWindows' windows/summary diamond would otherwise
+    // re-run the codec UDF on both branches
+    val decoded = Staging.stage(
+      frames
+        .withColumn("vec", ImageCodec.imageFeaturesCol(col("bytes"), ResizeTo, CropTo))
+        // P9 string rewrite: `imagebind_feature_extractor.py:62`
+        .withColumn("caption_rw", regexp_replace(col("caption"), "#C C", "actor"))
+        .drop("bytes"))
     BucketedWindows
       .frameWindows(
-        withVec,
+        decoded,
         "entity",
         "ts",
         WindowBucketFrames,
         SessionGapFrames,
         locfCols = Seq("caption_rw"),
-        lagCols = Seq("vec"),
-        // decode ONCE: the operator's windows/summary diamond would
-        // otherwise re-run the codec UDF on both branches (see the stage
-        // scaladoc); a lazy local checkpoint pins the decoded 54-float
-        // rows — the cluster-scale analogue is a parquet feature stage
-        stage = _.localCheckpoint(false))
+        lagCols = Seq("vec"))
       .withColumnRenamed("caption_rw_filled", "caption_filled")
       .withColumn(
         "vec_delta",
