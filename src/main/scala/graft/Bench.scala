@@ -104,48 +104,21 @@ object Bench {
     consumeAll(graft.pipeline.FeaturePipeline.frameFeatures(filtered))
   }
 
-  def flagshipRpsPublic(cpus: Int, inputPath: String, mode: String = "full"): (Long, Double) =
-    flagshipRps(cpus, inputPath, mode)
-
-  private def decodeOnly(spark: SparkSession, inputPath: String): Long = {
-    spark.read.parquet(inputPath)
-      .withColumn("vec", graft.codec.ImageCodec.imageFeaturesCol(col("bytes"),
-        graft.pipeline.FeaturePipeline.ResizeTo, graft.pipeline.FeaturePipeline.CropTo))
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(to_json(vec)))"))
-      .head().getLong(0)
-  }
-
   /** Release every persisted RDD's blocks (the flagship's lazily
     * localCheckpointed decode stage pins ~10 MB per pipeline instance;
-    * callers that build the pipeline repeatedly — ScaleChild units,
-    * flagshipRps passes — call this between iterations so the block
-    * manager does not grow monotonically). */
+    * ScaleChild builds the pipeline once per unit and calls this between
+    * units so the block manager does not grow monotonically). */
   private[graft] def releasePersistedRdds(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
 
-  /** Full-pass probe (manual tuning loop — graft.ScaleOne): warm-up pass +
-    * best-of-k timed passes in the current JVM. */
-  private def flagshipRps(cpus: Int, inputPath: String, mode: String = "full"): (Long, Double) = {
-    val spark = session(cpus)
-    def pass(): Long = {
-      val n =
-        if (mode == "decode") decodeOnly(spark, inputPath)
-        else consumeAll(graft.pipeline.FeaturePipeline
-          .frameFeatures(spark.read.parquet(inputPath)))
-      releasePersistedRdds(spark) // drop this pass's checkpoint blocks
-      n
-    }
-    val timedReps = sys.env.getOrElse("SPARK_GRAFT_TIMED_REPS", "2").toInt
+  /** Untimed session warm-up before a timed query loop: without it the
+    * first query absorbs ~4s of scheduler/codegen/parquet-footer warm-up
+    * that belongs to the session, not the operator. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
-      pass() // warm-up: one FULL untimed pass (JIT/C2 needs real volume)
-      val runs = (1 to timedReps).map { _ =>
-        val t0 = System.nanoTime()
-        val rows = pass()
-        (rows, rows / ((System.nanoTime() - t0) / 1e9))
-      }
-      runs.maxBy(_._2)
-    } finally spark.stop()
-  }
+      spark.range(100000).selectExpr("sum(id)").head()
+      spark.read.parquet(s"$sfDir/nation.parquet").count()
+    } catch { case _: Throwable => () }
 
   def materializePublic(entities: Int, frames: Int): String = materialize(entities, frames)
 
@@ -651,31 +624,11 @@ object Bench {
     // ---- phase 3: per-query timings (driver contract), deadline-guarded ----
     val queriesDeadline = budgetSec - 25 // reserve: cpu control
     val spark = session(cpus.toInt)
-    // untimed session warm-up: without it the alphabetically-first query
-    // absorbs ~4s of scheduler/codegen/parquet-footer warm-up that belongs
-    // to the session, not the operator
-    try {
-      spark.range(100000).selectExpr("sum(id)").head()
-      spark.read.parquet(s"$sfDir/nation.parquet").count()
-    } catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
     // publish each timing as it lands: a driver-timeout SIGTERM during the
     // query phase must still emit every COMPLETED timing
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // Alphabetical loop order EXCEPT stage owners run before their
-    // dependents: q_minhash_lsh IS the session-staged pair graph that
-    // q_dedup_components consumes (SparkEntry.minhashPairGraph), so the
-    // owner runs first and pays the one-time staging cost of the relation
-    // it defines; the dependent then measures only canonicalization.
-    // Alphabetical order would silently bill the whole LSH pipeline to
-    // q_dedup_components ('d' < 'm') and make q_minhash_lsh look free.
-    val sortedQ = SparkEntry.queries.toSeq.sortBy(_._1)
-    val orderedQ = sortedQ.find(_._1 == "q_minhash_lsh") match {
-      case Some(owner) if sortedQ.exists(_._1 == "q_dedup_components") =>
-        val without = sortedQ.filterNot(_._1 == "q_minhash_lsh")
-        val i = without.indexWhere(_._1 == "q_dedup_components")
-        (without.take(i) :+ owner) ++ without.drop(i)
-      case _ => sortedQ
-    }
+    val orderedQ = SparkEntry.orderedQueries // pair-graph owner before its consumer
     // Fault-injection hook (validates the watchdog END-TO-END): with
     // SPARK_GRAFT_BENCH_FAULT_SLEEP_SEC=N set, an extra query whose every
     // task sleeps N seconds joins the loop — it must cost its cap (not N×
@@ -694,29 +647,9 @@ object Bench {
           sp.range(0, 64, 1, 64).where(slp(col("id"))).toDF()
         })
       }.toSeq
-    // Persisted-block hygiene across the loop (round-6 directive #3): each
-    // query's localCheckpoint-staged relations (flagship decode stage,
-    // dedup/ngram shingle stages, resume state) are dead once its count()
-    // returns — release them so 59 queries cannot grow the block manager
-    // monotonically. EXCEPT the session-memoized minhash pair graph: its
-    // owner q_minhash_lsh stages blocks that q_dedup_components (and a
-    // possible repair re-run) reads later — localCheckpoint truncates
-    // lineage, so releasing those blocks would not recompute, it would
-    // FAIL the consumer. Snapshot the owner's surviving RDD ids and keep
-    // exactly those.
-    def afterQuery(): Unit = {
-      // protection is recomputed from the LIVE memo every time (r7 review,
-      // replacing a persisted-RDDs snapshot keyed on the owner query):
-      // exactly the memoized pair graph's own staged RDD survives — the
-      // owner's dead intermediates (signature stage) are released, a memo
-      // built by the CONSUMER after a cancelled owner run is protected,
-      // and a cancelled owner's partial garbage (no memo stored) is
-      // reclaimed like any other query's blocks.
-      val protectedIds = SparkEntry.pairGraphStagedIds(spark, sfDir)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!protectedIds.contains(id)) rdd.unpersist(blocking = false)
-      }
-    }
+    // persisted-block hygiene after every run (first pass and repair
+    // alike): SparkEntry.releaseBetweenQueries
+    def afterQuery(): Unit = SparkEntry.releaseBetweenQueries(spark, sfDir)
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         capSec: Long): Double = {
       val gc0 = gcMillis
@@ -793,7 +726,7 @@ object Bench {
         // work, exactly the repair premise. The superseded memo's staged
         // blocks lose their protection with it (afterQuery recomputes
         // protection from the live memo, so the next release reclaims them).
-        if (name == "q_minhash_lsh") SparkEntry.invalidatePairGraph(spark, sfDir)
+        if (name == SparkEntry.PairGraphOwner) SparkEntry.invalidatePairGraph(spark, sfDir)
         // repairs run under the same watchdog at DOUBLE the first-pass cap
         // (a watchdog-cancelled first pass proved the cap can bind; the
         // retry exists to outlast a bad window, not to re-lose to it) —

@@ -24,6 +24,9 @@ object SparkEntry {
     * micros ⇒ ~15 buckets over the 30-day testdata; at 10^12 rows the same
     * code spreads a hot entity over (span/width) tasks. */
   private val AsOfBucketUs = 2L * DayUs
+  /** Shuffle partitions of the two streaming queries (their state-store
+    * count per micro-batch; see q_streaming_session). */
+  private val StreamShufflePartitions = 4
 
   /** Driver-comparable form of a double-array column: each element rounded
     * to `d` decimals then emitted as a fixed-point integer (×10^d), joined
@@ -89,16 +92,17 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** Drop the memoized pair graph for (session, dir) — the bench repair
-    * pass calls this before RE-TIMING q_minhash_lsh: the owner query's
-    * honest cost IS building + staging the graph, and a repair re-run that
-    * silently read the memo would record the whole LSH pipeline as ~0.2 s
-    * (review finding r6). Consumers (q_dedup_components) are unaffected —
-    * their recorded semantics is canonicalization over an existing graph. */
+    * pass and `obs.QueryReport` call this before RE-TIMING q_minhash_lsh:
+    * the owner query's honest cost IS building + staging the graph, and a
+    * re-run that silently read the memo would record the whole LSH
+    * pipeline as ~0.2 s (review finding r6). Consumers (q_dedup_components)
+    * are unaffected — their recorded semantics is canonicalization over an
+    * existing graph. */
   private[graft] def invalidatePairGraph(s: SparkSession, dir: String): Unit =
     pairGraphCache.remove((s, dir))
 
   /** RDD ids backing the LIVE memoized pair graph (empty when no memo):
-    * exactly the blocks the bench loop's between-query hygiene must keep —
+    * exactly the blocks [[releaseBetweenQueries]] must keep —
     * a staged relation's lineage is truncated, so releasing them would FAIL
     * the memo's next reader, not slow it. Derived from the memo itself
     * rather than a persisted-RDDs snapshot (r7 review): a snapshot
@@ -111,6 +115,47 @@ object SparkEntry {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
       }
     }.toSet
+
+  /** The query that owns the pair-graph memo: it runs right before its
+    * consumer q_dedup_components, and a re-timed run of it must first
+    * [[invalidatePairGraph]] so it times building the graph, not a memo hit. */
+  private[graft] val PairGraphOwner = "q_minhash_lsh"
+
+  /** `queries` in the order every timing loop runs them: alphabetical,
+    * except that [[PairGraphOwner]] runs right before q_dedup_components.
+    * The owner then pays the one-time staging of the relation it defines,
+    * and the consumer measures only canonicalization; alphabetical order
+    * would bill the whole LSH pipeline to q_dedup_components ('d' < 'm')
+    * and make q_minhash_lsh look free. */
+  private[graft] def orderedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val sortedQ = queries.toSeq.sortBy(_._1)
+    sortedQ.find(_._1 == PairGraphOwner) match {
+      case Some(owner) if sortedQ.exists(_._1 == "q_dedup_components") =>
+        val without = sortedQ.filterNot(_._1 == PairGraphOwner)
+        val i = without.indexWhere(_._1 == "q_dedup_components")
+        (without.take(i) :+ owner) ++ without.drop(i)
+      case _ => sortedQ
+    }
+  }
+
+  /** Between-query block hygiene: unpersist every persisted RDD except the
+    * ones backing the live pair-graph memo. A query's staged relations
+    * (flagship decode stage, dedup/ngram shingle stages, resume state) are
+    * dead once its action returns; releasing them keeps a loop of queries
+    * from growing the block manager monotonically and from letting one
+    * query time another's work. The pair graph is the exception: its owner
+    * stages blocks that q_dedup_components (and a re-timed owner run) read
+    * later, and a staged relation's lineage is truncated, so releasing them
+    * would FAIL the consumer rather than slow it. Protection is recomputed
+    * from the live memo on every call: the owner's dead intermediates are
+    * released, and a memo built by the consumer after a cancelled owner run
+    * is still protected. */
+  private[graft] def releaseBetweenQueries(s: SparkSession, dir: String): Unit = {
+    val keep = pairGraphStagedIds(s, dir)
+    s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!keep.contains(id)) rdd.unpersist(blocking = false)
+    }
+  }
 
   /** The LSH ANN relation (query_id, rank, nn_id, cos) over the embeddings
     * table — q_ann_lsh's declared output, and q_ann_recall's ann side. */
@@ -213,7 +258,6 @@ object SparkEntry {
     * Only applied where downstream math is order-independent (md5/min/count/
     * per-row projections), never above an order-sensitive float fold. */
   private def spread(df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.spread").contains("off")) return df // A/B hook
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 >= p) df else df.repartition(p)
   }
@@ -802,11 +846,9 @@ object SparkEntry {
       // not data volume. The single-batch complete-mode agg is less
       // store-bound than the 2-batch session query (r7 A/B: 32→3.7-3.9 s
       // warm, 4→3.4-6.0 s — within noise), but fewer stores never hurts
-      // at this state size, so it shares the graft.stream.shuffle default.
+      // at this state size, so it shares q_streaming_session's 4.
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(
-        "spark.sql.shuffle.partitions",
-        sys.props.getOrElse("graft.stream.shuffle", "4"))
+      s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
       val q =
         try graft.streaming.StreamingFeatures
           .tumblingAgg(s.readStream.schema(schema).parquet(stage.toString), "1 day", "0 seconds")
@@ -916,18 +958,16 @@ object SparkEntry {
       // scoped shuffle-partition override: stateful streaming cost is
       // dominated by per-batch state-store instances (one per shuffle
       // partition per batch), not data volume at this scale — the query
-      // runs 2 micro-batches (r8). r7 warm-JVM A/B (graft.stream.shuffle):
+      // runs 2 micro-batches (r8). r7 warm-JVM A/B (shuffle partitions):
       // quiet window 8→8.3-9.1 s / 4→5.2-5.5 s / 2→5.8-6.5 s (2 under-
       // parallelizes the data pass); a later load-2.3 window showed 4≈8
-      // within noise — 4 is kept as the default (fewer stores never hurts
+      // within noise — 4 is kept (fewer stores never hurts
       // at this state size, ~1.6× in a quiet window). The state-store
       // maintenanceInterval knob is a no-op at this duration (60 s default
       // never fires inside a seconds-long query; A/B'd at 600 s). The
       // stream captures the conf at start(); restored right after.
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(
-        "spark.sql.shuffle.partitions",
-        sys.props.getOrElse("graft.stream.shuffle", "4"))
+      s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
       // gap + 1 µs: session_window merges only while next < last + gap
       // (strict), the batch Sessionize splits only when diff > gap — on
       // integer-microsecond timestamps gap+1µs makes the two identical at

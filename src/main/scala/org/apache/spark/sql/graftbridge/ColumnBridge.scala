@@ -10,8 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * ship native Catalyst expressions (the standard extension mechanism —
   * `Expression` + `doGenCode`) reach the converters from inside the
   * `org.apache.spark.sql` package namespace, as every Spark connector/ext
-  * library does. This is the ONLY file outside `graft.*`, and it contains
-  * no logic.
+  * library does. This package (with [[ListenerBridge]]) is the ONLY code
+  * outside `graft.*`, and it contains no logic.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

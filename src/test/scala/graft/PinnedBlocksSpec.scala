@@ -1,10 +1,11 @@
 package graft
 
-/** Between-query block hygiene, as the bench loop applies it (unpersist
-  * every persisted RDD not backing the memoized pair graph): no query may
-  * keep blocks pinned for another query, except the pair graph its owner
-  * q_minhash_lsh stages for q_dedup_components. A cross-query memo would
-  * both survive the hygiene and make one query time another's work. */
+/** Between-query block hygiene, as the bench loop applies it
+  * (`SparkEntry.releaseBetweenQueries`: unpersist every persisted RDD not
+  * backing the memoized pair graph): no query may keep blocks pinned for
+  * another query, except the pair graph its owner q_minhash_lsh stages for
+  * q_dedup_components. A cross-query memo would both survive the hygiene
+  * and make one query time another's work. */
 class PinnedBlocksSpec extends SparkSpec {
 
   // sf0.001 fixture tables (TESTDATA.md)
@@ -16,10 +17,7 @@ class PinnedBlocksSpec extends SparkSpec {
     val sc = s.sparkContext
     def run(name: String): Unit = {
       SparkEntry.queries(name)(s, dir).count()
-      val keep = SparkEntry.pairGraphStagedIds(s, dir)
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keep.contains(id)) rdd.unpersist(blocking = false)
-      }
+      SparkEntry.releaseBetweenQueries(s, dir)
     }
 
     Seq("q_ann_lsh", "q_ann_recall", "q_ann_topk", "q_image_seconds_ceil", "q_image_seconds_floor")
