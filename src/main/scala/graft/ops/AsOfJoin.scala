@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** Point-in-time / as-of join — the engine's flagship custom operator.
   *
@@ -29,16 +29,9 @@ import org.apache.spark.sql.types._
   * of both sides on (entity, bucket) + a negligible exchange of the bucket
   * timeline. No build row is replicated more than once.
   *
-  * Two physical strategies, same semantics (both verified against DuckDB's
-  * native `ASOF JOIN` oracle):
-  *   - [[asOf]]: union + cumulative `last(..., ignoreNulls)` window — pure
-  *     Catalyst, whole-stage-codegen'd, AQE-eligible. Default.
-  *   - [[asOfMerge]]: explicit `repartitionByRange(entity, bucket)` +
-  *     `sortWithinPartitions(entity, bucket, ts, tag)` + a single-pass
-  *     `mapPartitions` streaming merge — the north rule's explicitly
-  *     materialized sort-merge formulation, and the faster path when the
-  *     downstream consumes (entity, ts)-sorted output (ordering is preserved,
-  *     so a following window/agg needs no new sort).
+  * [[asOf]] is the one implementation (verified against DuckDB's native
+  * `ASOF JOIN` oracle); [[asOfWithin]] is a staleness post-predicate over
+  * it.
   *
   * Zero temporal leakage by construction: a probe can only ever see build
   * rows ordered at-or-before itself (`orderBy(ts, tag)` with build tag < probe
@@ -54,9 +47,9 @@ object AsOfJoin {
   /** Name of the emitted match-source-timestamp column (leakage audit). */
   val SrcTs = "asof_src_ts"
 
-  /** Shared prep: dedupe build per (entity, ts), bucket both sides, compute
-    * carry-in rows, and union build + carry + probe rows into one tagged
-    * relation ready for a per-(entity, bucket) cumulative merge.
+  /** Catalyst-native as-of join: union of build, carry and probe rows +
+    * one cumulative `last(..., ignoreNulls)` window per (entity, bucket) —
+    * whole-stage-codegen'd and AQE-eligible.
     *
     * The deduped build relation feeds two subtrees (the per-bucket carry
     * reduction and the build rows of the union), and the probe side feeds
@@ -65,13 +58,13 @@ object AsOfJoin {
     * columns, which is cheaper than materializing parquet-scan inputs. A
     * caller whose side embeds expensive derivation stages it first
     * ([[Staging]]). */
-  private def prepUnion(
+  def asOf(
       probes: DataFrame,
       build: DataFrame,
       entityCol: String,
       tsCol: String,
       payload: Seq[String],
-      bucketWidth: Long): (DataFrame, StructType, StructType) = {
+      bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val clash = probes.columns.toSet.intersect(payload.toSet)
     require(clash.isEmpty, s"payload columns collide with probe columns: $clash — rename one side")
@@ -125,22 +118,10 @@ object AsOfJoin {
       lit(1).as(TAG),
       lit(null).cast(payType).as(PAY),
       struct(probes.columns.map(col): _*).as(PRB))
-
     val unioned = buildRows.unionByName(carries).unionByName(probeRows)
-    (unioned, probeType, payType.asInstanceOf[StructType])
-  }
 
-  /** Catalyst-native as-of join (union + bucketed cumulative window). */
-  def asOf(
-      probes: DataFrame,
-      build: DataFrame,
-      entityCol: String,
-      tsCol: String,
-      payload: Seq[String],
-      bucketWidth: Long): DataFrame = {
-    val (unioned, _, _) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth)
     val w = Window
-      .partitionBy(col(entityCol), col(B))
+      .partitionBy(e, col(B))
       .orderBy(col(tsCol).asc, col(TAG).asc)
       .rowsBetween(Window.unboundedPreceding, 0)
     // Only build/carry rows feed the running "latest seen" state; probes read it.
@@ -177,72 +158,5 @@ object AsOfJoin {
     (SrcTs +: payload)
       .foldLeft(joined)((d, c) => d.withColumn(c, when(col("__fresh"), col(c))))
       .drop("__fresh")
-  }
-
-  /** Explicit sort-merge as-of join: repartitionByRange on (entity, bucket) +
-    * secondary sort on (ts, tag) + single-pass streaming merge. Output rows
-    * stay (entity, bucket, ts)-sorted within partitions.
-    *
-    * The unioned merge input is staged ([[Staging]]): the RangePartitioner
-    * samples its input to place the split bounds, which would otherwise
-    * execute the whole prep subtree twice. Its blocks stay pinned for the
-    * session (the returned DataFrame's lineage is truncated onto them), so
-    * a long-lived caller releases them with `unpersist` once the result is
-    * consumed. */
-  def asOfMerge(
-      probes: DataFrame,
-      build: DataFrame,
-      entityCol: String,
-      tsCol: String,
-      payload: Seq[String],
-      bucketWidth: Long,
-      numPartitions: Int = 0): DataFrame = {
-    val (unioned, probeType, payType) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth)
-    val spark = probes.sparkSession
-    val parts = if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
-    // Range partitioning keeps every (entity, bucket) group in one partition
-    // (equal keys compare equal → same range) while spreading a hot entity's
-    // buckets across many partitions — the explicit skew treatment. The
-    // staged union is materialized by the sampling pass; the shuffle pass
-    // re-reads its blocks (unstaged, r8 measured the build-dedupe groupBy
-    // and the carry window running twice).
-    val sorted = Staging.stage(
-      unioned.select(col(entityCol), col(B), col(tsCol), col(TAG), col(PAY), col(PRB)))
-      .repartitionByRange(parts, col(entityCol), col(B))
-      .sortWithinPartitions(col(entityCol), col(B), col(tsCol), col(TAG))
-
-    // SrcTs carries the matched build row's ts — same type as the ts column
-    // itself (hardcoding LongType would mis-encode int/timestamp ts inputs).
-    val outSchema = StructType(
-      probeType.fields ++
-        (StructField(SrcTs, sorted.schema(tsCol).dataType, nullable = true) +:
-          payType.fields.map(_.copy(nullable = true))))
-    val payWidth = payType.fields.length
-
-    sorted.mapPartitions { it =>
-      var curEntity: Any = null
-      var curBucket: Any = null
-      var lastSrc: Any = null
-      var lastPay: Row = null
-      it.flatMap { r =>
-        val ent = r.get(0)
-        val bkt = r.get(1)
-        if (ent != curEntity || bkt != curBucket) {
-          curEntity = ent; curBucket = bkt
-          lastSrc = null; lastPay = null
-        }
-        if (r.getInt(3) == 0) { // build or carry row: advance merge state
-          lastSrc = r.get(2)
-          lastPay = r.getStruct(4)
-          Iterator.empty
-        } else { // probe row: emit with current as-of state
-          val p = r.getStruct(5)
-          val pay: Seq[Any] =
-            if (lastPay == null) Seq.fill[Any](payWidth)(null)
-            else (0 until payWidth).map(lastPay.get)
-          Iterator(Row.fromSeq(p.toSeq ++ (lastSrc +: pay)))
-        }
-      }
-    }(Encoders.row(outSchema))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,14 +20,14 @@ import org.apache.spark.sql.functions._
   *     exchange, so Catalyst's ReuseExchange dedupes the scan instead of
   *     re-running the expensive input twice (the documented
   *     no-CSE-across-subtrees pathology).
-  *  2. Within-bucket windows over `(entity, bucket) orderBy (ts, tieBreak)`:
+  *  2. Within-bucket windows over `(entity, bucket) orderBy ts`:
   *     cumulative `last(c, ignoreNulls)` (LOCF), `lag(c)`, `lag(ts)` (null
   *     ⟺ first row of its bucket), and the internal session-gap flags —
   *     purely local to one task's bucket, one WindowExec (shared spec).
   *  3. A per-(entity, bucket) summary — first/last ts, last row's lag
   *     values, last non-null LOCF values, internal-boundary count — via
-  *     `min`/`max`/`sum`/`max_by` ONLY: every ordering key is a scalar (or
-  *     a scalar struct), so this stays a partial-aggregating HashAggregate.
+  *     `min`/`max`/`sum`/`max_by` ONLY: every ordering key is the scalar
+  *     ts, so this stays a partial-aggregating HashAggregate.
   *     (The first formulation used `max(struct(ts, vec))`, which forces a
   *     SortAggregate that drags the payload arrays through two full
   *     struct-comparison sorts — measured 2× on the flagship.) The summary
@@ -37,9 +37,13 @@ import org.apache.spark.sql.functions._
   *     values (feed the first row's lag), whether this bucket STARTS a
   *     session (`first_ts - prev_last_ts > gap`), and the running count of
   *     session boundaries in earlier buckets.
-  *  4. Broadcast-join the carries back on (entity, bucket) and stitch:
+  *  4. Broadcast-join the carries back on (entity, bucket) — ALWAYS
+  *     broadcast: one row per non-empty (entity, bucket) — and stitch:
   *     `session_id = carried_offset + bucket_start_flag + internal_cumsum`,
   *     first-row lag/LOCF coalesce to the carried values.
+  *
+  * Input must be unique per `(entity, ts)`: ts is the only ordering key,
+  * so duplicate timestamps would make lag/LOCF order-dependent.
   *
   * Output is row-for-row IDENTICAL to `Backfill.locf` + `lag().over(entity)`
   * + `Sessionize.sessionize` (spec-asserted), but any one task holds one
@@ -73,16 +77,10 @@ object BucketedWindows {
       bucketWidth: Long,
       gap: Long,
       locfCols: Seq[String],
-      lagCols: Seq[String],
-      tieBreak: Seq[String] = Nil,
-      broadcastCarries: Boolean = true): DataFrame = {
+      lagCols: Seq[String]): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     require(gap >= 0, "gap must be non-negative")
     val e = col(entityCol)
-    val order: Seq[Column] = col(tsCol) +: tieBreak.map(col)
-    // scalar (or scalar-struct) ordering key for max_by — never the payload
-    def orderKey: Column =
-      if (tieBreak.isEmpty) col(tsCol) else struct(order: _*)
 
     // 1. the ONE full-data exchange; upstream runs once in its map side
     val base = df
@@ -90,7 +88,7 @@ object BucketedWindows {
       .repartition(e, col(B))
 
     // 2. within-bucket windows (local to one task's bucket, one WindowExec)
-    val wIn = Window.partitionBy(e, col(B)).orderBy(order: _*)
+    val wIn = Window.partitionBy(e, col(B)).orderBy(col(tsCol))
     val wCum = wIn.rowsBetween(Window.unboundedPreceding, 0)
     val local0 = base
       .withColumn(PREV, lag(col(tsCol), 1).over(wIn))
@@ -109,9 +107,9 @@ object BucketedWindows {
       Seq(
         max(col(tsCol)).as("__last_ts"),
         sum(col(GAP)).as("__n_internal")) ++
-        lagCols.map(c => max_by(col(c), orderKey).as(s"__last_$c")) ++
+        lagCols.map(c => max_by(col(c), col(tsCol)).as(s"__last_$c")) ++
         locfCols.map(c =>
-          max_by(col(c), when(col(c).isNotNull, orderKey)).as(s"__last_nn_$c"))
+          max_by(col(c), when(col(c).isNotNull, col(tsCol))).as(s"__last_nn_$c"))
     val summary = local
       .groupBy(e, col(B))
       .agg(min(col(tsCol)).as("__first_ts"), summaryAggs: _*)
@@ -150,16 +148,13 @@ object BucketedWindows {
           lagCols.map(c => col(s"__carry_lag_$c")) ++
           locfCols.map(c => col(s"__carry_$c")): _*)
 
-    // 4. stitch: join the carries back and finalize every semantics.
-    // `broadcastCarries = true` (default) forces a broadcast — right
-    // whenever carries (one row per non-empty (entity, bucket), lag/LOCF
-    // payloads included) fits executor memory. At extreme scale (10^12
-    // rows at 10^5-10^6 rows/bucket ⇒ 10^6-10^7 carry rows × payload, of
-    // broadcast-limit order — review finding r6) pass false: the shuffle
-    // join re-uses the main side's existing (entity, bucket) partitioning,
-    // so only the tiny carry side moves.
-    val carrySide = if (broadcastCarries) broadcast(carries) else carries
-    val joined = local.join(carrySide, Seq(entityCol, B), "inner")
+    // 4. stitch: broadcast the carries back and finalize every semantics.
+    // The carries hold one row per non-empty (entity, bucket), lag/LOCF
+    // payloads included. Only at extreme scale (10^12 rows at 10^5-10^6
+    // rows per bucket ⇒ 10^6-10^7 carry rows) does that near the broadcast
+    // limit; a shuffle join would then reuse the main side's (entity,
+    // bucket) partitioning and move only the carries.
+    val joined = local.join(broadcast(carries), Seq(entityCol, B), "inner")
     val isFirst = col(PREV).isNull
     val withSession = joined
       .withColumn("is_session_start", when(isFirst, col("__flag")).otherwise(col(GAP)).cast("int"))

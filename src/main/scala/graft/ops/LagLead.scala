@@ -46,11 +46,9 @@ object LagLead {
       shiftDiv: Int): DataFrame = {
     require(2 * shiftDiv <= dim, "2*shiftDiv must be <= vector dim")
     val w = Window.partitionBy(col(entityCol)).orderBy(col(tsCol))
-    val zeros = array_repeat(lit(0.0d), shiftDiv)
     val leadPart = slice(coalesce(lead(col(vecCol), 1).over(w), array_repeat(lit(0.0d), dim)), 1, shiftDiv)
     val lagPart = slice(coalesce(lag(col(vecCol), 1).over(w), array_repeat(lit(0.0d), dim)), shiftDiv + 1, shiftDiv)
     val keepPart = slice(col(vecCol), 2 * shiftDiv + 1, dim - 2 * shiftDiv)
-    val _ = zeros // documented zero-pad realized via coalesce above
     df.withColumn(s"${vecCol}_tsm", concat(leadPart, lagPart, keepPart))
   }
 }

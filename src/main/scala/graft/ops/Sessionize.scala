@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * `ts - lag(ts) > gap` (or at the first row of an entity). Classic
   * two-window formulation: boundary flag via `lag`, session id via running
   * `sum` — both over the SAME window spec, so Catalyst plans one exchange +
-  * one sort for the whole thing.
+  * one sort for the whole thing. The hot-entity-safe form (any task holds
+  * one (entity, time-bucket), not one entity) is
+  * [[BucketedWindows.frameWindows]] with no LOCF or lag columns.
   */
 object Sessionize {
 
@@ -31,22 +33,6 @@ object Sessionize {
         "session_id",
         sum(col("is_session_start")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
   }
-
-  /** Skew-proof sessionize: identical output to [[sessionize]], but any one
-    * task holds one (entity, time-bucket) instead of one whole entity —
-    * the [[BucketedWindows]] carry-in formulation (per-bucket internal
-    * boundaries + a carried (prev_last_ts, running boundary count) over the
-    * tiny per-entity bucket timeline). Use when entity history length is
-    * unbounded (hot phash clusters). */
-  def sessionizeBucketed(
-      df: DataFrame,
-      entityCol: String,
-      tsCol: String,
-      gap: Long,
-      bucketWidth: Long,
-      tieBreak: Seq[String] = Nil): DataFrame =
-    BucketedWindows.frameWindows(
-      df, entityCol, tsCol, bucketWidth, gap, locfCols = Nil, lagCols = Nil, tieBreak)
 
   /** Per-session aggregate: row count, span, value stats. Composes on
     * [[sessionize]]; the groupBy reuses the (entity) hash partitioning. */

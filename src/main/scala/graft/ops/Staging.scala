@@ -14,8 +14,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   * flagship decoded every frame twice). The staged diamonds:
   *  - `Dedup`: the shingle, band and inverted-index relations, and every
   *    round of `components`;
-  *  - `AsOfJoin.asOfMerge`: the range partitioner's input (its sampling
-  *    pass would otherwise run the prep subtree a second time);
   *  - `TextAnalysis.tfidf`: the tf relation;
   *  - `FeaturePipeline.frameFeatures`: the decoded frames.
   *

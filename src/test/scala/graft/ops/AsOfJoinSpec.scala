@@ -43,13 +43,11 @@ class AsOfJoinSpec extends SparkSpec {
     }.toMap
   }
 
-  private def runVariant(merge: Boolean): Unit = {
+  test("asOf (window variant) matches brute force + zero leakage") {
     val build = buildRows.toDF("entity", "ts", "v")
     val probes = probeRows.zipWithIndex.map { case ((e, t), i) => (e, t, i) }
       .toDF("entity", "ts", "probe_id")
-    val out =
-      if (merge) AsOfJoin.asOfMerge(probes, build, "entity", "ts", Seq("v"), bucketWidth = 100L)
-      else AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), bucketWidth = 100L)
+    val out = AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), bucketWidth = 100L)
     val got = out
       .select($"entity", $"ts", $"probe_id", col(AsOfJoin.SrcTs), $"v")
       .collect()
@@ -67,20 +65,10 @@ class AsOfJoinSpec extends SparkSpec {
     assert(leaks == 0L, s"$leaks temporal leaks")
   }
 
-  test("asOf (window variant) matches brute force + zero leakage") {
-    runVariant(merge = false)
-  }
-
-  test("asOfMerge (range-partitioned merge) matches brute force + zero leakage") {
-    runVariant(merge = true)
-  }
-
-  test("asOfMerge emits asof_src_ts with the ts column's own type (int ts)") {
-    // regression: outSchema hardcoded LongType, so an int ts column made the
-    // mapPartitions Row encoder fail at runtime
+  test("asOf emits asof_src_ts with the ts column's own type (int ts)") {
     val build = Seq(("e0", 1, 1.0), ("e0", 5, 5.0)).toDF("entity", "ts", "v")
     val probes = Seq(("e0", 3, 0), ("e0", 9, 1)).toDF("entity", "ts", "probe_id")
-    val out = AsOfJoin.asOfMerge(probes, build, "entity", "ts", Seq("v"), 4L)
+    val out = AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), 4L)
     assert(out.schema(AsOfJoin.SrcTs).dataType == org.apache.spark.sql.types.IntegerType)
     val got = out.orderBy("ts").collect().map(r => (r.getInt(1), r.getInt(3), r.getDouble(4)))
     assert(got.toSeq == Seq((3, 1, 1.0), (9, 5, 5.0)))

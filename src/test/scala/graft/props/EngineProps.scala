@@ -3,8 +3,12 @@ package graft.props
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lag}
+
 import graft.SparkSpec
-import graft.ops.{AsOfJoin, Backfill, IntervalJoin, Sessionize, Windows}
+import graft.ops.{AsOfJoin, Backfill, BucketedWindows, IntervalJoin, Sessionize, Windows}
 
 /** Property-based laws for the core temporal operators: randomized inputs
   * (duplicate timestamps, empty sides, skewed entities, arbitrary bucket
@@ -30,7 +34,7 @@ object EngineProps extends Properties("graft") {
   private val rowsGen: Gen[List[(String, Long, Double)]] =
     Gen.choose(0, 50).flatMap(n => Gen.listOfN(n, rowGen))
 
-  property("asOf/asOfMerge == brute force for any input and bucket width") =
+  property("asOf == brute force for any input and bucket width") =
     Prop.forAll(rowsGen, rowsGen, Gen.oneOf(1L, 3L, 7L, 64L, 1000L)) { (b, p, width) =>
       val build = b.toDF("entity", "ts", "v")
       val probes = p.zipWithIndex
@@ -43,21 +47,39 @@ object EngineProps extends Properties("graft") {
         val c = dedup.filter(x => x._1 == e && x._2 <= ts)
         i -> (if (c.isEmpty) None else Some(c.maxBy(x => (x._2, x._3))).map(x => (x._2, x._3)))
       }.toMap
-      def got(merge: Boolean) = {
-        val out =
-          if (merge) AsOfJoin.asOfMerge(probes, build, "entity", "ts", Seq("v"), width)
-          else AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), width)
-        out.collect().map { r =>
+      val got = AsOfJoin
+        .asOf(probes, build, "entity", "ts", Seq("v"), width)
+        .collect()
+        .map { r =>
           val i = r.getInt(r.fieldIndex("pid"))
           val src = r.fieldIndex(AsOfJoin.SrcTs)
           i -> (if (r.isNullAt(src)) None
                 else Some((r.getLong(src), r.getDouble(r.fieldIndex("v")))))
-        }.toMap
-      }
-      val w = got(merge = false)
-      val m = got(merge = true)
-      (w == want) :| s"window variant: $w != $want" &&
-      (m == want) :| s"merge variant: $m != $want"
+        }
+        .toMap
+      (got == want) :| s"asOf($width): $got != $want"
+    }
+
+  property("frameWindows == plain locf + lag + sessionize for any bucket width and gap") =
+    Prop.forAll(rowsGen, Gen.oneOf(1L, 3L, 7L, 64L), Gen.oneOf(0L, 5L, 40L)) { (rows, width, gap) =>
+      // unique (entity, ts) — the operator's input contract; `s` is a
+      // sparse copy of v (every third ts), so LOCF carries cross buckets
+      val uniq = rows.groupBy(r => (r._1, r._2)).map { case ((e, t), rs) =>
+        val v = rs.map(_._3).max
+        (e, t, v, if (Math.floorMod(t, 3L) == 0L) Some(v) else None)
+      }.toList
+      val df = uniq.toDF("entity", "ts", "v", "s")
+      val cols = Seq("entity", "ts", "s_filled", "v_lag1", "is_session_start", "session_id")
+      def out(d: DataFrame): Seq[Seq[Any]] =
+        d.select(cols.map(col): _*).orderBy("entity", "ts").collect().map(_.toSeq).toSeq
+      val plain = Sessionize
+        .sessionize(Backfill.locf(df, "entity", "ts", Seq("s")), "entity", "ts", gap)
+        .withColumn("v_lag1", lag(col("v"), 1).over(Window.partitionBy("entity").orderBy("ts")))
+      val want = out(plain)
+      val got = out(BucketedWindows.frameWindows(
+        df, "entity", "ts", width, gap, locfCols = Seq("s"), lagCols = Seq("v")))
+      (want.size == uniq.size) :| s"plain reference lost rows: ${want.size} != ${uniq.size}" &&
+      (got == want) :| s"frameWindows($width, $gap): $got != $want"
     }
 
   property("locf: fill equals last non-null at-or-before, in any bucket width") =
