@@ -25,7 +25,7 @@ object SparkEntry {
     * code spreads a hot entity over (span/width) tasks. */
   private val AsOfBucketUs = 2L * DayUs
   /** Shuffle partitions of the two streaming queries (their state-store
-    * count per micro-batch; see q_streaming_session). */
+    * count per micro-batch; see runStream). */
   private val StreamShufflePartitions = 4
 
   /** Driver-comparable form of a double-array column: each element rounded
@@ -235,6 +235,41 @@ object SparkEntry {
       walk.iterator().asScala.toSeq.reverse
         .foreach(f => java.nio.file.Files.deleteIfExists(f))
     } finally walk.close()
+  }
+
+  /** Runs `build` over the events table as ONE complete-mode micro-batch
+    * and returns the memory sink `name`. The file source reads a
+    * directory, so `events.parquet` is copied into a temp stage directory;
+    * the stage and checkpoint directories are deleted and the state store
+    * stopped (see stopStreaming) however the query ends. */
+  private def runStream(s: SparkSession, dir: String, name: String)(
+      build: DataFrame => DataFrame): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val stage = Files.createTempDirectory("graft_stream")
+    val ckpt = Files.createTempDirectory("graft_stream_ckpt")
+    try {
+      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
+      val schema = s.read.parquet(s"$dir/events.parquet").schema
+      // scoped shuffle-partition override: stateful streaming cost is
+      // dominated by per-batch state-store instances (one per shuffle
+      // partition), not data volume at this scale (r7 warm-JVM A/B on the
+      // session query: 8→8.3-9.1 s, 4→5.2-5.5 s, 2→5.8-6.5 s). The stream
+      // captures the conf at start(); restored right after.
+      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+      val q =
+        try build(s.readStream.schema(schema).parquet(stage.toString))
+          .writeStream
+          .outputMode("complete")
+          .format("memory")
+          .queryName(name)
+          .option("checkpointLocation", ckpt.toString)
+          .start()
+        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      try q.processAllAvailable()
+      finally stopStreaming(q)
+    } finally Seq(ckpt, stage).foreach(deleteTree)
+    s.table(name)
   }
 
   private def ev(s: SparkSession, dir: String): DataFrame =
@@ -812,180 +847,28 @@ object SparkEntry {
       graft.text.TextAnalysis.fingerprint(s.read.parquet(s"$dir/documents.parquet"), "text")
         .select(col("doc_id"), col("fingerprint"))),
     // ---- streaming: tumbling event-time agg == batch semantics (oracle) ----
-    "q_streaming_tumbling" -> ((s, dir) => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_stream_q")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        stage.resolve("events.parquet"))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      // same scoped state-store override as q_streaming_session: stateful
-      // cost here is per-batch store instances (one per shuffle partition),
-      // not data volume. The single-batch complete-mode agg is less
-      // store-bound than the 2-batch session query (r7 A/B: 32→3.7-3.9 s
-      // warm, 4→3.4-6.0 s — within noise), but fewer stores never hurts
-      // at this state size, so it shares q_streaming_session's 4.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
-      val q =
-        try graft.streaming.StreamingFeatures
-          .tumblingAgg(s.readStream.schema(schema).parquet(stage.toString), "1 day", "0 seconds")
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName("q_streaming_tumbling_sink")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        q.processAllAvailable()
-      } finally {
-        // deterministic shutdown (see stopStreaming), then drop the
-        // checkpoint/stage dirs (round-1 bench leaked both).
-        stopStreaming(q)
-        Seq(ckpt, stage).foreach(deleteTree)
-      }
-      s.table("q_streaming_tumbling_sink")
+    "q_streaming_tumbling" -> ((s, dir) =>
+      runStream(s, dir, "q_streaming_tumbling_sink")(
+        graft.streaming.StreamingFeatures.tumblingAgg(_, "1 day", "0 seconds"))
         .select(col("user_id"), col("win_start_us"), col("n"),
-          round(col("avg_v"), 4).as("avg_v"))
-    }),
+          round(col("avg_v"), 4).as("avg_v"))),
     // ---- §2.8 + W9: STREAMING gap sessionization == batch sessionize,
-    //      against the same oracle family as q_session_stats. Append mode
-    //      with a 0s watermark only emits a session once the watermark
-    //      passes its end, and the watermark only advances between batches,
-    //      so the stage dir feeds TWO batches (maxFilesPerTrigger=2, r8):
-    //      batch 1 = the real events plus far-future sentinel #1 (its
-    //      session is disjoint from every real one, and it advances the
-    //      end-of-batch watermark past every real session end), batch 2 =
-    //      sentinel #2, which triggers the eviction pass that emits them.
-    //      The sentinel sessions themselves end beyond the final watermark
-    //      and are never emitted (defensive filter anyway) ----
-    "q_streaming_session" -> ((s, dir) => {
-      import java.nio.file.{Files, Paths}
-      val stage = Files.createTempDirectory("graft_stream_sess")
-      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("0_events.parquet"))
-      val events = s.read.parquet(s"$dir/events.parquet")
-      val schema = events.schema
-      // ONE collected row seeds both sentinels (r8: the previous form ran a
-      // full-scan max(ts) aggregation plus a limit(1) scan per sentinel —
-      // three extra jobs). Sentinel i = that row shifted +60i days; with the
-      // 30-day data span every real event is < row1.ts + 60d, so the
-      // sentinel timestamps both advance the watermark past every real
-      // session AND bound the output filter below (no max(ts) job needed).
-      val row1 = events.limit(1).collect()(0)
-      val tsIdx = schema.fieldIndex("ts")
-      // type-robust +days shift (r8 review): ts is TIMESTAMP_NTZ today
-      // (LocalDateTime externally), but a fixture read back as a plain
-      // TIMESTAMP (Instant/java.sql.Timestamp) must shift, not crash
-      def shiftDays(v: Any, days: Long): Any = v match {
-        case t: java.time.LocalDateTime => t.plusDays(days)
-        case t: java.time.Instant => t.plus(java.time.Duration.ofDays(days))
-        case t: java.sql.Timestamp =>
-          java.sql.Timestamp.from(t.toInstant.plus(java.time.Duration.ofDays(days)))
-        case other => throw new IllegalStateException(s"unexpected ts type: $other")
-      }
-      def toUs(v: Any): Long = v match {
-        case t: java.time.LocalDateTime =>
-          t.toInstant(java.time.ZoneOffset.UTC).getEpochSecond * 1000000L + t.getNano / 1000L
-        case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-        case t: java.sql.Timestamp =>
-          t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-        case other => throw new IllegalStateException(s"unexpected ts type: $other")
-      }
-      val sentinel1Us = toUs(shiftDays(row1.get(tsIdx), 60))
-      // ONE write job for both sentinel files (r8): parallelize with two
-      // ordered slices — sentinel i lands deterministically in
-      // part-0000(i−1) (parallelize preserves element order across slices;
-      // no shuffle, no range-sampling job), so the lexicographic part
-      // listing maps 1:1 onto sentinel order — half the sentinel write jobs.
-      val sentinels = Seq(1, 2).map { i =>
-        org.apache.spark.sql.Row.fromSeq(
-          row1.toSeq.updated(tsIdx, shiftDays(row1.get(tsIdx), 60L * i)))
-      }
-      val tmp = Files.createTempDirectory("graft_sess_sent")
-      s.createDataFrame(s.sparkContext.parallelize(sentinels, 2), schema)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      try {
-        val parts = listing.iterator()
-        val parquetParts = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        while (parts.hasNext) {
-          val f = parts.next()
-          if (f.getFileName.toString.endsWith(".parquet")) parquetParts += f
-        }
-        val sorted = parquetParts.sortBy(_.getFileName.toString)
-        require(sorted.size == 2, s"expected 2 sentinel part files, got ${sorted.size}")
-        sorted.zipWithIndex.foreach { case (f, i) =>
-          Files.move(f, stage.resolve(s"${i + 1}_sentinel.parquet"))
-        }
-      } finally listing.close()
-      deleteTree(tmp)
-      // FileStreamSource orders batches by file MODIFICATION TIME, not name:
-      // a modtime tie (coarse fs granularity, fast copy/move) could schedule
-      // a sentinel batch first, advancing the 0s-delay watermark 60 days and
-      // dropping every real event as late. Strictly increasing explicit
-      // modtimes make the 2-batch protocol deterministic (batch 1 = the two
-      // oldest files, batch 2 = the third).
-      Seq("0_events.parquet", "1_sentinel.parquet", "2_sentinel.parquet").zipWithIndex
-        .foreach { case (f, i) =>
-          Files.setLastModifiedTime(
-            stage.resolve(f),
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-        }
-      val ckpt = Files.createTempDirectory("graft_stream_sess_ckpt")
-      // scoped shuffle-partition override: stateful streaming cost is
-      // dominated by per-batch state-store instances (one per shuffle
-      // partition per batch), not data volume at this scale — the query
-      // runs 2 micro-batches (r8). r7 warm-JVM A/B (shuffle partitions):
-      // quiet window 8→8.3-9.1 s / 4→5.2-5.5 s / 2→5.8-6.5 s (2 under-
-      // parallelizes the data pass); a later load-2.3 window showed 4≈8
-      // within noise — 4 is kept (fewer stores never hurts
-      // at this state size, ~1.6× in a quiet window). The state-store
-      // maintenanceInterval knob is a no-op at this duration (60 s default
-      // never fires inside a seconds-long query; A/B'd at 600 s). The
-      // stream captures the conf at start(); restored right after.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
+    //      against the same oracle family as q_session_stats. Complete
+    //      mode emits every session of the one micro-batch, whatever the
+    //      span of the data ----
+    "q_streaming_session" -> ((s, dir) =>
       // gap + 1 µs: session_window merges only while next < last + gap
       // (strict), the batch Sessionize splits only when diff > gap — on
       // integer-microsecond timestamps gap+1µs makes the two identical at
       // the exact-gap boundary (diff == gap stays merged on both sides)
-      // maxFilesPerTrigger=2 (r8: was 1, i.e. 3 micro-batches): batch 1 =
-      // [real events, sentinel 1] — the sentinel's far-future session is
-      // disjoint from every real session (60 days beyond a 30-day span),
-      // so the session merge is unchanged, while the end-of-batch watermark
-      // advances past every real session end in ONE batch; batch 2 =
-      // [sentinel 2] runs the eviction pass that emits them. Two stateful
-      // micro-batches instead of three, identical emitted sessions.
-      val q =
-        try graft.streaming.StreamingFeatures
-          .sessionAgg(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(stage.toString),
-            s"${SessionGapUs + 1} microseconds",
-            "0 seconds")
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("q_streaming_session_sink")
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        q.processAllAvailable()
-      } finally {
-        stopStreaming(q)
-        Seq(ckpt, stage).foreach(deleteTree)
-      }
-      s.table("q_streaming_session_sink")
-        // sentinels (never emitted) guard: every real session starts before
-        // sentinel 1 (30-day span vs +60d), sentinel sessions start at it
-        .where(col("session_start_us") < sentinel1Us)
+      runStream(s, dir, "q_streaming_session_sink")(
+        graft.streaming.StreamingFeatures
+          .sessionAgg(_, s"${SessionGapUs + 1} microseconds", "0 seconds"))
         .select(
           col("user_id"),
           col("session_start_us"),
           col("n_rows"),
-          round(col("avg_value"), 4).as("avg_value"))
-    }),
+          round(col("avg_value"), 4).as("avg_value"))),
     // ---- S4/A5: per-window ordered gather (collect_list sorted by ts) —
     //      the reference's get_clip + vstack as one aggregate ----
     "q_window_gather" -> ((s, dir) => {

@@ -137,9 +137,8 @@ object Similarity {
     * candidate volume but near-zero selectivity, the multi-table OR means
     * its members usually remain reachable through their other tables, and
     * at corpus scale one such bucket is the difference between a bounded
-    * join and a quadratic one. The bucket histogram (≤ tables × 2^bits
-    * rows) is aggregated once, dropped buckets are logged, and the
-    * exclusion is a broadcast anti-join — no extra shuffle of the corpus. */
+    * join and a quadratic one. The exclusion is a broadcast anti-join
+    * against the bucket histogram (≤ tables × 2^bits rows). */
   def annLsh(
       corpus: DataFrame,
       queries: DataFrame,
@@ -157,44 +156,15 @@ object Similarity {
         col(vecCol).cast("array<double>").as("v"),
         posexplode(lshBuckets(col(vecCol).cast("array<double>"), tables, bitsPerTable))
           .as(Seq("tbl", "sig")))
+    // lazy like ngramJaccard's df guard: the (table, bucket) histogram is
+    // at most tables × 2^bits rows after the aggregate, so the hot set is
+    // broadcast into the anti-join, and building the DataFrame runs no job
     val c =
       if (maxBucketSize <= 0) c0
       else {
-        // The guard makes this path EAGER by design (it is opt-in): the
-        // bucket histogram is aggregated ONCE and — being at most
-        // tables × 2^bits rows AFTER the aggregate — collected to the
-        // driver, so the dropped-bucket log is a length check and the
-        // anti-join probes a broadcast LITERAL relation built from the
-        // collected rows. (The first cut ran the corpus-wide histogram
-        // twice — review finding r6; the second staged it via
-        // localCheckpoint, whose blocks leaked in the block manager for
-        // the session lifetime — round-6 advice #3. The collect is
-        // bounded by the bucket space, never the corpus.)
-        // (tbl, sig) are both int: posexplode's index and the signature
-        // array's elements — the literal relation must match exactly so
-        // the anti-join keys need no cast
-        val hotSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "tbl", org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField(
-            "sig", org.apache.spark.sql.types.IntegerType)))
-        val hotRows = c0
-          .groupBy(col("tbl"), col("sig"))
-          .agg(count(lit(1)).as("__n"))
-          .where(col("__n") > maxBucketSize)
-          .select(col("tbl").cast("int"), col("sig").cast("int"))
-          .collect()
-        if (hotRows.isEmpty) c0
-        else {
-          org.slf4j.LoggerFactory
-            .getLogger(getClass)
-            .warn(
-              s"annLsh hot-bucket guard: dropping ${hotRows.length}/(${tables}x2^$bitsPerTable) " +
-                s"buckets holding > $maxBucketSize corpus rows each")
-          val hot = corpus.sparkSession.createDataFrame(
-            java.util.Arrays.asList(hotRows: _*), hotSchema)
-          c0.join(broadcast(hot), Seq("tbl", "sig"), "left_anti")
-        }
+        val hot = c0.groupBy(col("tbl"), col("sig")).agg(count(lit(1)).as("__n"))
+          .where(col("__n") > maxBucketSize).select(col("tbl"), col("sig"))
+        c0.join(broadcast(hot), Seq("tbl", "sig"), "left_anti")
       }
     val q = queries
       .select(

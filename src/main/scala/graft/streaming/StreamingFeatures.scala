@@ -61,21 +61,28 @@ object StreamingFeatures {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: Long, rows: Iterator[LocfEvent], state: GroupState[LocfCarry]) => {
-          val sorted = rows.toVector.sortBy(_.ts_us)
-          var carry = state.getOption
-          val out = sorted.map { e =>
-            e.v match {
-              case Some(value) =>
-                // guarded: never regress the carry to an older observation
-                if (carry.forall(_.lastTs <= e.ts_us)) carry = Some(LocfCarry(e.ts_us, value))
-                LocfOut(key, e.ts_us, e.v, e.tag)
-              case None =>
-                LocfOut(key, e.ts_us, carry.map(_.lastV), e.tag)
-            }
-          }
+          val (carry, out) = locfFold(key, state.getOption, rows.toVector)
           carry.foreach(state.update)
           out.iterator
         })
+  }
+
+  /** The LOCF step shared by [[statefulLocf]] and [[statefulLocfBuffered]]:
+    * sorts `rows` by ts, fills each null from the carry and advances the
+    * carry on each value. Guarded: a value older than the carry never
+    * regresses it. Returns the final carry and one output per row. */
+  private def locfFold(key: Long, carry0: Option[LocfCarry], rows: Vector[LocfEvent])
+      : (Option[LocfCarry], Vector[LocfOut]) = {
+    var carry = carry0
+    val out = rows.sortBy(_.ts_us).map { e =>
+      e.v match {
+        case Some(value) =>
+          if (carry.forall(_.lastTs <= e.ts_us)) carry = Some(LocfCarry(e.ts_us, value))
+          LocfOut(key, e.ts_us, e.v, e.tag)
+        case None => LocfOut(key, e.ts_us, carry.map(_.lastV), e.tag)
+      }
+    }
+    (carry, out)
   }
 
   /** Tagged union row for [[statefulAsOf]]: build rows carry the payload
@@ -117,28 +124,31 @@ object StreamingFeatures {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: Long, rows: Iterator[AsOfEvent], state: GroupState[AsOfCarry]) => {
-          val sorted = rows.toVector.sortBy(e =>
-            (e.ts_us, if (e.isBuild) 0 else 1, e.v.getOrElse(Double.NegativeInfinity)))
-          var carry = state.getOption
-          val out = Vector.newBuilder[AsOfOut]
-          sorted.foreach { e =>
-            if (e.isBuild) {
-              if (carryAdvances(carry, e)) carry = Some(AsOfCarry(e.ts_us, e.v))
-            } else out += AsOfOut(key, e.ts_us, carry.map(_.srcTs), carry.flatMap(_.v), e.tag)
-          }
+          val (carry, out) = asOfFold(key, state.getOption, rows.toVector)
           carry.foreach(state.update)
-          out.result().iterator
+          out.iterator
         })
   }
 
-  /** true iff build row `e` is (ts, payload)-lexicographically ≥ the carry
-    * — the batch operator's latest-ts / max-payload resolution order. */
-  private def carryAdvances(carry: Option[AsOfCarry], e: AsOfEvent): Boolean =
-    carry.forall { c =>
-      e.ts_us > c.srcTs ||
-        (e.ts_us == c.srcTs &&
-          e.v.getOrElse(Double.NegativeInfinity) >= c.v.getOrElse(Double.NegativeInfinity))
+  /** The as-of step shared by [[statefulAsOf]] and [[statefulAsOfBuffered]]:
+    * sorts `rows` by (ts, build-first, payload), advances the carry on each
+    * build that is (ts, payload)-lexicographically ≥ it — the batch
+    * operator's latest-ts / max-payload resolution order, so an older build
+    * never regresses it — and emits each probe with the carry. Returns the
+    * final carry and the probe outputs. */
+  private def asOfFold(key: Long, carry0: Option[AsOfCarry], rows: Vector[AsOfEvent])
+      : (Option[AsOfCarry], Vector[AsOfOut]) = {
+    val neg = Double.NegativeInfinity
+    var carry = carry0
+    val out = Vector.newBuilder[AsOfOut]
+    rows.sortBy(e => (e.ts_us, if (e.isBuild) 0 else 1, e.v.getOrElse(neg))).foreach { e =>
+      if (!e.isBuild) out += AsOfOut(key, e.ts_us, carry.map(_.srcTs), carry.flatMap(_.v), e.tag)
+      else if (carry.forall(c =>
+          e.ts_us > c.srcTs || (e.ts_us == c.srcTs && e.v.getOrElse(neg) >= c.v.getOrElse(neg))))
+        carry = Some(AsOfCarry(e.ts_us, e.v))
     }
+    (carry, out.result())
+  }
 
   /** Buffered state for the watermark-delayed ops: the carry plus rows not
     * yet final (event time still above the last flushed watermark). The
@@ -179,21 +189,13 @@ object StreamingFeatures {
           // split arrivals: too-late rows (≤ already-flushed watermark) are
           // dropped as probes but may still advance the carry as builds
           val (tooLate, fresh) = rows.toVector.partition(_.ts_us <= st.flushedUs)
-          var carry = st.carry
-          tooLate.filter(_.isBuild).sortBy(e => (e.ts_us, e.v.getOrElse(Double.NegativeInfinity)))
-            .foreach(e => if (carryAdvances(carry, e)) carry = Some(AsOfCarry(e.ts_us, e.v)))
+          val (lateCarry, _) = asOfFold(key, st.carry, tooLate.filter(_.isBuild))
           val (ripe, hold) = (st.pending ++ fresh).partition(_.ts_us <= wmUs)
-          val out = Vector.newBuilder[AsOfOut]
-          ripe.sortBy(e => (e.ts_us, if (e.isBuild) 0 else 1, e.v.getOrElse(Double.NegativeInfinity)))
-            .foreach { e =>
-              if (e.isBuild) {
-                if (carryAdvances(carry, e)) carry = Some(AsOfCarry(e.ts_us, e.v))
-              } else out += AsOfOut(key, e.ts_us, carry.map(_.srcTs), carry.flatMap(_.v), e.tag)
-            }
+          val (carry, out) = asOfFold(key, lateCarry, ripe)
           state.update(AsOfBufState(carry, hold, math.max(st.flushedUs, wmUs)))
           // wake this key as soon as the watermark passes its oldest held row
           if (hold.nonEmpty) state.setTimeoutTimestamp(hold.map(_.ts_us).min / 1000L + 1L)
-          out.result().iterator
+          out.iterator
         })
   }
 
@@ -211,18 +213,9 @@ object StreamingFeatures {
           val st = state.getOption.getOrElse(LocfBufState(None, Vector.empty, Long.MinValue))
           val wmUs = state.getCurrentWatermarkMs() * 1000L
           val (tooLate, fresh) = rows.toVector.partition(_.ts_us <= st.flushedUs)
-          var carry = st.carry
-          tooLate.collect { case e if e.v.isDefined => e }.sortBy(_.ts_us)
-            .foreach(e => if (carry.forall(_.lastTs <= e.ts_us)) carry = Some(LocfCarry(e.ts_us, e.v.get)))
+          val (lateCarry, _) = locfFold(key, st.carry, tooLate.filter(_.v.isDefined))
           val (ripe, hold) = (st.pending ++ fresh).partition(_.ts_us <= wmUs)
-          val out = ripe.sortBy(_.ts_us).map { e =>
-            e.v match {
-              case Some(value) =>
-                if (carry.forall(_.lastTs <= e.ts_us)) carry = Some(LocfCarry(e.ts_us, value))
-                LocfOut(key, e.ts_us, e.v, e.tag)
-              case None => LocfOut(key, e.ts_us, carry.map(_.lastV), e.tag)
-            }
-          }
+          val (carry, out) = locfFold(key, lateCarry, ripe)
           state.update(LocfBufState(carry, hold, math.max(st.flushedUs, wmUs)))
           if (hold.nonEmpty) state.setTimeoutTimestamp(hold.map(_.ts_us).min / 1000L + 1L)
           out.iterator

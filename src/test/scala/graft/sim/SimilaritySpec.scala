@@ -101,9 +101,27 @@ class SimilaritySpec extends SparkSpec {
       (id, vec)
     }.toDF("vec_id", "embedding")
     val poisoned = corpus.unionByName(poison)
-    val capped = Similarity.annLsh(
-      poisoned, queries, "vec_id", "embedding", "vec_id", "embedding", K,
-      maxBucketSize = 20L)
+    // building the guarded DataFrame is lazy: no Spark job before an action
+    // (jobs are attributed by a thread-local tag, so nothing else counts)
+    val sc = spark.sparkContext
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec") == "annLshBuild"))
+          buildJobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec", "annLshBuild")
+    val capped =
+      try Similarity.annLsh(
+        poisoned, queries, "vec_id", "embedding", "vec_id", "embedding", K,
+        maxBucketSize = 20L)
+      finally {
+        sc.setLocalProperty("graft.spec", null)
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(buildJobs.get == 0, s"building the guarded annLsh ran ${buildJobs.get} Spark job(s)")
     val brute = pairs(
       Similarity.bruteTopK(corpus, queries, "vec_id", "embedding", "vec_id", "embedding", K))
     val got = pairs(capped)

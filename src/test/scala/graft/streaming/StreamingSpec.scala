@@ -114,6 +114,66 @@ class StreamingSpec extends SparkSpec {
     assert(bad.count() == 0L)
   }
 
+  test("append-mode session_window emits a batch's sessions only once a later batch moves the watermark") {
+    import spark.implicits._
+    import StreamingSpec.SessionEvent
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SessionEvent]
+    val q = StreamingFeatures.sessionAgg(mem.toDF(), "10 minutes", "0 seconds")
+      .writeStream.outputMode("append").format("memory").queryName("sess_evict").start()
+    val minUs = 60L * 1000000L
+    def at(min: Long) = new java.sql.Timestamp(min * 60000L)
+    // batch 1: two users' sessions, both still open at the batch's own
+    // watermark (its max event time, 8 min): ends 15 and 18 min
+    mem.addData(
+      SessionEvent(1L, at(0), 1.0), SessionEvent(1L, at(5), 3.0),
+      SessionEvent(2L, at(2), 2.0), SessionEvent(2L, at(8), 6.0))
+    q.processAllAvailable()
+    assert(spark.table("sess_evict").count() == 0L, "a session was emitted before the watermark passed it")
+    // batch 2: one event a day later moves the watermark past both
+    mem.addData(SessionEvent(1L, at(24 * 60), 9.0))
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.table("sess_evict")
+      .select(col("user_id"), col("session_start_us"), col("n_rows"), col("avg_value"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(got == Set((1L, 0L, 2L, 2.0), (2L, 2L * minUs, 2L, 4.0)),
+      "batch 1's sessions (and only they) must be evicted after batch 2")
+  }
+
+  test("q_streaming_session equals batch sessionization on events spanning more than 60 days") {
+    import java.nio.file.{Files, StandardCopyOption}
+    // a single-file events.parquet holding sf0.001 plus a copy shifted
+    // +90 days (event ids offset), i.e. a fixture about 120 days wide
+    val base = spark.read.parquet(eventsPath)
+    val idOffset = base.agg(max(col("event_id"))).first().getLong(0) + 1L
+    val wide = base.unionByName(
+      base.withColumn("ts", col("ts") + expr("INTERVAL 90 DAYS"))
+        .withColumn("event_id", col("event_id") + idOffset))
+    val dir = Files.createTempDirectory("graft_wide_events")
+    try {
+      val out = dir.resolve("out")
+      wide.coalesce(1).write.parquet(out.toString)
+      val part = Files.list(out).filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+      Files.move(part, dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+
+      val got = graft.SparkEntry.queries("q_streaming_session")(spark, dir.toString)
+      val ev = spark.read.parquet(s"$dir/events.parquet")
+        .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
+      val want = graft.ops.Sessionize
+        .sessionize(ev, "user_id", "ts_us", 6L * 3600 * 1000000L, Seq("event_id"))
+        .groupBy(col("user_id"), col("session_id"))
+        .agg(min(col("ts_us")).as("session_start_us"), count(lit(1)).as("n_rows"),
+          round(avg(col("value")), 4).as("avg_value"))
+        .select("user_id", "session_start_us", "n_rows", "avg_value")
+      val lateStart = ev.agg(min(col("ts_us"))).first().getLong(0) + 60L * 24 * 3600 * 1000000L
+      assert(want.where(col("session_start_us") >= lateStart).count() > 0L, "fixture is not wide")
+      assert(got.count() == want.count())
+      assert(got.exceptAll(want).count() == 0L, "streaming sessions missing from batch")
+      assert(want.exceptAll(got).count() == 0L, "batch sessions missing from streaming")
+    } finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
+
   test("stateful as-of carries the build across micro-batches and equals batch asOf") {
     import spark.implicits._
     import StreamingFeatures.{AsOfEvent, AsOfOut}
@@ -258,4 +318,8 @@ class StreamingSpec extends SparkSpec {
       .map(o => (o.ts_us, o.tag) -> o.v_filled).toMap
     assert(got((100000000L, 1L)).contains(3.0), "late value must backfill the buffered null")
   }
+}
+
+object StreamingSpec {
+  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
 }
