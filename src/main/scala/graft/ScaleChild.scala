@@ -70,10 +70,10 @@ object ScaleChild {
         best = math.max(best, n / dt)
         println(f"SCALE cpus=$cpus units=$u rows=$rows elapsed=$work%.2f rps=${rows / work}%.1f best=$best%.1f")
         System.out.flush()
-        // each unit's frameFeatures lazily localCheckpoints the decoded
-        // relation (the diamond stage); the blocks are consumed within the
+        // each unit's frameFeatures stages two relations (the decoded
+        // frames and its own output); the blocks are consumed within the
         // unit and never read again — release them so a long child's block
-        // manager does not grow by ~10 MB per unit (review finding r6)
+        // manager does not grow per unit (review finding r6)
         Bench.releasePersistedRdds(spark)
         u += 1
       }

@@ -109,12 +109,51 @@ object ImageCodec {
     var chw: Array[Float] = new Array[Float](0)
     var resized: Array[Float] = new Array[Float](0)
     var cropped: Array[Float] = new Array[Float](0)
+    // the last (in, out) spans of rows (0) and columns (1): every frame of
+    // a table has one size
+    private val axisSpans = new Array[Spans](2)
     def ints(n: Int): Array[Int] = { if (px.length < n) px = new Array[Int](n); px }
     def chwBuf(n: Int): Array[Float] = { if (chw.length < n) chw = new Array[Float](n); chw }
     def resizedBuf(n: Int): Array[Float] = { if (resized.length < n) resized = new Array[Float](n); resized }
     def croppedBuf(n: Int): Array[Float] = { if (cropped.length < n) cropped = new Array[Float](n); cropped }
+    def spans(axis: Int, n: Int, outN: Int): Spans = {
+      val sp = axisSpans(axis)
+      if (sp != null && sp.n == n && sp.outN == outN) sp
+      else { axisSpans(axis) = new Spans(n, outN); axisSpans(axis) }
+    }
   }
   private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  /** `(b & 0xff) / 255f` for every byte value: the decoded [0,1] pixel. */
+  private val UnitByte: Array[Float] = Array.tabulate(256)(_ / 255.0f)
+
+  /** One axis of an area resize from `n` source to `outN` destination
+    * pixels: destination `o` covers source indices `first(o)` until
+    * `first(o) + len(o)` with weights `wt(at(o))`, `wt(at(o) + 1)`, … —
+    * the fraction of each source pixel inside `[o·n/outN, (o+1)·n/outN)`.
+    * Computed once per size pair, so the per-pixel loop only reads them. */
+  private final class Spans(val n: Int, val outN: Int) {
+    val first = new Array[Int](outN)
+    val len = new Array[Int](outN)
+    val at = new Array[Int](outN)
+    val wt: Array[Double] = {
+      val s = n.toDouble / outN
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var o = 0
+      while (o < outN) {
+        val lo = o * s
+        val hi = (o + 1) * s
+        val end = math.min(math.ceil(hi).toInt, n)
+        first(o) = math.floor(lo).toInt
+        len(o) = end - first(o)
+        at(o) = buf.length
+        var i = first(o)
+        while (i < end) { buf += math.min(hi, i + 1.0) - math.max(lo, i.toDouble); i += 1 }
+        o += 1
+      }
+      buf.toArray
+    }
+  }
 
   private def toChwInto(img: BufferedImage, out: Array[Float]): Unit = {
     val w = img.getWidth
@@ -125,9 +164,9 @@ object ImageCodec {
     var i = 0
     while (i < hw) {
       val rgb = px(i)
-      out(i) = ((rgb >> 16) & 0xff) / 255.0f
-      out(hw + i) = ((rgb >> 8) & 0xff) / 255.0f
-      out(2 * hw + i) = (rgb & 0xff) / 255.0f
+      out(i) = UnitByte((rgb >> 16) & 0xff)
+      out(hw + i) = UnitByte((rgb >> 8) & 0xff)
+      out(2 * hw + i) = UnitByte(rgb & 0xff)
       i += 1
     }
   }
@@ -151,33 +190,37 @@ object ImageCodec {
 
   private[codec] def resizeAreaInto(
       chw: Array[Float], h: Int, w: Int, outH: Int, outW: Int, out: Array[Float]): Unit = {
-    val sy = h.toDouble / outH
-    val sx = w.toDouble / outW
+    val sc = scratch.get()
+    val ys = sc.spans(0, h, outH)
+    val xs = sc.spans(1, w, outW)
     var c = 0
     while (c < 3) {
       val off = c * h * w
       val ooff = c * outH * outW
       var oy = 0
       while (oy < outH) {
-        val y0 = oy * sy
-        val y1 = (oy + 1) * sy
+        val y0 = ys.first(oy)
+        val ny = ys.len(oy)
+        val yat = ys.at(oy)
         var ox = 0
         while (ox < outW) {
-          val x0 = ox * sx
-          val x1 = (ox + 1) * sx
+          val x0 = xs.first(ox)
+          val nx = xs.len(ox)
+          val xat = xs.at(ox)
           var acc = 0.0
           var area = 0.0
-          var yy = math.floor(y0).toInt
-          while (yy < math.ceil(y1).toInt && yy < h) {
-            val wy = math.min(y1, yy + 1.0) - math.max(y0, yy.toDouble)
-            var xx = math.floor(x0).toInt
-            while (xx < math.ceil(x1).toInt && xx < w) {
-              val wx = math.min(x1, xx + 1.0) - math.max(x0, xx.toDouble)
-              acc += chw(off + yy * w + xx) * wy * wx
+          var j = 0
+          while (j < ny) {
+            val wy = ys.wt(yat + j)
+            val row = off + (y0 + j) * w + x0
+            var i = 0
+            while (i < nx) {
+              val wx = xs.wt(xat + i)
+              acc += chw(row + i) * wy * wx
               area += wy * wx
-              xx += 1
+              i += 1
             }
-            yy += 1
+            j += 1
           }
           out(ooff + oy * outW + ox) = (acc / area).toFloat
           ox += 1
@@ -324,9 +367,9 @@ object ImageCodec {
 
   /** Area-resize reading pixel values directly from a TYPE_3BYTE_BGR raster
     * (the layout both our JPEG and PNG readers produce). Exactly the
-    * resizeAreaInto loop with `chw(off + yy*w + xx)` replaced by
-    * `(raster byte & 0xff) / 255f` — identical float values, so parity with
-    * the pure kernels is preserved. Returns false when the layout differs
+    * resizeAreaInto loop with `chw(…)` replaced by the raster byte's
+    * [[UnitByte]] value — identical float values, so the output is bit-
+    * identical to the pure kernels. Returns false when the layout differs
     * (caller falls back to the generic path). */
   private def resizeAreaFromRaster(
       img: BufferedImage, outH: Int, outW: Int, out: Array[Float]): Boolean = {
@@ -342,36 +385,38 @@ object ImageCodec {
     }
     if (sm.getPixelStride != 3) return false
     val stride = sm.getScanlineStride
-    val h = img.getHeight
-    val w = img.getWidth
-    val sy = h.toDouble / outH
-    val sx = w.toDouble / outW
+    val sc = scratch.get()
+    val ys = sc.spans(0, img.getHeight, outH)
+    val xs = sc.spans(1, img.getWidth, outW)
     var c = 0
     while (c < 3) {
       val boff = 2 - c // BGR byte order: R at +2, G at +1, B at +0
       val ooff = c * outH * outW
       var oy = 0
       while (oy < outH) {
-        val y0 = oy * sy
-        val y1 = (oy + 1) * sy
+        val y0 = ys.first(oy)
+        val ny = ys.len(oy)
+        val yat = ys.at(oy)
         var ox = 0
         while (ox < outW) {
-          val x0 = ox * sx
-          val x1 = (ox + 1) * sx
+          val x0 = xs.first(ox)
+          val nx = xs.len(ox)
+          val xat = xs.at(ox)
           var acc = 0.0
           var area = 0.0
-          var yy = math.floor(y0).toInt
-          while (yy < math.ceil(y1).toInt && yy < h) {
-            val wy = math.min(y1, yy + 1.0) - math.max(y0, yy.toDouble)
-            var xx = math.floor(x0).toInt
-            while (xx < math.ceil(x1).toInt && xx < w) {
-              val wx = math.min(x1, xx + 1.0) - math.max(x0, xx.toDouble)
-              val v = ((buf(yy * stride + xx * 3 + boff) & 0xff) / 255.0f)
+          var j = 0
+          while (j < ny) {
+            val wy = ys.wt(yat + j)
+            val row = (y0 + j) * stride + x0 * 3 + boff
+            var i = 0
+            while (i < nx) {
+              val wx = xs.wt(xat + i)
+              val v = UnitByte(buf(row + i * 3) & 0xff)
               acc += v * wy * wx
               area += wy * wx
-              xx += 1
+              i += 1
             }
-            yy += 1
+            j += 1
           }
           out(ooff + oy * outW + ox) = (acc / area).toFloat
           ox += 1

@@ -34,9 +34,10 @@ import org.apache.spark.sql.types.StructType
   * it.
   *
   * Zero temporal leakage by construction: a probe can only ever see build
-  * rows ordered at-or-before itself (`orderBy(ts, tag)` with build tag < probe
-  * tag); the emitted `asof_src_ts` column lets the leakage-audit test assert
-  * `asof_src_ts <= ts` on every output row (BASELINE.json north_star).
+  * rows ordered at-or-before itself (`orderBy(ts, tag, payload)` with build
+  * tag < probe tag); the emitted `asof_src_ts` column lets the leakage-audit
+  * test assert `asof_src_ts <= ts` on every output row (BASELINE.json
+  * north_star).
   */
 object AsOfJoin {
   private val B = "__asof_bucket"
@@ -51,13 +52,19 @@ object AsOfJoin {
     * one cumulative `last(..., ignoreNulls)` window per (entity, bucket) —
     * whole-stage-codegen'd and AQE-eligible.
     *
-    * The deduped build relation feeds two subtrees (the per-bucket carry
+    * Duplicate build timestamps need no dedup pass: build rows enter the
+    * union as they are, and the window orders ties at one `(entity, ts)`
+    * by payload struct, so a probe sees the largest payload among the
+    * latest rows — Spark's struct ordering, the same row a
+    * `max(struct(payload))` per `(entity, ts)` would keep.
+    *
+    * The build relation feeds two subtrees (the per-bucket carry
     * reduction and the build rows of the union), and the probe side feeds
     * two more (the probe-bucket timeline and the probe rows). They are NOT
     * staged: the narrow timeline branches re-scan only their pruned
     * columns, which is cheaper than materializing parquet-scan inputs. A
     * caller whose side embeds expensive derivation stages it first
-    * ([[Staging]]). */
+    * ([[Staging]]), as `FeaturePipeline.frameFeatures` does. */
   def asOf(
       probes: DataFrame,
       build: DataFrame,
@@ -71,18 +78,15 @@ object AsOfJoin {
     require(!probes.columns.contains(SrcTs), s"probe side already has a '$SrcTs' column")
 
     val e = col(entityCol)
-    // One build row per (entity, ts): deterministic max over the payload
-    // struct. Duplicate build timestamps would otherwise make window `last`
-    // order-dependent (nondeterministic across runs).
-    val b0 = build
-      .groupBy(e, col(tsCol))
-      .agg(max(struct(payload.map(col): _*)).as(PAY))
-      .withColumn(B, floor(col(tsCol) / bucketWidth))
+    val b0 = build.select(
+      e, col(tsCol), floor(col(tsCol) / bucketWidth).as(B), struct(payload.map(col): _*).as(PAY))
 
     val payType = b0.schema(PAY).dataType
     val probeType = StructType(probes.schema.fields)
 
-    // Latest build row per (entity, bucket) — tiny relation.
+    // Latest build row per (entity, bucket) — tiny relation. Among rows
+    // tied at the latest ts, `max` picks the largest payload: the window
+    // order's tie rule below.
     val lastPerBucket = b0
       .groupBy(e, col(B))
       .agg(max(struct(col(tsCol).as(SrcTs), col(PAY))).as("__last"))
@@ -120,9 +124,10 @@ object AsOfJoin {
       struct(probes.columns.map(col): _*).as(PRB))
     val unioned = buildRows.unionByName(carries).unionByName(probeRows)
 
+    // payload breaks ties at one (entity, ts): `last` keeps the largest
     val w = Window
       .partitionBy(e, col(B))
-      .orderBy(col(tsCol).asc, col(TAG).asc)
+      .orderBy(col(tsCol).asc, col(TAG).asc, col(PAY).asc)
       .rowsBetween(Window.unboundedPreceding, 0)
     // Only build/carry rows feed the running "latest seen" state; probes read it.
     val matched = last(

@@ -15,14 +15,20 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - `Dedup`: the shingle, band and inverted-index relations, and every
   *    round of `components`;
   *  - `TextAnalysis.tfidf`: the tf relation;
-  *  - `FeaturePipeline.frameFeatures`: the decoded frames.
+  *  - `FeaturePipeline.frameFeatures`: the decoded frames, and its output
+  *    (read by the per-second mean and both build branches of the as-of
+  *    join).
   *
   * [[stage]] is a lazy local checkpoint: the first action over the
   * relation writes its partitions to the block manager, and the returned
-  * DataFrame's lineage is truncated onto those blocks. Blocks stay pinned
-  * until [[release]] or `unpersist`, and they cannot be recomputed after
-  * an executor loss. Swapping the medium (a reliable checkpoint, a parquet
-  * write-then-read) is a change to this file only. */
+  * DataFrame's lineage is truncated onto those blocks. "Lazy" covers the
+  * final stage only: with AQE on, checkpointing plans the relation
+  * adaptively, which runs every shuffle stage inside it when [[stage]] is
+  * called (staging `frameFeatures`' output runs the window stage's
+  * exchanges there, 4 jobs). Blocks stay pinned until [[release]] or
+  * `unpersist`, and they cannot be recomputed after an executor loss.
+  * Swapping the medium (a reliable checkpoint, a parquet write-then-read)
+  * is a change to this file only. */
 object Staging {
 
   def stage(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)

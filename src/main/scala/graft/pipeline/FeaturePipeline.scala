@@ -17,6 +17,10 @@ import graft.synth.SynthImages
   * Layout decisions for 10^12 rows:
   *  - the fused codec UDF means raw pixels never leave the row pipeline —
   *    only the 54-float feature crosses any exchange;
+  *  - two relations are staged ([[Staging]]) per run: the decoded frames,
+  *    which feed the window stage's rows/summary diamond, and the frame
+  *    features, which feed the per-second mean and both build branches of
+  *    the as-of join — so the codec and the window stage each run once;
   *  - ALL per-frame window features (LOCF fill, lag-1 delta, gap session)
   *    run in ONE fused time-bucketed pass ([[BucketedWindows]], round-5
   *    judge directive #3): one `(entity, bucket)` exchange of the decoded
@@ -41,7 +45,9 @@ object FeaturePipeline {
   val WindowBucketFrames = 64L
 
   /** Per-frame feature rows: entity, ts, vec, caption_filled, vec_delta,
-    * session_id. */
+    * session_id. Staged, so the window stage runs once however many
+    * times callers read the result; with AQE that runs the decode and the
+    * window stage's exchanges here, before any action. */
   def frameFeatures(images: DataFrame): DataFrame = {
     val frames = SynthImages.withEntityTs(images)
     // decode ONCE: frameWindows' windows/summary diamond would otherwise
@@ -52,22 +58,23 @@ object FeaturePipeline {
         // P9 string rewrite: `imagebind_feature_extractor.py:62`
         .withColumn("caption_rw", regexp_replace(col("caption"), "#C C", "actor"))
         .drop("bytes"))
-    BucketedWindows
-      .frameWindows(
-        decoded,
-        "entity",
-        "ts",
-        WindowBucketFrames,
-        SessionGapFrames,
-        locfCols = Seq("caption_rw"),
-        lagCols = Seq("vec"))
-      .withColumnRenamed("caption_rw_filled", "caption_filled")
-      .withColumn(
-        "vec_delta",
-        VecOps.vecSub(
-          col("vec").cast("array<double>"),
-          coalesce(col("vec_lag1").cast("array<double>"), col("vec").cast("array<double>"))))
-      .drop("caption_rw", "vec_lag1")
+    Staging.stage(
+      BucketedWindows
+        .frameWindows(
+          decoded,
+          "entity",
+          "ts",
+          WindowBucketFrames,
+          SessionGapFrames,
+          locfCols = Seq("caption_rw"),
+          lagCols = Seq("vec"))
+        .withColumnRenamed("caption_rw_filled", "caption_filled")
+        .withColumn(
+          "vec_delta",
+          VecOps.vecSub(
+            col("vec").cast("array<double>"),
+            coalesce(col("vec_lag1").cast("array<double>"), col("vec").cast("array<double>"))))
+        .drop("caption_rw", "vec_lag1"))
   }
 
   /** Per-second (30-frame) mean feature — A1/A2/A3 with explicit tail mode. */

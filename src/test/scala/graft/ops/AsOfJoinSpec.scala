@@ -95,6 +95,20 @@ class AsOfJoinSpec extends SparkSpec {
       (3, None, None)))
   }
 
+  test("asOf plans no aggregate grouped by exactly (entity, ts): ties resolve in the window order") {
+    val build = buildRows.toDF("entity", "ts", "v")
+    val probes = probeRows.toDF("entity", "ts")
+    val plan = AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), 100L).queryExecution.optimizedPlan
+    val groupings = plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+      a.groupingExpressions.map {
+        case n: org.apache.spark.sql.catalyst.expressions.NamedExpression => n.name
+        case x => x.sql
+      }.toSet
+    }
+    assert(groupings.nonEmpty, s"expected the per-bucket aggregates in:\n$plan")
+    assert(!groupings.contains(Set("entity", "ts")), s"per-(entity, ts) dedup aggregate in:\n$plan")
+  }
+
   test("bucket width does not change semantics") {
     val build = buildRows.toDF("entity", "ts", "v")
     val probes = probeRows.zipWithIndex.map { case ((e, t), i) => (e, t, i) }

@@ -60,6 +60,43 @@ object EngineProps extends Properties("graft") {
       (got == want) :| s"asOf($width): $got != $want"
     }
 
+  // a two-field payload: a low-cardinality int that often ties, then an
+  // array that decides — duplicate (entity, ts) rows must resolve by
+  // Spark's struct ordering (fields in order, arrays lexicographic)
+  private val structRowGen: Gen[(String, Long, Int, List[Double])] = for {
+    e <- Gen.oneOf("a", "b")
+    ts <- Gen.choose(0L, 20L)
+    k <- Gen.choose(0, 1)
+    n <- Gen.choose(0, 3)
+    arr <- Gen.listOfN(n, Gen.choose(-2, 2).map(_.toDouble))
+  } yield (e, ts, k, arr)
+
+  property("asOf == brute force on a struct payload: ties at one ts go to the max (int, array)") =
+    Prop.forAll(
+      Gen.choose(0, 40).flatMap(Gen.listOfN(_, structRowGen)),
+      Gen.listOfN(20, Gen.zip(Gen.oneOf("a", "b"), Gen.choose(-1L, 22L))),
+      Gen.oneOf(1L, 4L, 64L)) { (b, p, width) =>
+      import scala.math.Ordering.Implicits.seqOrdering
+      implicit val doubles: Ordering[Double] = Ordering.Double.TotalOrdering
+      val build = b.toDF("entity", "ts", "k", "arr")
+      val probes = p.zipWithIndex.map { case ((e, ts), i) => (e, ts, i) }.toDF("entity", "ts", "pid")
+      val want = p.zipWithIndex.map { case ((e, ts), i) =>
+        val c = b.filter(x => x._1 == e && x._2 <= ts)
+        i -> (if (c.isEmpty) None else Some(c.map(x => (x._2, x._3, x._4)).max))
+      }.toMap
+      val got = AsOfJoin
+        .asOf(probes, build, "entity", "ts", Seq("k", "arr"), width)
+        .collect()
+        .map { r =>
+          val src = r.fieldIndex(AsOfJoin.SrcTs)
+          r.getInt(r.fieldIndex("pid")) ->
+            (if (r.isNullAt(src)) None
+             else Some((r.getLong(src), r.getInt(r.fieldIndex("k")), r.getSeq[Double](r.fieldIndex("arr")).toList)))
+        }
+        .toMap
+      (got == want) :| s"asOf($width): $got != $want"
+    }
+
   property("frameWindows == plain locf + lag + sessionize for any bucket width and gap") =
     Prop.forAll(rowsGen, Gen.oneOf(1L, 3L, 7L, 64L), Gen.oneOf(0L, 5L, 40L)) { (rows, width, gap) =>
       // unique (entity, ts) — the operator's input contract; `s` is a
