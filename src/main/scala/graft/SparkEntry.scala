@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.feats.VecOps
 import graft.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query contract of the build plan (SURVEY.md §7).
   *
-  * Every `queries` entry is one operator from SURVEY.md §2 run over the
-  * driver testdata at `dir`; `oracleSql` holds the equivalent ANSI SQL the
-  * driver runs in DuckDB on the same parquet. Column names are aliased
+  * Every [[SparkEntry.Query]] in `registry` is one operator from SURVEY.md
+  * §2 run over the sf testdata at `dir`, declared with the equivalent ANSI
+  * SQL that DuckDB runs on the same parquet; `queries` and `oracleSql` are
+  * the two views of it that `Verify` writes out. Column names are aliased
   * identically on both sides (the driver sorts columns by name and hashes
   * values). Floating aggregates are rounded on both sides so fp summation
   * order (Spark vs DuckDB) cannot flip the hash.
@@ -84,22 +85,12 @@ object SparkEntry {
     * query made q_dedup_components the heaviest loop entry (round-5 judge:
     * 10.1 s, ~6 s of it the redundant LSH recompute). Memoized per
     * (session, dir) with the RESULT relation staged ([[Staging]]): the
-    * first consumer pays for the graph once, the second reads the staged
-    * relation. Keyed on the session so a fresh session (new Verify/Bench
-    * run in one JVM) never reuses blocks a stopped session dropped; the
-    * map stays O(runs) small. */
+    * owner builds it ([[ownPairGraph]]), the consumer reads the staged
+    * relation ([[memoPairGraph]]). Keyed on the session so a fresh session
+    * (new Verify/Bench run in one JVM) never reuses blocks a stopped
+    * session dropped; the map stays O(runs) small. */
   private val pairGraphCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Drop the memoized pair graph for (session, dir) — the bench repair
-    * pass and `obs.QueryReport` call this before RE-TIMING q_minhash_lsh:
-    * the owner query's honest cost IS building + staging the graph, and a
-    * re-run that silently read the memo would record the whole LSH
-    * pipeline as ~0.2 s (review finding r6). Consumers (q_dedup_components)
-    * are unaffected — their recorded semantics is canonicalization over an
-    * existing graph. */
-  private[graft] def invalidatePairGraph(s: SparkSession, dir: String): Unit =
-    pairGraphCache.remove((s, dir))
 
   /** RDD ids backing the LIVE memoized pair graph (empty when no memo):
     * exactly the blocks [[releaseBetweenQueries]] must keep —
@@ -117,8 +108,8 @@ object SparkEntry {
     }.toSet
 
   /** The query that owns the pair-graph memo: it runs right before its
-    * consumer q_dedup_components, and a re-timed run of it must first
-    * [[invalidatePairGraph]] so it times building the graph, not a memo hit. */
+    * consumer q_dedup_components, and every run of it builds the graph, so
+    * no harness that re-times it can record a memo hit. */
   private[graft] val PairGraphOwner = "q_minhash_lsh"
 
   /** `queries` in the order every timing loop runs them: alphabetical,
@@ -144,12 +135,12 @@ object SparkEntry {
     * dead once its action returns; releasing them keeps a loop of queries
     * from growing the block manager monotonically and from letting one
     * query time another's work. The pair graph is the exception: its owner
-    * stages blocks that q_dedup_components (and a re-timed owner run) read
-    * later, and a staged relation's lineage is truncated, so releasing them
-    * would FAIL the consumer rather than slow it. Protection is recomputed
-    * from the live memo on every call: the owner's dead intermediates are
-    * released, and a memo built by the consumer after a cancelled owner run
-    * is still protected. */
+    * stages blocks that q_dedup_components reads later, and a staged
+    * relation's lineage is truncated, so releasing them would FAIL the
+    * consumer rather than slow it. Protection is recomputed from the live
+    * memo on every call: the owner's dead intermediates and superseded
+    * graphs are released, and a memo built by the consumer after a
+    * cancelled owner run is still protected. */
   private[graft] def releaseBetweenQueries(s: SparkSession, dir: String): Unit = {
     val keep = pairGraphStagedIds(s, dir)
     s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
@@ -175,14 +166,24 @@ object SparkEntry {
       "vec_id", "embedding", "vec_id", "embedding", 5)
   }
 
-  private def minhashPairGraph(s: SparkSession, dir: String): DataFrame =
-    pairGraphCache.computeIfAbsent(
-      (s, dir),
-      { case (sess, d) =>
-        Staging.stage(
-          graft.dedup.Dedup.minhashLsh(
-            spread(sess.read.parquet(s"$d/documents.parquet")), "doc_id", "text"))
-      })
+  private def stagedPairGraph(s: SparkSession, dir: String): DataFrame =
+    Staging.stage(
+      graft.dedup.Dedup.minhashLsh(
+        spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text"))
+
+  /** [[PairGraphOwner]]'s body: builds, stages and memoizes a new graph on
+    * every run. The superseded memo loses its protection, so the next
+    * [[releaseBetweenQueries]] frees its blocks. */
+  private def ownPairGraph(s: SparkSession, dir: String): DataFrame = {
+    val g = stagedPairGraph(s, dir)
+    pairGraphCache.put((s, dir), g)
+    g
+  }
+
+  /** q_dedup_components' input: the live memo, built only when no owner run
+    * left one (e.g. a cancelled owner run). */
+  private def memoPairGraph(s: SparkSession, dir: String): DataFrame =
+    pairGraphCache.computeIfAbsent((s, dir), { case (sess, d) => stagedPairGraph(sess, d) })
 
   /** Shared body of q_tumbling_ceil / q_tumbling_floor: windows of 7 frames
     * on a dense per-label rank axis (row_number − 1, the reference's frame
@@ -341,18 +342,34 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.pipeline.FeaturePipeline.run(spark, entities = 8, framesPerEntity = 256, probesPerEntity = 8)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One contract query: its `name`, the ANSI SQL that DuckDB runs on the
+    * same parquet tables to check it (`None` for an op that is not
+    * SQL-expressible: only its rows are checked), and its body over the sf
+    * testdata at `dir`. */
+  final case class Query(name: String, oracle: Option[String])(
+      val build: (SparkSession, String) => DataFrame)
+
+  /** Every contract query, one per implemented operator from SURVEY.md §2,
+    * each declared once beside its oracle. A `def`, like the two views
+    * below: no SQL string (nor [[scratchRoot]]) is built before a caller
+    * asks for the registry. */
+  private[graft] def registry: Seq[Query] = Seq(
     // ---- J2: point-in-time / as-of join (flagship operator) ----
-    "q_asof_join" -> purchaseLastClick,
+    Query("q_asof_join", Some(asofSql))(purchaseLastClick),
     // the same leaf as q_asof_join (the as-of join has one implementation);
     // kept under its own name because the bench and the oracle list it
-    "q_asof_merge" -> purchaseLastClick,
+    Query("q_asof_merge", Some(asofSql))(purchaseLastClick),
     // the flagship as-of via the STATEFUL STREAMING operator
     // (flatMapGroupsWithState, O(1) state per entity) run in batch mode —
     // batch/stream parity for the flagship, same DuckDB ASOF oracle
     // (mirrors the q_locf_stateful pattern)
-    "q_asof_stateful" -> ((s, dir) => {
+    Query("q_asof_stateful", Some(
+      """SELECT p.user_id AS user_id, epoch_us(p.ts) AS ts_us, p.event_id AS event_id,
+        |       epoch_us(b.ts) AS click_ts_us, round(b.value, 4) AS click_value
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value FROM events
+        |                WHERE event_type = 'click' GROUP BY user_id, ts) b
+        |  ON p.user_id = b.user_id AND p.ts >= b.ts""".stripMargin))((s, dir) => {
       import s.implicits._
       val e = ev(s, dir)
         .where(col("event_type").isin("click", "purchase"))
@@ -375,7 +392,16 @@ object SparkEntry {
     // as-of with a staleness bound (1 h): matches older than the tolerance
     // are dropped to null — the "latest reading unless too stale" form
     // every PIT feature store needs (round-4 widening)
-    "q_asof_tolerance" -> ((s, dir) => {
+    Query("q_asof_tolerance", Some(
+      """SELECT p.user_id AS user_id, epoch_us(p.ts) AS ts_us, p.event_id AS event_id,
+        |  CASE WHEN epoch_us(p.ts) - epoch_us(b.ts) <= 3600000000
+        |       THEN epoch_us(b.ts) END AS click_ts_us,
+        |  CASE WHEN epoch_us(p.ts) - epoch_us(b.ts) <= 3600000000
+        |       THEN round(b.value, 4) END AS click_value
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value FROM events
+        |                WHERE event_type = 'click' GROUP BY user_id, ts) b
+        |  ON p.user_id = b.user_id AND p.ts >= b.ts""".stripMargin))((s, dir) => {
       val (probes, build) = purchaseClickSides(s, dir)
       AsOfJoin
         .asOfWithin(probes, build, "user_id", "ts_us", Seq("click_value"), AsOfBucketUs, HourUs)
@@ -388,14 +414,24 @@ object SparkEntry {
     }),
     // ---- north-rule leakage audit over the as-of join OUTPUT: one scan,
     //      pure column predicate — n_leaked must be 0, max_lead null ----
-    "q_leakage_audit" -> ((s, dir) => {
+    Query("q_leakage_audit", Some(
+      """WITH j AS (
+        |  SELECT p.ts_us AS ts_us, b.src_ts AS src_ts FROM
+        |    (SELECT user_id, epoch_us(ts) AS ts_us, ts FROM events WHERE event_type = 'purchase') p
+        |  ASOF LEFT JOIN
+        |    (SELECT user_id, ts, epoch_us(ts) AS src_ts FROM events WHERE event_type = 'click') b
+        |  ON p.user_id = b.user_id AND p.ts >= b.ts)
+        |SELECT count(*) AS n_rows, count(src_ts) AS n_matched,
+        |  CAST(sum(CASE WHEN src_ts IS NOT NULL AND src_ts > ts_us THEN 1 ELSE 0 END) AS BIGINT) AS n_leaked,
+        |  max(CASE WHEN src_ts IS NOT NULL AND src_ts > ts_us THEN src_ts - ts_us END) AS max_lead
+        |FROM j""".stripMargin))((s, dir) => {
       val (probes, build) = purchaseClickSides(s, dir)
       val joined = AsOfJoin
         .asOf(probes, build, "user_id", "ts_us", Seq("click_value"), AsOfBucketUs)
       LeakageAudit.auditStats(joined, "ts_us", AsOfJoin.SrcTs)
     }),
     // ---- W8: LOCF backfill ----
-    "q_locf_backfill" -> ((s, dir) => {
+    Query("q_locf_backfill", Some(locfSql))((s, dir) => {
       val e = ev(s, dir).withColumn(
         "sparse_value",
         when(col("event_type") === "purchase", col("value")))
@@ -408,7 +444,7 @@ object SparkEntry {
           round(col("sparse_value_filled"), 4).as("locf_value"))
     }),
     // same semantics via the skew-proof bucketed LOCF
-    "q_locf_bucketed" -> ((s, dir) => {
+    Query("q_locf_bucketed", Some(locfSql))((s, dir) => {
       val e = ev(s, dir).withColumn(
         "sparse_value",
         when(col("event_type") === "purchase", col("value")))
@@ -425,7 +461,7 @@ object SparkEntry {
     // against the same DuckDB oracle. Note: ts collisions within a user
     // would make fill order nondeterministic; events.parquet has unique
     // (user, ts) pairs (asserted by the oracle hash match itself).
-    "q_locf_stateful" -> ((s, dir) => {
+    Query("q_locf_stateful", Some(locfSql))((s, dir) => {
       import s.implicits._
       val e = ev(s, dir).select(
         col("user_id"),
@@ -442,7 +478,12 @@ object SparkEntry {
           round(col("v_filled"), 4).as("locf_value"))
     }),
     // ---- W6: lag/lead + delta ----
-    "q_lag_lead" -> ((s, dir) => {
+    Query("q_lag_lead", Some(
+      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, round(value, 4) AS v,
+        |  round(lag(value) OVER w, 4) AS lag_v,
+        |  round(lead(value) OVER w, 4) AS lead_v,
+        |  round(value - lag(value) OVER w, 4) AS delta_v
+        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin))((s, dir) => {
       LagLead
         .withLagLead(ev(s, dir), "user_id", "ts_us", "value", 1, Seq("event_id"))
         .select(
@@ -455,12 +496,34 @@ object SparkEntry {
           round(col("value_delta1"), 4).as("delta_v"))
     }),
     // ---- W9: gap sessionization ----
-    "q_sessionize" -> ((s, dir) => {
+    Query("q_sessionize", Some(
+      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        |FROM (
+        |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+        |                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000 THEN 1
+        |            ELSE 0 END AS is_new
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))""".stripMargin))((s, dir) => {
       Sessionize
         .sessionize(ev(s, dir), "user_id", "ts_us", SessionGapUs, Seq("event_id"))
         .select(col("user_id"), col("event_id"), col("ts_us"), col("session_id"))
     }),
-    "q_session_stats" -> ((s, dir) => {
+    Query("q_session_stats", Some(
+      """WITH sess AS (
+        |  SELECT user_id, value, epoch_us(ts) AS ts_us,
+        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        |  FROM (
+        |    SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+        |                     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000 THEN 1
+        |              ELSE 0 END AS is_new
+        |    FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)))
+        |SELECT user_id, session_id, count(*) AS n_rows,
+        |  min(ts_us) AS session_start, max(ts_us) AS session_end,
+        |  max(ts_us) - min(ts_us) AS duration,
+        |  round(avg(value), 4) AS avg_value
+        |FROM sess GROUP BY user_id, session_id""".stripMargin))((s, dir) => {
       Sessionize
         .sessionStats(ev(s, dir), "user_id", "ts_us", SessionGapUs, "value", Seq("event_id"))
         .select(
@@ -477,16 +540,25 @@ object SparkEntry {
     //      170-187 keeps the tail; text_features/imagebind_feature_extractor
     //      .py:136-153 drops it) — both tail modes of Windows.tumblingAgg +
     //      vecAvg, hash-checked vs DuckDB on a dense per-label frame axis ----
-    "q_tumbling_ceil" -> ((s, dir) => tumblingTail(s, dir, Windows.CeilTail)),
-    "q_tumbling_floor" -> ((s, dir) => tumblingTail(s, dir, Windows.FloorTail)),
+    Query("q_tumbling_ceil", Some(tumblingTailSql(floorOnly = false)))(
+      (s, dir) => tumblingTail(s, dir, Windows.CeilTail)),
+    Query("q_tumbling_floor", Some(tumblingTailSql(floorOnly = true)))(
+      (s, dir) => tumblingTail(s, dir, Windows.FloorTail)),
     // ---- W1/A2: tumbling window aggregate (1 day) ----
-    "q_tumbling_window" -> ((s, dir) => {
+    Query("q_tumbling_window", Some(
+      """SELECT user_id, epoch_us(ts) // 86400000000 AS win_id,
+        |  count(*) AS n, round(avg(value), 4) AS avg_v
+        |FROM events GROUP BY 1, 2""".stripMargin))((s, dir) => {
       ev(s, dir)
         .groupBy(col("user_id"), floor(col("ts_us") / DayUs).as("win_id"))
         .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_v"))
     }),
     // ---- W3: trailing sliding mean (3 preceding + current rows) ----
-    "q_sliding_window" -> ((s, dir) => {
+    Query("q_sliding_window", Some(
+      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                         ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS sliding_avg
+        |FROM events""".stripMargin))((s, dir) => {
       Windows
         .trailingMean(ev(s, dir), "user_id", "ts_us", "value", 3, "sliding_avg", Seq("event_id"))
         .select(
@@ -496,7 +568,11 @@ object SparkEntry {
           round(col("sliding_avg"), 4).as("sliding_avg"))
     }),
     // ---- W3 range twin: trailing 1-hour TIME-RANGE mean (round-4) ----
-    "q_range_window" -> ((s, dir) => {
+    Query("q_range_window", Some(
+      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  round(avg(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
+        |        RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 4) AS range_avg
+        |FROM events""".stripMargin))((s, dir) => {
       Windows
         .trailingRangeMean(ev(s, dir), "user_id", "ts_us", "value", HourUs, "range_avg")
         .select(
@@ -507,7 +583,12 @@ object SparkEntry {
     }),
     // ---- W8 mirror: NOCB backward fill (label construction; reads the
     //      future by definition — never a feature input, see Backfill.nocb) ----
-    "q_bfill" -> ((s, dir) => {
+    Query("q_bfill", Some(
+      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |  round(first_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
+        |    OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 4) AS bfill_value
+        |FROM events""".stripMargin))((s, dir) => {
       val e = ev(s, dir).withColumn(
         "sparse_value",
         when(col("event_type") === "purchase", col("value")))
@@ -523,7 +604,12 @@ object SparkEntry {
     //      per (user, day) — label/feature scaling stats; Spark
     //      `percentile` and DuckDB `quantile_cont` share the
     //      p·(n−1) linear-interpolation definition ----
-    "q_percentile" -> ((s, dir) => {
+    Query("q_percentile", Some(
+      """SELECT user_id, epoch_us(ts) // 86400000000 AS win_id, count(*) AS n,
+        |  '[' || array_to_string(
+        |    [CAST(round(round(x, 4) * 10000) AS BIGINT)
+        |     for x in quantile_cont(value, [0.25, 0.5, 0.9])], ',') || ']' AS pcts
+        |FROM events GROUP BY 1, 2""".stripMargin))((s, dir) => {
       ev(s, dir)
         .groupBy(col("user_id"), floor(col("ts_us") / DayUs).as("win_id"))
         .agg(
@@ -533,13 +619,34 @@ object SparkEntry {
     }),
     // ---- histogram bucketing over the global value axis (PostgreSQL
     //      width_bucket semantics in both engines) ----
-    "q_histogram" -> ((s, dir) => {
+    Query("q_histogram", Some(
+      // this DuckDB build has no width_bucket — spell out the PostgreSQL
+      // semantics (below-range → 0, at-or-above hi → count+1, else
+      // 1-based floor) on the exact bucket boundaries (multiples of 5 are
+      // double-exact, so the two engines cannot disagree at an edge)
+      """SELECT CAST(CASE WHEN value < 0 THEN 0
+        |            WHEN value >= 100 THEN 21
+        |            ELSE floor(value / 5) + 1 END AS BIGINT) AS bucket,
+        |  count(*) AS n, round(avg(value), 4) AS avg_v
+        |FROM events GROUP BY 1""".stripMargin))((s, dir) => {
       ev(s, dir)
         .groupBy(width_bucket(col("value"), lit(0d), lit(100d), lit(20)).as("bucket"))
         .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_v"))
     }),
     // ---- W5: uniform temporal subsample, k=4 per (user, day) ----
-    "q_subsample" -> ((s, dir) => {
+    Query("q_subsample", Some(
+      """WITH g AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 AS win_id,
+        |    row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 86400000000
+        |                       ORDER BY ts, event_id) - 1 AS rn,
+        |    count(*) OVER (PARTITION BY user_id, epoch_us(ts) // 86400000000) AS n
+        |  FROM events)
+        |SELECT user_id, win_id, event_id, ts_us FROM g
+        |WHERE rn IN (CAST(round(0 * (n - 1) / 3.0) AS BIGINT),
+        |             CAST(round(1 * (n - 1) / 3.0) AS BIGINT),
+        |             CAST(round(2 * (n - 1) / 3.0) AS BIGINT),
+        |             CAST(round(3 * (n - 1) / 3.0) AS BIGINT))""".stripMargin))((s, dir) => {
       val withWin = ev(s, dir).withColumn("win_id", floor(col("ts_us") / DayUs))
       Windows
         .uniformSubsample(withWin, "user_id", "win_id", "ts_us", 4, Seq("event_id"))
@@ -549,7 +656,12 @@ object SparkEntry {
     //      view, via the bucketed ops.IntervalJoin operator (an equi-join
     //      on (user, bucket) + residual predicate; never a per-user cross
     //      product) ----
-    "q_interval_join" -> ((s, dir) => {
+    Query("q_interval_join", Some(
+      """SELECT v.event_id AS event_id, count(c.ts) AS n_clicks
+        |FROM (SELECT * FROM events WHERE event_type = 'view') v
+        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON v.user_id = c.user_id AND c.ts >= v.ts - INTERVAL 1 HOUR AND c.ts < v.ts
+        |GROUP BY v.event_id""".stripMargin))((s, dir) => {
       val e = ev(s, dir)
       val views = e
         .filter(col("event_type") === "view")
@@ -567,7 +679,12 @@ object SparkEntry {
         .select(col("event_id"), coalesce(col("n"), lit(0L)).as("n_clicks"))
     }),
     // ---- J4: anti-join vs completed manifest (resume semantics) ----
-    "q_anti_join" -> ((s, dir) => {
+    Query("q_anti_join", Some(
+      """SELECT user_id, count(*) AS n FROM events e
+        |WHERE NOT EXISTS (SELECT 1 FROM events x
+        |                  WHERE x.user_id = e.user_id
+        |                    AND x.event_type = 'error' AND x.value > 90)
+        |GROUP BY user_id""".stripMargin))((s, dir) => {
       val e = ev(s, dir)
       val completed = e
         .filter(col("event_type") === "error" && col("value") > 90)
@@ -578,7 +695,17 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"))
     }),
     // ---- A1-A4: element-wise vector mean (vecAvg Aggregator) ----
-    "q_vec_avg" -> ((s, dir) => {
+    Query("q_vec_avg", Some(
+      """WITH e AS (
+        |  SELECT label, unnest(embedding)::DOUBLE AS v,
+        |         unnest(range(1, len(embedding) + 1)) AS pos
+        |  FROM embeddings),
+        |a AS (SELECT label, pos, avg(v) AS m FROM e GROUP BY label, pos),
+        |c AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label)
+        |SELECT a.label AS label,
+        |  '[' || array_to_string(list(CAST(round(round(m, 4) * 10000) AS BIGINT) ORDER BY pos), ',') || ']' AS vec_avg,
+        |  max(c.n) AS n
+        |FROM a JOIN c USING (label) GROUP BY a.label""".stripMargin))((s, dir) => {
       s.read
         .parquet(s"$dir/embeddings.parquet")
         .groupBy(col("label"))
@@ -588,7 +715,13 @@ object SparkEntry {
         .select(col("label"), vecFixed(col("raw"), 4).as("vec_avg"), col("n"))
     }),
     // ---- generic agg/join sanity (TPC-H-ish) ----
-    "q1_agg" -> ((s, dir) => {
+    Query("q1_agg", Some(
+      """SELECT l_returnflag, l_linestatus,
+        |  round(sum(l_quantity), 2) AS sum_qty,
+        |  round(sum(l_extendedprice), 2) AS sum_base,
+        |  round(avg(l_discount), 6) AS avg_disc,
+        |  count(*) AS n
+        |FROM lineitem GROUP BY 1, 2""".stripMargin))((s, dir) => {
       s.read
         .parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -598,7 +731,14 @@ object SparkEntry {
           round(avg(col("l_discount")), 6).as("avg_disc"),
           count(lit(1)).as("n"))
     }),
-    "q_join_agg" -> ((s, dir) => {
+    Query("q_join_agg", Some(
+      """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        |  count(*) AS n
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name""".stripMargin))((s, dir) => {
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val o = s.read.parquet(s"$dir/orders.parquet")
       val c = s.read.parquet(s"$dir/customer.parquet")
@@ -611,7 +751,9 @@ object SparkEntry {
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
           count(lit(1)).as("n"))
     }),
-    "q_topk" -> ((s, dir) => {
+    Query("q_topk", Some(
+      """SELECT o_orderkey, round(o_totalprice, 2) AS price
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin))((s, dir) => {
       s.read
         .parquet(s"$dir/orders.parquet")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -621,7 +763,7 @@ object SparkEntry {
     // ---- flagship image pipeline (P6, A1, W6, W8, W9, J2 fused) — not
     //      SQL-expressible (image decode); parity is asserted in ParitySpec,
     //      driver records a rows-only check ----
-    "q_image_pipeline" -> ((s, _) => {
+    Query("q_image_pipeline", None)((s, _) => {
       graft.pipeline.FeaturePipeline
         .run(s, entities = 8, framesPerEntity = 256, probesPerEntity = 8)
         .select(
@@ -639,7 +781,22 @@ object SparkEntry {
     // EXPORTED files; the DuckDB oracle reads the same files via
     // read_parquet. The image decode itself stays parity-spec'd
     // (ParitySpec — not SQL-expressible).
-    "q_image_meta" -> ((s, _) => {
+    Query("q_image_meta", Some(
+      s"""WITH f AS (SELECT * FROM read_parquet('$scratchRoot/q_image_meta/frames/*.parquet')),
+         |pr AS (SELECT * FROM read_parquet('$scratchRoot/q_image_meta/probes/*.parquet')),
+         |w AS (
+         |  SELECT entity, ts,
+         |    last_value(regexp_replace(caption, '#C C', 'actor', 'g') IGNORE NULLS)
+         |      OVER (PARTITION BY entity ORDER BY ts
+         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_caption,
+         |    CAST(sum(is_new) OVER (PARTITION BY entity ORDER BY ts
+         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f_session
+         |  FROM (SELECT *, CASE WHEN lag(ts) OVER v IS NULL
+         |                         OR ts - lag(ts) OVER v > 8 THEN 1 ELSE 0 END AS is_new
+         |        FROM f WINDOW v AS (PARTITION BY entity ORDER BY ts)))
+         |SELECT pr.entity AS entity, pr.asOfTs AS as_of_ts, w.ts AS src_ts,
+         |       w.f_caption AS f_caption, w.f_session AS f_session
+         |FROM pr ASOF LEFT JOIN w ON pr.entity = w.entity AND pr.asOfTs >= w.ts""".stripMargin))((s, _) => {
       import graft.synth.SynthImages
       // FIXED rendezvous path (per-user 0700 scratch — see scratchRoot):
       // the oracle SQL must name the same files this query writes, and
@@ -688,11 +845,22 @@ object SparkEntry {
     // vectors are data, the per-second vecAvg + tail-mode window math is
     // fully SQL-expressible and the DuckDB oracle reads the SAME files. Only
     // the decode itself stays parity-spec'd (ParitySpec — not SQL-expressible).
-    "q_image_seconds_ceil" -> ((s, _) => imageSeconds(s, Windows.CeilTail)),
-    "q_image_seconds_floor" -> ((s, _) => imageSeconds(s, Windows.FloorTail)),
+    Query("q_image_seconds_ceil", Some(imageSecondsSql("ceil")))(
+      (s, _) => imageSeconds(s, Windows.CeilTail)),
+    Query("q_image_seconds_floor", Some(imageSecondsSql("floor")))(
+      (s, _) => imageSeconds(s, Windows.FloorTail)),
     // ---- P8: grayscale (ITU-R 601-2 luma) over CHW-planar numeric arrays:
     //      first 48 embedding elements as a 3×16 CHW plane ----
-    "q_grayscale" -> ((s, dir) => {
+    Query("q_grayscale", Some(
+      """WITH l AS (
+        |  SELECT vec_id,
+        |    [0.299::DOUBLE * embedding[i]::DOUBLE + 0.587::DOUBLE * embedding[i+16]::DOUBLE
+        |       + 0.114::DOUBLE * embedding[i+32]::DOUBLE for i in range(1, 17)] AS luma
+        |  FROM embeddings)
+        |SELECT vec_id,
+        |  '[' || array_to_string([CAST(round(round(x, 4) * 10000) AS BIGINT) for x in luma], ',') || ']' AS luma,
+        |  round(list_sum(luma) / 16, 4) AS mean_luma
+        |FROM l""".stripMargin))((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val luma = graft.codec.ImageCodec.lumaCol(col("embedding").cast("array<double>"), 16)
       emb.select(
@@ -702,7 +870,13 @@ object SparkEntry {
     }),
     // ---- P11: depth-style clamp+scale via the REAL float kernel (maxV a
     //      power of two ⇒ float divide exact ⇒ engine-portable) ----
-    "q_depth_clamp" -> ((s, dir) => {
+    Query("q_depth_clamp", Some(
+      """SELECT vec_id,
+        |  '[' || array_to_string(
+        |    [CAST(round(round(least(greatest(x::DOUBLE, 0.0), 0.25) / 0.25, 4) * 10000) AS BIGINT)
+        |     for x in embedding], ',') || ']' AS clamped,
+        |  len([x for x in embedding if x < 0.0 OR x > 0.25]) AS n_clipped
+        |FROM embeddings""".stripMargin))((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val clamped = graft.codec.ImageCodec.clampScaleUdf(0.0f, 0.25f)(col("embedding"))
         .cast("array<double>")
@@ -714,7 +888,12 @@ object SparkEntry {
     // ---- K5: depth sink codec — the FULL encode(16-bit PNG)→decode path
     //      surfaced as integer samples (quantization is double-exact, so
     //      DuckDB reproduces every sample bit-for-bit) ----
-    "q_depth_roundtrip" -> ((s, dir) => {
+    Query("q_depth_roundtrip", Some(
+      """SELECT vec_id,
+        |  '[' || array_to_string(
+        |    [CAST(round(least(greatest(x::DOUBLE, 0.0), 0.25) / 0.25 * 65535) AS BIGINT)
+        |     for x in embedding], ',') || ']' AS samples
+        |FROM embeddings""".stripMargin))((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val enc = graft.codec.DepthCodec.encodeUdf(8, 8, 0.25f)(col("embedding"))
       emb.select(
@@ -729,7 +908,15 @@ object SparkEntry {
     // ---- S7/K4: audio — REAL PCM16 WAV encode→decode round trip over a
     //      deterministic synthetic wave (int16 targets chosen so the float
     //      quantization is provably exact ⇒ DuckDB reproduces every sample) ----
-    "q_audio_roundtrip" -> ((s, dir) => {
+    Query("q_audio_roundtrip", Some(
+      """WITH w AS (
+        |  SELECT vec_id, [(vec_id*31 + i*17) % 32768 - 16384 for i in range(0, 1100)] AS s
+        |  FROM embeddings)
+        |SELECT vec_id, len(s)::BIGINT AS n_samples,
+        |  list_sum(s)::BIGINT AS sum_s,
+        |  list_sum([x*x for x in s])::BIGINT AS sum_sq,
+        |  16000::BIGINT AS sr
+        |FROM w""".stripMargin))((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val wave = transform(
         sequence(lit(0), lit(1099)),
@@ -747,7 +934,16 @@ object SparkEntry {
     }),
     // ---- S7 + W1: reference 2s-clip extraction (floor tail) + per-clip
     //      integer-exact stats ----
-    "q_audio_clip_stats" -> ((s, dir) => {
+    Query("q_audio_clip_stats", Some(
+      """WITH w AS (
+        |  SELECT vec_id, [(vec_id*31 + i*17) % 32768 - 16384 for i in range(0, 1100)] AS s
+        |  FROM embeddings),
+        |c AS (
+        |  SELECT vec_id, unnest(range(0, len(s) // 256)) AS clip_idx, s FROM w)
+        |SELECT vec_id, clip_idx::INT AS clip_idx, 256::BIGINT AS n,
+        |  list_sum(list_slice(s, clip_idx*256 + 1, clip_idx*256 + 256))::BIGINT AS sum_s,
+        |  list_sum([x*x for x in list_slice(s, clip_idx*256 + 1, clip_idx*256 + 256)])::BIGINT AS sum_sq
+        |FROM c""".stripMargin))((s, dir) => {
       val emb = embSpread(s, dir).select(col("vec_id"))
       val wave = transform(
         sequence(lit(0), lit(1099)),
@@ -764,7 +960,16 @@ object SparkEntry {
     }),
     // ---- S7: audio resample (linear kernel, 64→48 "Hz" over the stored
     //      embedding array — fixed-order double math, oracle bit-exact) ----
-    "q_audio_resample" -> ((s, dir) => {
+    Query("q_audio_resample", Some(
+      """WITH w AS (SELECT vec_id, embedding::DOUBLE[] AS s FROM embeddings)
+        |SELECT vec_id,
+        |  '[' || array_to_string(
+        |    [CAST(round(round(
+        |       s[CAST(floor(j*64.0/48.0) AS INT) + 1] * (1.0 - (j*64.0/48.0 - CAST(floor(j*64.0/48.0) AS INT))) +
+        |       s[least(CAST(floor(j*64.0/48.0) AS INT) + 1, len(s) - 1) + 1] * (j*64.0/48.0 - CAST(floor(j*64.0/48.0) AS INT)),
+        |     4) * 10000) AS BIGINT)
+        |     for j in range(0, len(s) * 48 // 64)], ',') || ']' AS resampled
+        |FROM w""".stripMargin))((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("w"))
       emb.select(
@@ -772,23 +977,71 @@ object SparkEntry {
         vecFixed(graft.audio.AudioOps.resampleLinear(col("w"), 64, 48), 4).as("resampled"))
     }),
     // ---- deduplication suite (training-data pipeline ops) ----
-    "q_dedup_exact" -> ((s, dir) =>
+    Query("q_dedup_exact", Some(
+      """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_dups
+        |FROM documents GROUP BY text""".stripMargin))((s, dir) =>
       graft.dedup.Dedup.exact(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")),
-    "q_minhash_sig" -> ((s, dir) =>
+    Query("q_minhash_sig", Some(
+      s"""WITH sh AS ($ShinglesCte),
+         |e AS (SELECT doc_id, unnest(shs) AS s FROM sh),
+         |m AS (SELECT doc_id, seed, min(md5(seed::VARCHAR || ':' || s)) AS mh
+         |      FROM e, (SELECT unnest(range(0, 16)) AS seed) GROUP BY doc_id, seed)
+         |SELECT doc_id, array_to_string(list(mh ORDER BY seed), '|') AS sig FROM m GROUP BY doc_id""".stripMargin))((s, dir) =>
       graft.dedup.Dedup.minhashSigDf(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", 3, 16)
         .select(col("doc").as("doc_id"), concat_ws("|", col("sig")).as("sig"))),
-    "q_minhash_lsh" -> ((s, dir) => minhashPairGraph(s, dir)),
-    "q_ngram_jaccard" -> ((s, dir) =>
+    Query("q_minhash_lsh", Some(
+      s"""WITH $MinhashPairsCte
+         |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin))(ownPairGraph),
+    Query("q_ngram_jaccard", Some(
+      s"""WITH sh AS ($ShinglesCte),
+         |e AS (SELECT doc_id, unnest(shs) AS s FROM sh),
+         |keep AS (SELECT s FROM e GROUP BY s HAVING count(*) <= 100),
+         |ek AS (SELECT doc_id, s FROM e JOIN keep USING (s)),
+         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |         FROM ek a JOIN ek b ON a.s = b.s AND a.doc_id < b.doc_id)
+         |SELECT doc_a, doc_b,
+         |  round(len(list_intersect(x.shs, y.shs))::DOUBLE /
+         |        (len(x.shs) + len(y.shs) - len(list_intersect(x.shs, y.shs))), 4) AS jaccard
+         |FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
+         |WHERE len(list_intersect(x.shs, y.shs))::DOUBLE /
+         |      (len(x.shs) + len(y.shs) - len(list_intersect(x.shs, y.shs))) >= 0.5""".stripMargin))((s, dir) =>
       graft.dedup.Dedup.ngramJaccard(docsSpread(s, dir), "doc_id", "text")),
-    "q_simhash" -> ((s, dir) =>
+    Query("q_simhash", Some(
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS t FROM documents),
+        |th AS (
+        |  SELECT doc_id, t,
+        |    list_sum([(strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)::BIGINT << (4*(12 - j))
+        |              for j in range(1, 13)]) AS h
+        |  FROM tok),
+        |bits AS (
+        |  SELECT doc_id, i, sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS s
+        |  FROM th, (SELECT unnest(range(0, 48)) AS i) GROUP BY doc_id, i)
+        |SELECT doc_id, bit_or(CASE WHEN s > 0 THEN 1::BIGINT << i ELSE 0::BIGINT END) AS simhash
+        |FROM bits GROUP BY doc_id""".stripMargin))((s, dir) =>
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), graft.dedup.Dedup.simhash(col("text")).as("simhash"))),
     // canonicalization: connected components over the MinHash-LSH pair
     // graph (a~b, b~c ⇒ one duplicate cluster keyed by its min doc id) —
     // min-label propagation, one shuffle join per iteration
-    "q_dedup_components" -> ((s, dir) =>
-      graft.dedup.Dedup.components(minhashPairGraph(s, dir), "doc_a", "doc_b")),
-    "q_cosine_near_dup" -> ((s, dir) => {
+    Query("q_dedup_components", Some(
+      // Transitive closure of the SAME pair graph via a recursive CTE: reach
+      // = every (vertex, reachable vertex); min reachable id per vertex IS
+      // the component label the Spark min-label propagation converges to.
+      s"""WITH RECURSIVE $MinhashPairsCte,
+         |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
+         |          UNION SELECT doc_b, doc_a FROM pairs),
+         |reach(id, r) AS (
+         |  SELECT s, s FROM edges
+         |  UNION
+         |  SELECT e2.t, reach.r FROM reach JOIN edges e2 ON e2.s = reach.id)
+         |SELECT id AS doc_id, min(r) AS comp FROM reach GROUP BY id""".stripMargin))((s, dir) =>
+      graft.dedup.Dedup.components(memoPairGraph(s, dir), "doc_a", "doc_b")),
+    Query("q_cosine_near_dup", Some(
+      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cos
+        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.45""".stripMargin))((s, dir) => {
       // Exact all-pairs form is ORACLE duty only (the scale path is
       // Similarity.annLsh). Bench caps the O(n²) input via a system property
       // so it never dominates the time budget; Verify leaves it unset.
@@ -799,16 +1052,45 @@ object SparkEntry {
     }),
     // ---- similarity search ----
     // exact brute-force top-k
-    "q_ann_topk" -> ((s, dir) => annBrute(s, dir)),
+    Query("q_ann_topk", Some(
+      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+        |           FROM embeddings WHERE vec_id % 50 = 0),
+        |s AS (SELECT q.query_id, e.vec_id AS nn_id,
+        |        round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS cos
+        |      FROM embeddings e, q WHERE e.vec_id <> q.query_id),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nn_id) AS rank FROM s)
+        |SELECT query_id, rank, nn_id, round(cos, 4) AS cos FROM r WHERE rank <= 5""".stripMargin))((s, dir) => annBrute(s, dir)),
     // approximate (LSH-bucketed) — per-row output is approximate, but see
     // q_ann_recall for the hash-checked recall of exactly this operator.
-    "q_ann_lsh" -> ((s, dir) => annApprox(s, dir)),
+    Query("q_ann_lsh", Some(
+      // The per-row ANN output itself (round-5): every stage of annLsh is
+      // md5-deterministic, so "approximate" never meant "unoracleable" — the
+      // same CTE pipeline hashes row-for-row against the Spark operator.
+      s"""WITH $AnnLshCte
+         |SELECT query_id, rank, nn_id, round(cos, 4) AS cos
+         |FROM ranked WHERE rank <= 5""".stripMargin))((s, dir) => annApprox(s, dir)),
     // Driver-visible ANN recall (round-3 directive #5): annLsh ∩ bruteTopK
     // over the same query set in ONE plan. The hyperplane signs are
     // md5-derived (Similarity.sgn), so the DuckDB oracle recomputes BOTH
     // sides — the single output row is fully hash-checkable, replacing the
     // last meaningful rows-only blind spot.
-    "q_ann_recall" -> ((s, dir) => {
+    Query("q_ann_recall", Some(
+      // Full DuckDB re-computation of the LSH ANN pipeline: the md5-derived
+      // sign matrix, projections, bucket signatures, candidate join, top-k,
+      // and recall vs brute — deterministic, so the one output row hashes.
+      s"""WITH $AnnLshCte,
+         |brute AS (
+         |  SELECT query_id, nn_id FROM (
+         |    SELECT q.query_id, e.vec_id AS nn_id,
+         |      row_number() OVER (PARTITION BY q.query_id
+         |        ORDER BY round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) DESC,
+         |                 e.vec_id) AS rank
+         |    FROM embeddings e, q WHERE e.vec_id <> q.query_id)
+         |  WHERE rank <= 5),
+         |ann AS (SELECT query_id, nn_id FROM ranked WHERE rank <= 5)
+         |SELECT 5::BIGINT AS k, count(DISTINCT b.query_id) AS n_queries,
+         |  round(count(a.nn_id)::DOUBLE / count(*), 4) AS recall
+         |FROM brute b LEFT JOIN ann a USING (query_id, nn_id)""".stripMargin))((s, dir) => {
       val ann = annApprox(s, dir).select(col("query_id"), col("nn_id"), lit(1L).as("hit"))
       val brute = annBrute(s, dir).select(col("query_id"), col("nn_id"))
       brute
@@ -820,18 +1102,58 @@ object SparkEntry {
         .select(lit(5L).as("k"), col("n_queries"), col("recall"))
     }),
     // ---- text analysis ----
-    "q_lang_id" -> ((s, dir) =>
+    Query("q_lang_id", Some(
+      """WITH h AS (
+        |  SELECT doc_id,
+        |    len([t for t in tk if t IN ('the','a','of','and','is')]) AS hits_en,
+        |    len([t for t in tk if t IN ('der','die','das','und','ist')]) AS hits_de,
+        |    len([t for t in tk if t IN ('el','la','los','de','es')]) AS hits_es,
+        |    len([t for t in tk if t IN ('le','la','les','et','est')]) AS hits_fr,
+        |    len([t for t in tk if t IN ('的','是','了','在','我')]) AS hits_zh
+        |  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS tk FROM documents))
+        |SELECT doc_id, hits_en, hits_de, hits_es, hits_fr, hits_zh,
+        |  CASE WHEN greatest(hits_en, hits_de, hits_es, hits_fr, hits_zh) = 0 THEN 'und'
+        |       WHEN hits_en = greatest(hits_en, hits_de, hits_es, hits_fr, hits_zh) THEN 'en'
+        |       WHEN hits_de = greatest(hits_de, hits_es, hits_fr, hits_zh) THEN 'de'
+        |       WHEN hits_es = greatest(hits_es, hits_fr, hits_zh) THEN 'es'
+        |       WHEN hits_fr = greatest(hits_fr, hits_zh) THEN 'fr'
+        |       ELSE 'zh' END AS pred_lang
+        |FROM h""".stripMargin))((s, dir) =>
       graft.text.TextAnalysis.langId(s.read.parquet(s"$dir/documents.parquet"), "text")
         .select(col("doc_id"), col("hits_en"), col("hits_de"), col("hits_es"),
           col("hits_fr"), col("hits_zh"), col("pred_lang"))),
-    "q_token_count" -> ((s, dir) =>
+    Query("q_token_count", Some(
+      """SELECT doc_id,
+        |  len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_ws_tokens,
+        |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_word_tokens
+        |FROM documents""".stripMargin))((s, dir) =>
       graft.text.TextAnalysis.tokenCounts(s.read.parquet(s"$dir/documents.parquet"), "text")
         .select(col("doc_id"), col("n_ws_tokens"), col("n_word_tokens"))),
-    "q_tfidf" -> ((s, dir) =>
+    Query("q_tfidf", Some(
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
+        |  FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+        |dfx AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+        |n AS (SELECT count(*) AS n_docs FROM documents)
+        |SELECT tf.doc_id AS doc_id, tf.term AS term, tf.tf AS tf, dfx.df AS df,
+        |  round(tf.tf * (ln((n.n_docs + 1.0) / (dfx.df + 1.0)) + 1.0), 4) AS tfidf
+        |FROM tf JOIN dfx USING (term), n""".stripMargin))((s, dir) =>
       graft.text.TextAnalysis.tfidf(s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")),
     // deterministic hash split: seed-stable train/val/test assignment by
     // key (md5 buckets — rand()/TABLESAMPLE are partition/order-dependent)
-    "q_hash_split" -> ((s, dir) => {
+    Query("q_hash_split", Some(
+      """WITH b AS (
+        |  SELECT doc_id,
+        |    list_sum([(strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), j, 1)) - 1)::BIGINT
+        |              << (4*(8 - j)) for j in range(1, 9)]) % 10000 AS bucket
+        |  FROM documents)
+        |-- CAST: DuckDB list_sum yields HUGEINT → pandas float64; Spark side is int64
+        |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
+        |  CASE WHEN bucket < 8000 THEN 'train'
+        |       WHEN bucket < 9000 THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM b""".stripMargin))((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
       docs.select(
         col("doc_id"),
@@ -839,15 +1161,42 @@ object SparkEntry {
         Sampling.assignSplit(
           col("doc_id"), Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).as("split"))
     }),
-    "q_quality" -> ((s, dir) =>
+    Query("q_quality", Some(
+      """WITH b AS (
+        |  SELECT doc_id,
+        |    len(regexp_split_to_array(lower(trim(text)), '\s+'))::DOUBLE AS n_tok,
+        |    length(lower(text))::DOUBLE AS n_char,
+        |    (length(lower(text)) - length(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')))::DOUBLE AS punct,
+        |    len([t for t in regexp_split_to_array(lower(trim(text)), '\s+')
+        |         if t IN ('the','a','of','and','is')])::DOUBLE AS stop
+        |  FROM documents)
+        |SELECT doc_id, n_tok::BIGINT AS n_tokens,
+        |  round(punct / n_char, 4) AS punct_ratio,
+        |  round(stop / n_tok, 4) AS stopword_ratio,
+        |  round(
+        |    (CASE WHEN n_char >= 50 AND n_char <= 10000 THEN 1.0 ELSE 0.5 END) * 0.3 +
+        |    (CASE WHEN (n_char - (n_tok - 1)) / n_tok >= 2 AND (n_char - (n_tok - 1)) / n_tok <= 12
+        |          THEN 1.0 ELSE 0.5 END) * 0.2 +
+        |    (1.0 - least(punct / n_char * 5, 1.0)) * 0.25 +
+        |    least(stop / n_tok * 4, 1.0) * 0.25, 4) AS quality
+        |FROM b""".stripMargin))((s, dir) =>
       graft.text.TextAnalysis.qualityScore(s.read.parquet(s"$dir/documents.parquet"), "text")
         .select(col("doc_id"), col("n_tokens"), col("punct_ratio"),
           col("stopword_ratio"), col("quality"))),
-    "q_fingerprint" -> ((s, dir) =>
+    Query("q_fingerprint", Some(
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(tk) < 8 THEN [] ELSE
+        |    [concat_ws(' ', tk[i], tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5], tk[i+6], tk[i+7])
+        |     for i in range(1, len(tk) - 6)] END AS shs
+        |  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS tk FROM documents))
+        |SELECT doc_id, list_min([md5(s) for s in shs]) AS fingerprint FROM sh""".stripMargin))((s, dir) =>
       graft.text.TextAnalysis.fingerprint(s.read.parquet(s"$dir/documents.parquet"), "text")
         .select(col("doc_id"), col("fingerprint"))),
     // ---- streaming: tumbling event-time agg == batch semantics (oracle) ----
-    "q_streaming_tumbling" -> ((s, dir) =>
+    Query("q_streaming_tumbling", Some(
+      """SELECT user_id, (epoch_us(ts) // 86400000000) * 86400000000 AS win_start_us,
+        |  count(*) AS n, round(avg(value), 4) AS avg_v
+        |FROM events GROUP BY 1, 2""".stripMargin))((s, dir) =>
       runStream(s, dir, "q_streaming_tumbling_sink")(
         graft.streaming.StreamingFeatures.tumblingAgg(_, "1 day", "0 seconds"))
         .select(col("user_id"), col("win_start_us"), col("n"),
@@ -856,7 +1205,19 @@ object SparkEntry {
     //      against the same oracle family as q_session_stats. Complete
     //      mode emits every session of the one micro-batch, whatever the
     //      span of the data ----
-    "q_streaming_session" -> ((s, dir) =>
+    Query("q_streaming_session", Some(
+      """WITH sess AS (
+        |  SELECT user_id, value, epoch_us(ts) AS ts_us,
+        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        |  FROM (
+        |    SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+        |                     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000 THEN 1
+        |              ELSE 0 END AS is_new
+        |    FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)))
+        |SELECT user_id, min(ts_us) AS session_start_us, count(*) AS n_rows,
+        |  round(avg(value), 4) AS avg_value
+        |FROM sess GROUP BY user_id, session_id""".stripMargin))((s, dir) =>
       // gap + 1 µs: session_window merges only while next < last + gap
       // (strict), the batch Sessionize splits only when diff > gap — on
       // integer-microsecond timestamps gap+1µs makes the two identical at
@@ -871,7 +1232,10 @@ object SparkEntry {
           round(col("avg_value"), 4).as("avg_value"))),
     // ---- S4/A5: per-window ordered gather (collect_list sorted by ts) —
     //      the reference's get_clip + vstack as one aggregate ----
-    "q_window_gather" -> ((s, dir) => {
+    Query("q_window_gather", Some(
+      """SELECT user_id, epoch_us(ts) // 86400000000 AS win_id,
+        |  '[' || array_to_string(list(CAST(round(round(value, 4) * 10000) AS BIGINT) ORDER BY ts, event_id), ',') || ']' AS vals
+        |FROM events GROUP BY 1, 2""".stripMargin))((s, dir) => {
       ev(s, dir)
         .groupBy(col("user_id"), floor(col("ts_us") / DayUs).as("win_id"))
         .agg(
@@ -885,13 +1249,18 @@ object SparkEntry {
             lit("]")).as("vals"))
     }),
     // ---- W7: chunk-of-8 grouping (TSM n_segment) ----
-    "q_chunked" -> ((s, dir) => {
+    Query("q_chunked", Some(
+      """SELECT user_id, event_id,
+        |  (row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1) // 8 AS chunk_id
+        |FROM events""".stripMargin))((s, dir) => {
       Windows
         .chunked(ev(s, dir), "user_id", "ts_us", 8, Seq("event_id"))
         .select(col("user_id"), col("event_id"), col("chunk_id"))
     }),
     // ---- S6: JSON scan — dynamic-schema extraction from the props column ----
-    "q_json_props" -> ((s, dir) => {
+    Query("q_json_props", Some(
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+        |FROM events""".stripMargin))((s, dir) => {
       ev(s, dir).select(
         col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -900,7 +1269,7 @@ object SparkEntry {
     //      a fresh dir in two snapshots (simulated kill), returns lineage.
     //      The feature plan is staged ONCE: without it each snapshot's
     //      write + read-back re-ran the image decode UDF over the fixture ----
-    "q_resume_manifest" -> ((s, _) => {
+    Query("q_resume_manifest", None)((s, _) => {
       val out = java.nio.file.Files.createTempDirectory("graft_resume_q").toString
       // decode directly (r8): the job snapshots (entity, ts, vec) only, and
       // `vec` is the codec UDF output untouched by the window stage —
@@ -924,7 +1293,9 @@ object SparkEntry {
     //      and (via the oracle) DuckDB's ground truth; audit_ok asserts the
     //      digest audit found no mismatch (tamper detection is ResumeSpec's
     //      job; this row proves the audit runs clean on real written data) ----
-    "q_resume_audit" -> ((s, dir) => {
+    Query("q_resume_audit", Some(
+      """SELECT user_id, count(*) AS n_manifest, count(*) AS n_recount, true AS audit_ok
+        |FROM events WHERE user_id < 20 GROUP BY user_id""".stripMargin))((s, dir) => {
       val out = java.nio.file.Files.createTempDirectory("graft_audit_q").toString
       val feats = ev(s, dir)
         .where(col("user_id") < 20)
@@ -943,195 +1314,32 @@ object SparkEntry {
     })
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = {
-    val asofSql =
-      """SELECT p.user_id AS user_id, epoch_us(p.ts) AS ts_us, p.event_id AS event_id,
-        |       round(p.value, 4) AS purchase_value,
-        |       epoch_us(b.ts) AS click_ts_us, round(b.value, 4) AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value FROM events
-        |                WHERE event_type = 'click' GROUP BY user_id, ts) b
-        |  ON p.user_id = b.user_id AND p.ts >= b.ts""".stripMargin
-    val locfSql =
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |  round(last_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS locf_value
-        |FROM events""".stripMargin
-    Map(
-      "q_asof_join" -> asofSql,
-      "q_asof_merge" -> asofSql,
-      "q_asof_stateful" ->
-        """SELECT p.user_id AS user_id, epoch_us(p.ts) AS ts_us, p.event_id AS event_id,
-          |       epoch_us(b.ts) AS click_ts_us, round(b.value, 4) AS click_value
-          |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-          |ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value FROM events
-          |                WHERE event_type = 'click' GROUP BY user_id, ts) b
-          |  ON p.user_id = b.user_id AND p.ts >= b.ts""".stripMargin,
-      "q_asof_tolerance" ->
-        """SELECT p.user_id AS user_id, epoch_us(p.ts) AS ts_us, p.event_id AS event_id,
-          |  CASE WHEN epoch_us(p.ts) - epoch_us(b.ts) <= 3600000000
-          |       THEN epoch_us(b.ts) END AS click_ts_us,
-          |  CASE WHEN epoch_us(p.ts) - epoch_us(b.ts) <= 3600000000
-          |       THEN round(b.value, 4) END AS click_value
-          |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-          |ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value FROM events
-          |                WHERE event_type = 'click' GROUP BY user_id, ts) b
-          |  ON p.user_id = b.user_id AND p.ts >= b.ts""".stripMargin,
-      "q_range_window" ->
-        """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-          |  round(avg(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-          |        RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 4) AS range_avg
-          |FROM events""".stripMargin,
-      "q_bfill" ->
-        """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-          |  round(first_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
-          |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 4) AS bfill_value
-          |FROM events""".stripMargin,
-      "q_leakage_audit" ->
-        """WITH j AS (
-          |  SELECT p.ts_us AS ts_us, b.src_ts AS src_ts FROM
-          |    (SELECT user_id, epoch_us(ts) AS ts_us, ts FROM events WHERE event_type = 'purchase') p
-          |  ASOF LEFT JOIN
-          |    (SELECT user_id, ts, epoch_us(ts) AS src_ts FROM events WHERE event_type = 'click') b
-          |  ON p.user_id = b.user_id AND p.ts >= b.ts)
-          |SELECT count(*) AS n_rows, count(src_ts) AS n_matched,
-          |  CAST(sum(CASE WHEN src_ts IS NOT NULL AND src_ts > ts_us THEN 1 ELSE 0 END) AS BIGINT) AS n_leaked,
-          |  max(CASE WHEN src_ts IS NOT NULL AND src_ts > ts_us THEN src_ts - ts_us END) AS max_lead
-          |FROM j""".stripMargin,
-      "q_locf_backfill" -> locfSql,
-      "q_locf_bucketed" -> locfSql,
-      "q_locf_stateful" -> locfSql,
-      "q_lag_lead" ->
-        """SELECT user_id, event_id, epoch_us(ts) AS ts_us, round(value, 4) AS v,
-          |  round(lag(value) OVER w, 4) AS lag_v,
-          |  round(lead(value) OVER w, 4) AS lead_v,
-          |  round(value - lag(value) OVER w, 4) AS delta_v
-          |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin,
-      "q_sessionize" ->
-        """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-          |  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-          |FROM (
-          |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-          |                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000 THEN 1
-          |            ELSE 0 END AS is_new
-          |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))""".stripMargin,
-      "q_session_stats" ->
-        """WITH sess AS (
-          |  SELECT user_id, value, epoch_us(ts) AS ts_us,
-          |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-          |  FROM (
-          |    SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-          |                     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000 THEN 1
-          |              ELSE 0 END AS is_new
-          |    FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)))
-          |SELECT user_id, session_id, count(*) AS n_rows,
-          |  min(ts_us) AS session_start, max(ts_us) AS session_end,
-          |  max(ts_us) - min(ts_us) AS duration,
-          |  round(avg(value), 4) AS avg_value
-          |FROM sess GROUP BY user_id, session_id""".stripMargin,
-      "q_tumbling_ceil" -> tumblingTailSql(floorOnly = false),
-      "q_tumbling_floor" -> tumblingTailSql(floorOnly = true),
-      "q_image_seconds_ceil" -> imageSecondsSql("ceil"),
-      "q_image_seconds_floor" -> imageSecondsSql("floor"),
-      "q_resume_audit" ->
-        """SELECT user_id, count(*) AS n_manifest, count(*) AS n_recount, true AS audit_ok
-          |FROM events WHERE user_id < 20 GROUP BY user_id""".stripMargin,
-      "q_tumbling_window" ->
-        """SELECT user_id, epoch_us(ts) // 86400000000 AS win_id,
-          |  count(*) AS n, round(avg(value), 4) AS avg_v
-          |FROM events GROUP BY 1, 2""".stripMargin,
-      "q_sliding_window" ->
-        """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-          |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |                         ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS sliding_avg
-          |FROM events""".stripMargin,
-      "q_percentile" ->
-        """SELECT user_id, epoch_us(ts) // 86400000000 AS win_id, count(*) AS n,
-          |  '[' || array_to_string(
-          |    [CAST(round(round(x, 4) * 10000) AS BIGINT)
-          |     for x in quantile_cont(value, [0.25, 0.5, 0.9])], ',') || ']' AS pcts
-          |FROM events GROUP BY 1, 2""".stripMargin,
-      // this DuckDB build has no width_bucket — spell out the PostgreSQL
-      // semantics (below-range → 0, at-or-above hi → count+1, else
-      // 1-based floor) on the exact bucket boundaries (multiples of 5 are
-      // double-exact, so the two engines cannot disagree at an edge)
-      "q_histogram" ->
-        """SELECT CAST(CASE WHEN value < 0 THEN 0
-          |            WHEN value >= 100 THEN 21
-          |            ELSE floor(value / 5) + 1 END AS BIGINT) AS bucket,
-          |  count(*) AS n, round(avg(value), 4) AS avg_v
-          |FROM events GROUP BY 1""".stripMargin,
-      "q_subsample" ->
-        """WITH g AS (
-          |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-          |    epoch_us(ts) // 86400000000 AS win_id,
-          |    row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 86400000000
-          |                       ORDER BY ts, event_id) - 1 AS rn,
-          |    count(*) OVER (PARTITION BY user_id, epoch_us(ts) // 86400000000) AS n
-          |  FROM events)
-          |SELECT user_id, win_id, event_id, ts_us FROM g
-          |WHERE rn IN (CAST(round(0 * (n - 1) / 3.0) AS BIGINT),
-          |             CAST(round(1 * (n - 1) / 3.0) AS BIGINT),
-          |             CAST(round(2 * (n - 1) / 3.0) AS BIGINT),
-          |             CAST(round(3 * (n - 1) / 3.0) AS BIGINT))""".stripMargin,
-      "q_interval_join" ->
-        """SELECT v.event_id AS event_id, count(c.ts) AS n_clicks
-          |FROM (SELECT * FROM events WHERE event_type = 'view') v
-          |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-          |  ON v.user_id = c.user_id AND c.ts >= v.ts - INTERVAL 1 HOUR AND c.ts < v.ts
-          |GROUP BY v.event_id""".stripMargin,
-      "q_anti_join" ->
-        """SELECT user_id, count(*) AS n FROM events e
-          |WHERE NOT EXISTS (SELECT 1 FROM events x
-          |                  WHERE x.user_id = e.user_id
-          |                    AND x.event_type = 'error' AND x.value > 90)
-          |GROUP BY user_id""".stripMargin,
-      "q_vec_avg" ->
-        """WITH e AS (
-          |  SELECT label, unnest(embedding)::DOUBLE AS v,
-          |         unnest(range(1, len(embedding) + 1)) AS pos
-          |  FROM embeddings),
-          |a AS (SELECT label, pos, avg(v) AS m FROM e GROUP BY label, pos),
-          |c AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label)
-          |SELECT a.label AS label,
-          |  '[' || array_to_string(list(CAST(round(round(m, 4) * 10000) AS BIGINT) ORDER BY pos), ',') || ']' AS vec_avg,
-          |  max(c.n) AS n
-          |FROM a JOIN c USING (label) GROUP BY a.label""".stripMargin,
-      "q1_agg" ->
-        """SELECT l_returnflag, l_linestatus,
-          |  round(sum(l_quantity), 2) AS sum_qty,
-          |  round(sum(l_extendedprice), 2) AS sum_base,
-          |  round(avg(l_discount), 6) AS avg_disc,
-          |  count(*) AS n
-          |FROM lineitem GROUP BY 1, 2""".stripMargin,
-      "q_join_agg" ->
-        """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-          |  count(*) AS n
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |GROUP BY n_name""".stripMargin,
-      "q_topk" ->
-        """SELECT o_orderkey, round(o_totalprice, 2) AS price
-          |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin
-    ) ++ dedupOracles
-  }
+  /** Each query's body by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** DuckDB twin of [[tumblingTail]]: windows of 7 on the per-label dense
-    * rank, per-position mean, fixed-point vector string; `floorOnly` drops
-    * partial tails (win_n < 7) exactly like Windows.FloorTail. */
-  /** Shared body of q_image_seconds_ceil/floor: decode frames → export the
-    * (entity, ts, dvec) vectors to a per-mode rendezvous parquet → compute
-    * the per-second tumbling vecAvg over the READ-BACK files (so the oracle
-    * and the query window exactly the same data). Identical math to
-    * FeaturePipeline.secondFeatures; the export is the only addition. */
+  /** Each SQL-expressible query's DuckDB oracle by name. */
+  def oracleSql: Map[String, String] = registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** DuckDB oracle of the click→purchase as-of leaves q_asof_join and
+    * q_asof_merge. */
+  private def asofSql: String =
+    """SELECT p.user_id AS user_id, epoch_us(p.ts) AS ts_us, p.event_id AS event_id,
+      |       round(p.value, 4) AS purchase_value,
+      |       epoch_us(b.ts) AS click_ts_us, round(b.value, 4) AS click_value
+      |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value FROM events
+      |                WHERE event_type = 'click' GROUP BY user_id, ts) b
+      |  ON p.user_id = b.user_id AND p.ts >= b.ts""".stripMargin
+
+  /** DuckDB oracle of the three LOCF leaves (plain, bucketed, stateful). */
+  private def locfSql: String =
+    """SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+      |  round(last_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
+      |    OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS locf_value
+      |FROM events""".stripMargin
+
   /** Decoded (entity, ts, dvec) frame vectors of the 8×256 synthetic table
     * — the shared input of BOTH q_image_seconds modes. The decode UDF
     * output is selected DIRECTLY (r8): `frameFeatures(...).select(entity,
@@ -1145,6 +1353,11 @@ object SparkEntry {
         graft.pipeline.FeaturePipeline.CropTo))
       .select(col("entity"), col("ts"), col("vec").cast("array<double>").as("dvec"))
 
+  /** Shared body of q_image_seconds_ceil/floor: decode frames → export the
+    * (entity, ts, dvec) vectors to a per-mode rendezvous parquet → compute
+    * the per-second tumbling vecAvg over the READ-BACK files (so the oracle
+    * and the query window exactly the same data). Identical math to
+    * FeaturePipeline.secondFeatures; the export is the only addition. */
   private def imageSeconds(s: SparkSession, tail: Windows.TailMode): DataFrame = {
     val mode = if (tail == Windows.CeilTail) "ceil" else "floor"
     val base = s"$scratchRoot/q_image_seconds_$mode"
@@ -1181,6 +1394,9 @@ object SparkEntry {
        |FROM a JOIN c USING (entity, sec) GROUP BY a.entity, a.sec $guard""".stripMargin
   }
 
+  /** DuckDB twin of [[tumblingTail]]: windows of 7 on the per-label dense
+    * rank, per-position mean, fixed-point vector string; `floorOnly` drops
+    * partial tails (win_n < 7) exactly like Windows.FloorTail. */
   private def tumblingTailSql(floorOnly: Boolean): String = {
     val guard = if (floorOnly) "HAVING max(c.win_n) = 7" else ""
     s"""WITH r AS (
@@ -1258,261 +1474,4 @@ object SparkEntry {
        |  WHERE len(list_intersect(x.shs, y.shs))::DOUBLE /
        |        (len(x.shs) + len(y.shs) - len(list_intersect(x.shs, y.shs))) >= 0.5)""".stripMargin
 
-  private def dedupOracles: Map[String, String] = Map(
-    "q_grayscale" ->
-      """WITH l AS (
-        |  SELECT vec_id,
-        |    [0.299::DOUBLE * embedding[i]::DOUBLE + 0.587::DOUBLE * embedding[i+16]::DOUBLE
-        |       + 0.114::DOUBLE * embedding[i+32]::DOUBLE for i in range(1, 17)] AS luma
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |  '[' || array_to_string([CAST(round(round(x, 4) * 10000) AS BIGINT) for x in luma], ',') || ']' AS luma,
-        |  round(list_sum(luma) / 16, 4) AS mean_luma
-        |FROM l""".stripMargin,
-    "q_audio_resample" ->
-      """WITH w AS (SELECT vec_id, embedding::DOUBLE[] AS s FROM embeddings)
-        |SELECT vec_id,
-        |  '[' || array_to_string(
-        |    [CAST(round(round(
-        |       s[CAST(floor(j*64.0/48.0) AS INT) + 1] * (1.0 - (j*64.0/48.0 - CAST(floor(j*64.0/48.0) AS INT))) +
-        |       s[least(CAST(floor(j*64.0/48.0) AS INT) + 1, len(s) - 1) + 1] * (j*64.0/48.0 - CAST(floor(j*64.0/48.0) AS INT)),
-        |     4) * 10000) AS BIGINT)
-        |     for j in range(0, len(s) * 48 // 64)], ',') || ']' AS resampled
-        |FROM w""".stripMargin,
-    "q_audio_roundtrip" ->
-      """WITH w AS (
-        |  SELECT vec_id, [(vec_id*31 + i*17) % 32768 - 16384 for i in range(0, 1100)] AS s
-        |  FROM embeddings)
-        |SELECT vec_id, len(s)::BIGINT AS n_samples,
-        |  list_sum(s)::BIGINT AS sum_s,
-        |  list_sum([x*x for x in s])::BIGINT AS sum_sq,
-        |  16000::BIGINT AS sr
-        |FROM w""".stripMargin,
-    "q_audio_clip_stats" ->
-      """WITH w AS (
-        |  SELECT vec_id, [(vec_id*31 + i*17) % 32768 - 16384 for i in range(0, 1100)] AS s
-        |  FROM embeddings),
-        |c AS (
-        |  SELECT vec_id, unnest(range(0, len(s) // 256)) AS clip_idx, s FROM w)
-        |SELECT vec_id, clip_idx::INT AS clip_idx, 256::BIGINT AS n,
-        |  list_sum(list_slice(s, clip_idx*256 + 1, clip_idx*256 + 256))::BIGINT AS sum_s,
-        |  list_sum([x*x for x in list_slice(s, clip_idx*256 + 1, clip_idx*256 + 256)])::BIGINT AS sum_sq
-        |FROM c""".stripMargin,
-    "q_depth_roundtrip" ->
-      """SELECT vec_id,
-        |  '[' || array_to_string(
-        |    [CAST(round(least(greatest(x::DOUBLE, 0.0), 0.25) / 0.25 * 65535) AS BIGINT)
-        |     for x in embedding], ',') || ']' AS samples
-        |FROM embeddings""".stripMargin,
-    "q_depth_clamp" ->
-      """SELECT vec_id,
-        |  '[' || array_to_string(
-        |    [CAST(round(round(least(greatest(x::DOUBLE, 0.0), 0.25) / 0.25, 4) * 10000) AS BIGINT)
-        |     for x in embedding], ',') || ']' AS clamped,
-        |  len([x for x in embedding if x < 0.0 OR x > 0.25]) AS n_clipped
-        |FROM embeddings""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM documents GROUP BY text""".stripMargin,
-    "q_minhash_sig" ->
-      s"""WITH sh AS ($ShinglesCte),
-         |e AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-         |m AS (SELECT doc_id, seed, min(md5(seed::VARCHAR || ':' || s)) AS mh
-         |      FROM e, (SELECT unnest(range(0, 16)) AS seed) GROUP BY doc_id, seed)
-         |SELECT doc_id, array_to_string(list(mh ORDER BY seed), '|') AS sig FROM m GROUP BY doc_id""".stripMargin,
-    "q_minhash_lsh" ->
-      s"""WITH $MinhashPairsCte
-         |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin,
-    // Transitive closure of the SAME pair graph via a recursive CTE: reach
-    // = every (vertex, reachable vertex); min reachable id per vertex IS
-    // the component label the Spark min-label propagation converges to.
-    "q_dedup_components" ->
-      s"""WITH RECURSIVE $MinhashPairsCte,
-         |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT s, s FROM edges
-         |  UNION
-         |  SELECT e2.t, reach.r FROM reach JOIN edges e2 ON e2.s = reach.id)
-         |SELECT id AS doc_id, min(r) AS comp FROM reach GROUP BY id""".stripMargin,
-    "q_ngram_jaccard" ->
-      s"""WITH sh AS ($ShinglesCte),
-         |e AS (SELECT doc_id, unnest(shs) AS s FROM sh),
-         |keep AS (SELECT s FROM e GROUP BY s HAVING count(*) <= 100),
-         |ek AS (SELECT doc_id, s FROM e JOIN keep USING (s)),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM ek a JOIN ek b ON a.s = b.s AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b,
-         |  round(len(list_intersect(x.shs, y.shs))::DOUBLE /
-         |        (len(x.shs) + len(y.shs) - len(list_intersect(x.shs, y.shs))), 4) AS jaccard
-         |FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
-         |WHERE len(list_intersect(x.shs, y.shs))::DOUBLE /
-         |      (len(x.shs) + len(y.shs) - len(list_intersect(x.shs, y.shs))) >= 0.5""".stripMargin,
-    "q_simhash" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS t FROM documents),
-        |th AS (
-        |  SELECT doc_id, t,
-        |    list_sum([(strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1)::BIGINT << (4*(12 - j))
-        |              for j in range(1, 13)]) AS h
-        |  FROM tok),
-        |bits AS (
-        |  SELECT doc_id, i, sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM th, (SELECT unnest(range(0, 48)) AS i) GROUP BY doc_id, i)
-        |SELECT doc_id, bit_or(CASE WHEN s > 0 THEN 1::BIGINT << i ELSE 0::BIGINT END) AS simhash
-        |FROM bits GROUP BY doc_id""".stripMargin,
-    "q_cosine_near_dup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cos
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.45""".stripMargin,
-    // Full DuckDB re-computation of the LSH ANN pipeline: the md5-derived
-    // sign matrix, projections, bucket signatures, candidate join, top-k,
-    // and recall vs brute — deterministic, so the one output row hashes.
-    "q_ann_recall" ->
-      s"""WITH $AnnLshCte,
-        |brute AS (
-        |  SELECT query_id, nn_id FROM (
-        |    SELECT q.query_id, e.vec_id AS nn_id,
-        |      row_number() OVER (PARTITION BY q.query_id
-        |        ORDER BY round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) DESC,
-        |                 e.vec_id) AS rank
-        |    FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-        |  WHERE rank <= 5),
-        |ann AS (SELECT query_id, nn_id FROM ranked WHERE rank <= 5)
-        |SELECT 5::BIGINT AS k, count(DISTINCT b.query_id) AS n_queries,
-        |  round(count(a.nn_id)::DOUBLE / count(*), 4) AS recall
-        |FROM brute b LEFT JOIN ann a USING (query_id, nn_id)""".stripMargin,
-    // The per-row ANN output itself (round-5): every stage of annLsh is
-    // md5-deterministic, so "approximate" never meant "unoracleable" — the
-    // same CTE pipeline hashes row-for-row against the Spark operator.
-    "q_ann_lsh" ->
-      s"""WITH $AnnLshCte
-        |SELECT query_id, rank, nn_id, round(cos, 4) AS cos
-        |FROM ranked WHERE rank <= 5""".stripMargin,
-    // The flagship's join/window math over the exported synthetic meta
-    // tables (q_image_meta writes them before computing; same files here).
-    "q_image_meta" ->
-      s"""WITH f AS (SELECT * FROM read_parquet('$scratchRoot/q_image_meta/frames/*.parquet')),
-        |pr AS (SELECT * FROM read_parquet('$scratchRoot/q_image_meta/probes/*.parquet')),
-        |w AS (
-        |  SELECT entity, ts,
-        |    last_value(regexp_replace(caption, '#C C', 'actor', 'g') IGNORE NULLS)
-        |      OVER (PARTITION BY entity ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f_caption,
-        |    CAST(sum(is_new) OVER (PARTITION BY entity ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f_session
-        |  FROM (SELECT *, CASE WHEN lag(ts) OVER v IS NULL
-        |                         OR ts - lag(ts) OVER v > 8 THEN 1 ELSE 0 END AS is_new
-        |        FROM f WINDOW v AS (PARTITION BY entity ORDER BY ts)))
-        |SELECT pr.entity AS entity, pr.asOfTs AS as_of_ts, w.ts AS src_ts,
-        |       w.f_caption AS f_caption, w.f_session AS f_session
-        |FROM pr ASOF LEFT JOIN w ON pr.entity = w.entity AND pr.asOfTs >= w.ts""".stripMargin,
-    "q_ann_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |           FROM embeddings WHERE vec_id % 50 = 0),
-        |s AS (SELECT q.query_id, e.vec_id AS nn_id,
-        |        round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS cos
-        |      FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nn_id) AS rank FROM s)
-        |SELECT query_id, rank, nn_id, round(cos, 4) AS cos FROM r WHERE rank <= 5""".stripMargin,
-    "q_lang_id" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    len([t for t in tk if t IN ('the','a','of','and','is')]) AS hits_en,
-        |    len([t for t in tk if t IN ('der','die','das','und','ist')]) AS hits_de,
-        |    len([t for t in tk if t IN ('el','la','los','de','es')]) AS hits_es,
-        |    len([t for t in tk if t IN ('le','la','les','et','est')]) AS hits_fr,
-        |    len([t for t in tk if t IN ('的','是','了','在','我')]) AS hits_zh
-        |  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS tk FROM documents))
-        |SELECT doc_id, hits_en, hits_de, hits_es, hits_fr, hits_zh,
-        |  CASE WHEN greatest(hits_en, hits_de, hits_es, hits_fr, hits_zh) = 0 THEN 'und'
-        |       WHEN hits_en = greatest(hits_en, hits_de, hits_es, hits_fr, hits_zh) THEN 'en'
-        |       WHEN hits_de = greatest(hits_de, hits_es, hits_fr, hits_zh) THEN 'de'
-        |       WHEN hits_es = greatest(hits_es, hits_fr, hits_zh) THEN 'es'
-        |       WHEN hits_fr = greatest(hits_fr, hits_zh) THEN 'fr'
-        |       ELSE 'zh' END AS pred_lang
-        |FROM h""".stripMargin,
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_ws_tokens,
-        |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_word_tokens
-        |FROM documents""".stripMargin,
-    "q_hash_split" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    list_sum([(strpos('0123456789abcdef', substr(md5(doc_id::VARCHAR), j, 1)) - 1)::BIGINT
-        |              << (4*(8 - j)) for j in range(1, 9)]) % 10000 AS bucket
-        |  FROM documents)
-        |-- CAST: DuckDB list_sum yields HUGEINT → pandas float64; Spark side is int64
-        |SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
-        |  CASE WHEN bucket < 8000 THEN 'train'
-        |       WHEN bucket < 9000 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM b""".stripMargin,
-    "q_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfx AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT tf.doc_id AS doc_id, tf.term AS term, tf.tf AS tf, dfx.df AS df,
-        |  round(tf.tf * (ln((n.n_docs + 1.0) / (dfx.df + 1.0)) + 1.0), 4) AS tfidf
-        |FROM tf JOIN dfx USING (term), n""".stripMargin,
-    "q_quality" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    len(regexp_split_to_array(lower(trim(text)), '\s+'))::DOUBLE AS n_tok,
-        |    length(lower(text))::DOUBLE AS n_char,
-        |    (length(lower(text)) - length(regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g')))::DOUBLE AS punct,
-        |    len([t for t in regexp_split_to_array(lower(trim(text)), '\s+')
-        |         if t IN ('the','a','of','and','is')])::DOUBLE AS stop
-        |  FROM documents)
-        |SELECT doc_id, n_tok::BIGINT AS n_tokens,
-        |  round(punct / n_char, 4) AS punct_ratio,
-        |  round(stop / n_tok, 4) AS stopword_ratio,
-        |  round(
-        |    (CASE WHEN n_char >= 50 AND n_char <= 10000 THEN 1.0 ELSE 0.5 END) * 0.3 +
-        |    (CASE WHEN (n_char - (n_tok - 1)) / n_tok >= 2 AND (n_char - (n_tok - 1)) / n_tok <= 12
-        |          THEN 1.0 ELSE 0.5 END) * 0.2 +
-        |    (1.0 - least(punct / n_char * 5, 1.0)) * 0.25 +
-        |    least(stop / n_tok * 4, 1.0) * 0.25, 4) AS quality
-        |FROM b""".stripMargin,
-    "q_fingerprint" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(tk) < 8 THEN [] ELSE
-        |    [concat_ws(' ', tk[i], tk[i+1], tk[i+2], tk[i+3], tk[i+4], tk[i+5], tk[i+6], tk[i+7])
-        |     for i in range(1, len(tk) - 6)] END AS shs
-        |  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS tk FROM documents))
-        |SELECT doc_id, list_min([md5(s) for s in shs]) AS fingerprint FROM sh""".stripMargin,
-    "q_streaming_session" ->
-      """WITH sess AS (
-        |  SELECT user_id, value, epoch_us(ts) AS ts_us,
-        |    CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM (
-        |    SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |                     OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 21600000000 THEN 1
-        |              ELSE 0 END AS is_new
-        |    FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)))
-        |SELECT user_id, min(ts_us) AS session_start_us, count(*) AS n_rows,
-        |  round(avg(value), 4) AS avg_value
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-    "q_streaming_tumbling" ->
-      """SELECT user_id, (epoch_us(ts) // 86400000000) * 86400000000 AS win_start_us,
-        |  count(*) AS n, round(avg(value), 4) AS avg_v
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_window_gather" ->
-      """SELECT user_id, epoch_us(ts) // 86400000000 AS win_id,
-        |  '[' || array_to_string(list(CAST(round(round(value, 4) * 10000) AS BIGINT) ORDER BY ts, event_id), ',') || ']' AS vals
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_chunked" ->
-      """SELECT user_id, event_id,
-        |  (row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1) // 8 AS chunk_id
-        |FROM events""".stripMargin,
-    "q_json_props" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events""".stripMargin
-  )
 }

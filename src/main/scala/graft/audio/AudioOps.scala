@@ -43,10 +43,6 @@ object AudioOps {
     aggregate(clip, lit(0L), (a, x) => a + x),
     aggregate(clip, lit(0L), (a, x) => a + x.cast("long") * x))
 
-  /** RMS in float domain (engine-facing convenience). */
-  def rms(clip: Column): Column =
-    sqrt(aggregate(clip, lit(0.0), (a, x) => a + x * x) / size(clip))
-
   /** Linear-interpolation resample origSr → targetSr (reference S7:
     * `torchaudio.functional.resample(orig_freq, 16000)`, here the
     * deterministic linear kernel). Output length = floor(n·target/orig);

@@ -435,10 +435,6 @@ object ImageCodec {
   def imageFeatures(resizeTo: Int, cropTo: Int): UserDefinedFunction =
     udf((bytes: Array[Byte]) => Option(pipeline(bytes, resizeTo, cropTo)).map(_.toSeq))
 
-  /** Decoded [0,1] CHW pixels (for parity/PSNR tests). */
-  val decodePixels: UserDefinedFunction =
-    udf((bytes: Array[Byte]) => Option(decode(bytes)).map(_.toSeq))
-
   def imageFeaturesCol(bytes: Column, resizeTo: Int, cropTo: Int): Column =
     imageFeatures(resizeTo, cropTo)(bytes)
 

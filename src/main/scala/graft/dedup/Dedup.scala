@@ -73,16 +73,6 @@ object Dedup {
       .groupBy(md5(col(textCol)).as("h"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** k MinHash values: sig[s] = min over shingles of md5(s || ':' || shingle).
-    * Lexicographic min of lowercase hex == numeric min of the 128-bit hash,
-    * identical in any engine. Computed per-row, no shuffle. */
-  def minhashSignature(text: Column, shingleN: Int, k: Int): Column = {
-    val sh = shingles(text, shingleN)
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      s => array_min(transform(sh, x => md5(concat(s.cast("string"), lit(":"), x)))))
-  }
-
   /** LSH band hashes: band b = md5 of the '|'-joined minhashes in rows
     * [b*r, (b+1)*r). Docs sharing any band hash are candidate near-dups
     * (threshold ≈ (1/bands)^(1/rows)). */
@@ -254,7 +244,7 @@ object Dedup {
     * corrected by the hot-array intersection, so every emitted J value is
     * exact. The guard affects candidate recall only — a pair is missed iff
     * EVERY shared shingle exceeds maxDf, i.e. the pair is pure boilerplate.
-    * `maxDf <= 0` disables the guard. */
+    * `maxDf` must be positive. */
   def ngramJaccard(
       docs: DataFrame,
       idCol: String,
@@ -262,20 +252,20 @@ object Dedup {
       shingleN: Int = 3,
       tau: Double = 0.5,
       maxDf: Long = 100L): DataFrame = {
+    require(maxDf > 0, s"maxDf must be positive, got $maxDf")
     // Materialize the shingle relation and the inverted index once: they
-    // feed the df-guard aggregation, both sides of the candidate self-join,
-    // the hot-correction semi/anti joins and the size lookups — without
+    // feed the df-guard aggregation, the posting lists, the hot-correction
+    // semi/anti joins and the size lookups — without
     // staging each consumer re-runs the shingle UDF over the corpus
     // (same no-self-join-CSE disease as minhashLsh).
     val withSh = Staging.stage(shingleDf(docs, idCol, textCol, shingleN))
     val sizes = withSh.select(col("doc"), size(col("sh")).as("sz"))
-    val inv0 = withSh.select(col("doc"), explode(col("sh")).as("s"))
-    // Guarded path (the default and the scale path, r8): the df guard stays
-    // a COUNT aggregation (a hot boilerplate shingle's posting list must
-    // never be collected into one row — at 10^12 docs that single row is an
-    // OOM; counts are bounded regardless of df). The hot set is tiny by
-    // definition, so dropping it from the index is a broadcast anti-join
-    // (no extra index shuffle). The now provably bounded COLD posting lists
+    val invS = Staging.stage(withSh.select(col("doc"), explode(col("sh")).as("s")))
+    // The df guard stays a COUNT aggregation (a hot boilerplate shingle's
+    // posting list must never be collected into one row — at 10^12 docs
+    // that single row is an OOM; counts are bounded regardless of df). The
+    // hot set is tiny by definition, so dropping it from the index is a
+    // broadcast anti-join (no extra index shuffle). The now provably bounded COLD posting lists
     // (≤ maxDf docs each) are then built by ONE groupBy(s) and expanded to
     // canonicalized pairs in-row (`least/greatest`, ≤ maxDf²/2 structs per
     // shingle) + one groupBy(pair) — replacing the r7 sort-merge self-join
@@ -283,57 +273,36 @@ object Dedup {
     // and no sorts, identical pair rows (guide §2.3/§2.4: the pair counts
     // partial-aggregate map-side either way, but nothing is sorted and the
     // index crosses the wire once). collect_list order cannot affect the
-    // emitted set (pairs canonicalized, hot arrays sorted). The unguarded
-    // mode (maxDf <= 0) keeps the join formulation: with no guard there is
-    // no df bound, so no posting list may be materialized per-row at all.
-    val (sharedCold, hotPerDoc) =
-      if (maxDf <= 0) {
-        val inv = Staging.stage(inv0)
-        (
-          inv
-            .select(col("doc").as("doc_a"), col("s"))
-            .join(inv.select(col("doc").as("doc_b"), col("s")), Seq("s"))
-            .where(col("doc_a") < col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(count(lit(1)).as("__shared")),
-          None)
-      } else {
-        val invS = Staging.stage(inv0)
-        val hot = invS.groupBy("s").agg(count(lit(1)).as("df"))
-          .where(col("df") > maxDf).select("s")
-        val d = col("__docs")
-        val postings = invS.join(hot, Seq("s"), "left_anti")
-          .groupBy(col("s")).agg(collect_list(col("doc")).as("__docs"))
-        val pairs = flatten(
-          transform(
-            sequence(lit(0), size(d) - 2),
-            i => transform(
-              sequence(i + 1, size(d) - 1),
-              j => struct(
-                least(element_at(d, i + 1), element_at(d, j + 1)).as("a"),
-                greatest(element_at(d, i + 1), element_at(d, j + 1)).as("b")))))
-        (
-          postings
-            .where(size(d) >= 2)
-            .select(explode(pairs).as("__pair"))
-            .groupBy(col("__pair.a").as("doc_a"), col("__pair.b").as("doc_b"))
-            .agg(count(lit(1)).as("__shared")),
-          Some(
-            invS.join(hot, Seq("s"), "left_semi")
-              .groupBy("doc").agg(sort_array(collect_list(col("s"))).as("__hot"))))
-      }
-    val shared = hotPerDoc match {
-      case None => sharedCold
-      case Some(h) =>
-        sharedCold
-          .join(h.withColumnsRenamed(Map("doc" -> "doc_a", "__hot" -> "__hot_a")), Seq("doc_a"), "left")
-          .join(h.withColumnsRenamed(Map("doc" -> "doc_b", "__hot" -> "__hot_b")), Seq("doc_b"), "left")
-          .withColumn(
-            "__shared",
-            col("__shared") +
-              coalesce(size(array_intersect(col("__hot_a"), col("__hot_b"))), lit(0)))
-          .select("doc_a", "doc_b", "__shared")
-    }
+    // emitted set (pairs canonicalized, hot arrays sorted).
+    val hot = invS.groupBy("s").agg(count(lit(1)).as("df"))
+      .where(col("df") > maxDf).select("s")
+    val d = col("__docs")
+    val postings = invS.join(hot, Seq("s"), "left_anti")
+      .groupBy(col("s")).agg(collect_list(col("doc")).as("__docs"))
+    val pairs = flatten(
+      transform(
+        sequence(lit(0), size(d) - 2),
+        i => transform(
+          sequence(i + 1, size(d) - 1),
+          j => struct(
+            least(element_at(d, i + 1), element_at(d, j + 1)).as("a"),
+            greatest(element_at(d, i + 1), element_at(d, j + 1)).as("b")))))
+    val sharedCold = postings
+      .where(size(d) >= 2)
+      .select(explode(pairs).as("__pair"))
+      .groupBy(col("__pair.a").as("doc_a"), col("__pair.b").as("doc_b"))
+      .agg(count(lit(1)).as("__shared"))
+    // each doc's sorted hot shingles, for the shared-count correction
+    val h = invS.join(hot, Seq("s"), "left_semi")
+      .groupBy("doc").agg(sort_array(collect_list(col("s"))).as("__hot"))
+    val shared = sharedCold
+      .join(h.withColumnsRenamed(Map("doc" -> "doc_a", "__hot" -> "__hot_a")), Seq("doc_a"), "left")
+      .join(h.withColumnsRenamed(Map("doc" -> "doc_b", "__hot" -> "__hot_b")), Seq("doc_b"), "left")
+      .withColumn(
+        "__shared",
+        col("__shared") +
+          coalesce(size(array_intersect(col("__hot_a"), col("__hot_b"))), lit(0)))
+      .select("doc_a", "doc_b", "__shared")
     shared
       .join(sizes.withColumnsRenamed(Map("doc" -> "doc_a", "sz" -> "sz_a")), Seq("doc_a"))
       .join(sizes.withColumnsRenamed(Map("doc" -> "doc_b", "sz" -> "sz_b")), Seq("doc_b"))

@@ -59,9 +59,6 @@ object VecOps {
     udaf(new VecAvg)
   }
 
-  /** Element-wise a+b. */
-  def vecAdd(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x + y)
-
   /** Element-wise a-b (lag-delta features, SURVEY.md W6). */
   def vecSub(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x - y)
 
@@ -99,9 +96,6 @@ object VecOps {
     * path (same left-to-right accumulation as [[cosine]]/[[cosineUdf]], but
     * no per-pair Seq boxing and no UDF boundary; see graft.plans.CosineSim). */
   def cosineFast(a: Column, b: Column): Column = graft.plans.CosineSim(a, b)
-
-  /** Scale every element (e.g. /255 normalize step). */
-  def vecScale(a: Column, s: Column): Column = transform(a, x => x * s)
 
   /** round every element to `d` decimals — for oracle-stable output. */
   def vecRound(a: Column, d: Int): Column = transform(a, x => round(x, d))

@@ -102,8 +102,7 @@ object QueryReport {
   /** One timed `fn(spark, sfDir).count()`, then the between-query hygiene.
     * Wall time and job stamps share one clock (the listener's
     * System.currentTimeMillis), so the gap is never negative. */
-  private def rep(spark: SparkSession, sfDir: String, name: String, fn: Query, log: JobLog): Rep = {
-    if (name == SparkEntry.PairGraphOwner) SparkEntry.invalidatePairGraph(spark, sfDir)
+  private def rep(spark: SparkSession, sfDir: String, fn: Query, log: JobLog): Rep = {
     ListenerBridge.drain(spark.sparkContext)
     log.take()
     try {
@@ -129,10 +128,10 @@ object QueryReport {
   private def measure(
       spark: SparkSession, sfDir: String, name: String, fn: Query, log: JobLog,
       planFile: Path): JValue = {
-    val cold = rep(spark, sfDir, name, fn, log)
+    val cold = rep(spark, sfDir, fn, log)
     Files.writeString(
       planFile, cold.df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-    val warm = Seq.fill(WarmReps)(rep(spark, sfDir, name, fn, log))
+    val warm = Seq.fill(WarmReps)(rep(spark, sfDir, fn, log))
     val med = warm.sortBy(_.wallMs).apply(WarmReps / 2)
     val warmS = warm.map(_.wallMs / 1e3)
     ("query" -> name) ~ ("rows" -> cold.rows) ~ ("cold_s" -> cold.wallMs / 1e3) ~

@@ -47,31 +47,6 @@ object Windows {
     }
   }
 
-  /** Sliding (overlapping) windows à la TemporalCrop
-    * (`omnivore_transforms.py:66-81`): a window of `frames` rows starts at
-    * every row whose per-entity rank satisfies `rank % stride == 0`. Adds a
-    * rows-based forward frame; aggregate with e.g.
-    * `collect_list`/`avg` over the returned window spec via [[slidingAgg]]. */
-  def slidingAgg(
-      df: DataFrame,
-      entityCol: String,
-      tsCol: String,
-      frames: Int,
-      stride: Int,
-      aggCol: String => Column,
-      valueCol: String,
-      outCol: String,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val order: Seq[Column] = col(tsCol) +: tieBreak.map(col)
-    val wOrd = Window.partitionBy(col(entityCol)).orderBy(order: _*)
-    val wFwd = wOrd.rowsBetween(0, frames - 1)
-    df.withColumn("__rank", row_number().over(wOrd) - 1)
-      .withColumn("__cnt", count(lit(1)).over(wOrd.rowsBetween(0, frames - 1)))
-      .withColumn(outCol, aggCol(valueCol).over(wFwd))
-      .where(col("__rank") % stride === 0 && col("__cnt") === frames)
-      .drop("__rank", "__cnt")
-  }
-
   /** Trailing sliding mean over the previous `preceding` rows + current —
     * the rows-based analytic form (W3). */
   def trailingMean(

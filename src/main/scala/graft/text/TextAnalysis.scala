@@ -24,10 +24,6 @@ object TextAnalysis {
 
   def whitespaceTokens(text: Column): Column = Dedup.tokens(text)
 
-  /** BPE-ish word tokens: maximal [a-z0-9]+ runs of the lowercased text. */
-  def wordTokens(text: Column): Column =
-    regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
-
   /** token counts: whitespace tokens and regex word tokens. */
   def tokenCounts(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("n_ws_tokens", size(whitespaceTokens(col(textCol))))

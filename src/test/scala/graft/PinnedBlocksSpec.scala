@@ -29,5 +29,10 @@ class PinnedBlocksSpec extends SparkSpec {
     val graph = SparkEntry.pairGraphStagedIds(s, dir)
     assert(graph.size == 1)
     assert(sc.getPersistentRDDs.keySet == graph)
+    run("q_minhash_lsh")
+    assert(SparkEntry.pairGraphStagedIds(s, dir) != graph,
+      "a second q_minhash_lsh run read the memo instead of building")
+    assert(sc.getPersistentRDDs.keySet == SparkEntry.pairGraphStagedIds(s, dir),
+      "only the new graph stays pinned")
   }
 }

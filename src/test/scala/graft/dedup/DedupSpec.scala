@@ -132,17 +132,33 @@ class DedupSpec extends SparkSpec {
 
   test("ngram jaccard df-guard (r8 posting-list form): guarded == unguarded where both emit") {
     // real corpus + a tiny maxDf so MANY shingles go hot: exercises the
-    // r8 pair-explode + hot-array correction against the unguarded join
-    // formulation. The guard may only LOSE pure-boilerplate pairs (every
-    // shared shingle hot); every pair it emits must carry the EXACT J.
+    // r8 pair-explode + hot-array correction against the unguarded
+    // reference, an exact Jaccard over every doc pair computed outside
+    // Spark. Every pair the guard emits must carry the EXACT J, and the
+    // guard may only LOSE pure-boilerplate pairs (every shared shingle hot).
+    val (tau, maxDf) = (0.3, 3L)
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val guarded = toMap(Dedup.ngramJaccard(real, "doc_id", "text", tau = 0.3, maxDf = 3))
-    val exact = toMap(Dedup.ngramJaccard(real, "doc_id", "text", tau = 0.3, maxDf = 0))
+    val guarded = Dedup.ngramJaccard(real, "doc_id", "text", tau = tau, maxDf = maxDf)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val sh = real.select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1)
+      .map { case (id, t) => id -> Option(Dedup.shingleStrings(t, 3)).toSet.flatten }
+    val df = sh.toSeq.flatMap(_._2).groupMapReduce(identity)(_ => 1)(_ + _)
+    val pairs = for (i <- sh.indices; j <- i + 1 until sh.length) yield (sh(i), sh(j))
+    assert(pairs.size == 124750, "all pairs of the 500 sf0.001 docs")
+    // (pair, unrounded J, shares a shingle with df <= maxDf) for J >= tau
+    val exact = pairs.flatMap { case ((a, sa), (b, sb)) =>
+      val shared = sa & sb
+      val j = shared.size.toDouble / (sa.size + sb.size - shared.size)
+      if (j >= tau) Some(((a, b), j, shared.exists(df(_) <= maxDf))) else None
+    }
+    val exactJ = exact.map { case (p, j, _) =>
+      p -> BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }.toMap
     assert(guarded.nonEmpty, "guard must not wipe out the pair set")
     guarded.foreach { case (pair, j) =>
-      assert(exact.get(pair).contains(j), s"pair $pair: guarded J $j != exact ${exact.get(pair)}")
+      assert(exactJ.get(pair).contains(j), s"pair $pair: guarded J $j != exact ${exactJ.get(pair)}")
     }
+    val missed = exact.collect { case (p, _, true) if !guarded.contains(p) => p }
+    assert(missed.isEmpty, s"pairs sharing a cold shingle not emitted: ${missed.take(5)}")
   }
 }
