@@ -8,6 +8,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, to_json, xxhash64}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.json4s.JsonDSL._
 import org.json4s.{JNothing, JValue}
@@ -17,8 +19,8 @@ import graft.{Bench, SparkEntry}
 
 /** Where each driver query's time went. Runs the named queries in the
   * bench's session shape, warm-up, order and between-query hygiene; each
-  * query gets 1 cold and [[WarmReps]] warm reps of `fn(spark, sfDir).count()`
-  * and one JSON line in `out`:
+  * query gets 1 cold and [[WarmReps]] warm reps of [[consume]] over
+  * `fn(spark, sfDir)` and one JSON line in `out`:
   *  - `rows`, `cold_s`, `warm_s`, `warm_median_s`, `warm_spread` (quartile
   *    distance over median, as `perfbench/compare.py` computes it);
   *  - `jobs` and `job_ms` (id, ms, description) of the median warm rep,
@@ -99,7 +101,7 @@ object QueryReport {
 
   private final case class Rep(wallMs: Long, gapMs: Long, rows: Long, jobs: Seq[Job], df: DataFrame)
 
-  /** One timed `fn(spark, sfDir).count()`, then the between-query hygiene.
+  /** One timed [[consume]] of `fn(spark, sfDir)`, then the between-query hygiene.
     * Wall time and job stamps share one clock (the listener's
     * System.currentTimeMillis), so the gap is never negative. */
   private def rep(spark: SparkSession, sfDir: String, fn: Query, log: JobLog): Rep = {
@@ -108,12 +110,32 @@ object QueryReport {
     try {
       val t0 = System.currentTimeMillis()
       val df = fn(spark, sfDir)
-      val rows = df.count()
+      val rows = consume(df)
       val t1 = System.currentTimeMillis()
       ListenerBridge.drain(spark.sparkContext)
       val jobs = log.take()
       Rep(t1 - t0, t1 - t0 - covered(jobs, t0, t1), rows, jobs, df)
     } finally SparkEntry.releaseBetweenQueries(spark, sfDir)
+  }
+
+  /** Row count of `df`, in one action that also folds every output column
+    * into a `bit_xor(xxhash64(...))`: a bare `count()` lets Catalyst prune
+    * every column, and with them the work that only those columns need.
+    * Columns are renamed by position, so duplicate or odd names cannot clash;
+    * a column holding a map, which `xxhash64` cannot hash, goes through
+    * `to_json`. */
+  private def consume(df: DataFrame): Long = {
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case ArrayType(e, _) => hasMap(e)
+      case StructType(fs) => fs.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val cols = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      if (hasMap(f.dataType)) to_json(col(s"c$i")) else col(s"c$i")
+    }
+    val digest = if (cols.isEmpty) lit(0L) else bit_xor(xxhash64(cols: _*))
+    df.toDF(cols.indices.map(i => s"c$i"): _*).agg(count(lit(1)), digest).head().getLong(0)
   }
 
   /** Milliseconds of [t0, t1] inside at least one job: a union, because
