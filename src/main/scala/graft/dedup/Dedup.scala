@@ -1,5 +1,7 @@
 package graft.dedup
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -9,11 +11,12 @@ import graft.ops.Staging
   * SimHash, n-gram Jaccard, embedding-cosine near-dup.
   *
   * All text hashing is md5-based (Spark `md5` == DuckDB `md5` on UTF-8) so
-  * every deterministic stage is oracle-checkable bit-for-bit. Everything is
-  * pure `functions._` column algebra — per-row signature computation runs
-  * inside whole-stage codegen with NO shuffle; the only exchanges are the
-  * final candidate-pair joins, which shuffle on band/shingle keys (never a
-  * cross product).
+  * every deterministic stage is oracle-checkable bit-for-bit. The per-row
+  * kernels (shingles, MinHash signature, SimHash) are single-pass UDFs,
+  * each spec-checked bit for bit against a column-algebra or aggregate
+  * reference, so computing them is a narrow projection with NO shuffle;
+  * the exchanges are the candidate-pair steps, which shuffle on
+  * band/shingle keys (never a cross product).
   */
 object Dedup {
 
@@ -86,9 +89,44 @@ object Dedup {
   def shingleDf(docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
     docs.select(col(idCol).as("doc"), shingles(col(textCol), shingleN).as("sh"))
 
-  /** Signatures from an already-computed shingle relation (see
-    * [[minhashSigDf]] for why the aggregation shape matters). */
-  private def sigFromShingles(sh: DataFrame, k: Int): DataFrame = {
+  /** Signatures from an already-computed shingle relation: one row per doc
+    * with at least one shingle (see [[minhashSigDf]]). */
+  private def sigFromShingles(sh: DataFrame, k: Int): DataFrame =
+    sh.where(size(col("sh")) > 0).select(col("doc"), minhashUdf(col("sh"), lit(k)).as("sig"))
+
+  /** The k MinHash values of one shingle set: per seed i, the smallest
+    * md5 of the UTF-8 bytes of `"$i:" + shingle`, as lowercase hex. Digests
+    * are compared as unsigned bytes, the order of their lowercase-hex
+    * strings, so each value is exactly [[minhashSigAgg]]'s
+    * `min(md5(concat(seed, ':', s)))`; null shingles are skipped, as `min`
+    * skips them. */
+  private[dedup] def minhashHex(sh: Seq[String], k: Int): Seq[String] = {
+    if (sh == null) return null
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val seeds = Array.tabulate(k)(i => s"$i:".getBytes(UTF_8))
+    val best = new Array[Array[Byte]](k)
+    sh.foreach { s =>
+      if (s != null) {
+        val b = s.getBytes(UTF_8)
+        var i = 0
+        while (i < k) {
+          md.update(seeds(i))
+          val d = md.digest(b)
+          if (best(i) == null || java.util.Arrays.compareUnsigned(d, best(i)) < 0) best(i) = d
+          i += 1
+        }
+      }
+    }
+    best.toSeq.map(d => if (d == null) null else java.util.HexFormat.of().formatHex(d))
+  }
+
+  private val minhashUdf =
+    udf((sh: Seq[String], k: Int) => minhashHex(sh, k)).withName("minhash")
+
+  /** The aggregate signature formulation (kept for the parity spec — see
+    * [[minhashSigDf]] for why it is not the production path): explode the
+    * shingles, then k `min(md5(seed:s))` string aggregates per doc. */
+  private[dedup] def minhashSigAgg(sh: DataFrame, k: Int): DataFrame = {
     val e = sh.select(col("doc"), explode(col("sh")).as("s"))
     val aggs = (0 until k).map(s =>
       min(md5(concat(lit(s.toString), lit(":"), col("s")))).as(s"__m$s"))
@@ -97,14 +135,15 @@ object Dedup {
       .select(col("doc"), array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
   }
 
-  /** MinHash signatures as a relation — aggregation-based: explode distinct
-    * shingles once (a Generate boundary, so the shingle expression is
-    * evaluated once per doc), then k partial-aggregating `min(md5(seed:s))`
-    * in ONE groupBy pass. This shape matters: inlining the signature as a
-    * nested column expression makes Catalyst re-expand the whole
-    * tokenize→shingle→md5 tree into every consumer (filters, both join
-    * sides), turning an O(docs) computation into O(docs × consumers) — the
-    * sf0.01 LSH query went from 428s to ~2s with this formulation. */
+  /** MinHash signatures as a relation `(doc, sig)`: a narrow per-row
+    * projection of the `minhash` UDF ([[minhashHex]]) over the shingle
+    * relation, so it runs inside the scan's stage with no explode, no
+    * shuffle and no aggregate. The UDF is one pass over a doc's distinct
+    * shingles (k md5s each), the same single-pass pattern as [[shingles]]
+    * and [[simhash]]; the aggregate form ([[minhashSigAgg]]: explode, then
+    * k string `min`s — a SortAggregate behind a shuffle) is kept as its
+    * bit-for-bit reference. Docs with no shingle (null, empty or short
+    * text) get no row, as in the aggregate form. */
   def minhashSigDf(
       docs: DataFrame,
       idCol: String,
@@ -113,18 +152,26 @@ object Dedup {
       k: Int): DataFrame =
     sigFromShingles(shingleDf(docs, idCol, textCol, shingleN), k)
 
+  /** The LSH band relation `(doc, band_idx, band_hash)` of a shingle
+    * relation: signatures, then one row per band. */
+  private[dedup] def bandRows(sh: DataFrame, k: Int, bands: Int): DataFrame =
+    sigFromShingles(sh, k)
+      .select(col("doc"), posexplode(lshBands(col("sig"), bands, k / bands)).as(Seq("band_idx", "band_hash")))
+
   /** MinHash-LSH near-dup pairs, verified with exact shingle Jaccard ≥ tau.
-    * Plan: shingle explode → one-pass signature aggregation → band explode →
-    * self-join on (band_idx, band_hash) → dedupe id pairs → join shingle
-    * sets back for the Jaccard verify. The band join and the signature
-    * groupBy are the only shuffles; candidate pairs carry only ids.
+    * Plan: shingles → per-row signatures → band explode ([[bandRows]], all
+    * narrow) → self-join on (band_idx, band_hash) → dedupe id pairs → join
+    * shingle sets back for the Jaccard verify. The band join, the pair
+    * distinct and the verify joins are the only shuffles; candidate pairs
+    * carry only ids.
     *
     * The shingle relation and the band relation are MATERIALIZED once
     * ([[Staging]]): Spark does not dedupe self-join subtrees, so without
-    * staging the plan re-runs the shingle UDF + signature aggregation on
-    * BOTH band-join sides and twice more for the Jaccard verify — 4× the
-    * corpus shingling (round-2 judge finding; q_minhash_lsh was 64 s of a
-    * 191 s driver bench). */
+    * staging the plan re-runs the shingle and signature UDFs on BOTH
+    * band-join sides and twice more for the Jaccard verify — 4× the corpus
+    * shingling (round-2 judge finding; q_minhash_lsh was 64 s of a 191 s
+    * driver bench). The band relation has no shuffle inside, so staging it
+    * runs no job until its first reader. */
   def minhashLsh(
       docs: DataFrame,
       idCol: String,
@@ -133,11 +180,8 @@ object Dedup {
       k: Int = 16,
       bands: Int = 4,
       tau: Double = 0.5): DataFrame = {
-    val rows = k / bands
     val base = Staging.stage(shingleDf(docs, idCol, textCol, shingleN))
-    val bandsDf = Staging.stage(
-      sigFromShingles(base, k)
-        .select(col("doc"), posexplode(lshBands(col("sig"), bands, rows)).as(Seq("band_idx", "band_hash"))))
+    val bandsDf = Staging.stage(bandRows(base, k, bands))
     val cand = bandsDf
       .select(col("doc").as("doc_a"), col("band_idx"), col("band_hash"))
       .join(bandsDf.select(col("doc").as("doc_b"), col("band_idx"), col("band_hash")),
@@ -244,7 +288,12 @@ object Dedup {
     * corrected by the hot-array intersection, so every emitted J value is
     * exact. The guard affects candidate recall only — a pair is missed iff
     * EVERY shared shingle exceeds maxDf, i.e. the pair is pure boilerplate.
-    * `maxDf` must be positive. */
+    * `maxDf` must be positive.
+    *
+    * The returned pair relation is [[Staging]]-staged: a dedup pass reads
+    * it twice (the pairs themselves and [[components]]' edges), and each
+    * read of an unstaged relation re-ran the whole posting-list →
+    * pair-count → hot-correction → size-join pipeline. */
   def ngramJaccard(
       docs: DataFrame,
       idCol: String,
@@ -303,14 +352,15 @@ object Dedup {
         col("__shared") +
           coalesce(size(array_intersect(col("__hot_a"), col("__hot_b"))), lit(0)))
       .select("doc_a", "doc_b", "__shared")
-    shared
-      .join(sizes.withColumnsRenamed(Map("doc" -> "doc_a", "sz" -> "sz_a")), Seq("doc_a"))
-      .join(sizes.withColumnsRenamed(Map("doc" -> "doc_b", "sz" -> "sz_b")), Seq("doc_b"))
-      .withColumn(
-        "jaccard",
-        col("__shared").cast("double") / (col("sz_a") + col("sz_b") - col("__shared")))
-      .where(col("jaccard") >= tau)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
+    Staging.stage(
+      shared
+        .join(sizes.withColumnsRenamed(Map("doc" -> "doc_a", "sz" -> "sz_a")), Seq("doc_a"))
+        .join(sizes.withColumnsRenamed(Map("doc" -> "doc_b", "sz" -> "sz_b")), Seq("doc_b"))
+        .withColumn(
+          "jaccard",
+          col("__shared").cast("double") / (col("sz_a") + col("sz_b") - col("__shared")))
+        .where(col("jaccard") >= tau)
+        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard")))
   }
 
   /** Connected components over a near-dup pair graph — the CANONICALIZATION

@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * self-join subtrees, so an unstaged diamond re-executes everything below
   * it once per branch (the minhash plan shingled the corpus 4×, the
   * flagship decoded every frame twice). The staged diamonds:
-  *  - `Dedup`: the shingle, band and inverted-index relations, and every
-  *    round of `components`;
+  *  - `Dedup`: the shingle, band and inverted-index relations, every
+  *    round of `components`, and `ngramJaccard`'s output (read by the
+  *    caller and by `components`' edges);
   *  - `TextAnalysis.tfidf`: the tf relation;
   *  - `FeaturePipeline.frameFeatures`: the decoded frames, and its output
   *    (read by the per-second mean and both build branches of the as-of

@@ -1,5 +1,8 @@
 package graft.dedup
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, LogicalPlan}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sim.Similarity
@@ -81,6 +84,60 @@ class DedupSpec extends SparkSpec {
       Dedup.simhashCol($"text").as("c"))
     val diff = both.where(!($"u" <=> $"c")).count()
     assert(diff == 0L, s"$diff docs differ between UDF and column simhash")
+  }
+
+  test("minhash signature UDF == the aggregate form bit for bit (incl. edge cases)") {
+    // negative ids: no clash with the corpus ids
+    val edge = Seq(
+      (-1L, null.asInstanceOf[String]),
+      (-2L, ""),
+      (-3L, "a b"), // under shingle width
+      (-4L, "a\tb\nc d e"), // tabs/newlines split tokens
+      (-5L, "  padded  text with spaces  "),
+      (-6L, "naïve café über straße 東京 タワー déjà vu"),
+      (-7L, "x y z x y z x y z")) // repeated shingles
+      .toDF("doc_id", "text")
+    val all = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+      .select($"doc_id", $"text").unionByName(edge)
+    val udfSig = Dedup.minhashSigDf(all, "doc_id", "text", 3, 16)
+    val aggSig = Dedup.minhashSigAgg(Dedup.shingleDf(all, "doc_id", "text", 3), 16)
+    val both = udfSig.as("u").join(aggSig.as("a"), $"u.doc" === $"a.doc", "full_outer")
+    val diff = both.where(!($"u.doc" <=> $"a.doc") || !($"u.sig" <=> $"a.sig")).count()
+    assert(diff == 0L, s"$diff docs differ between UDF and aggregate signatures")
+    val ids = udfSig.select($"doc").as[Long].collect()
+    assert(ids.length == ids.distinct.length, "one row per doc")
+    assert((-7L to -4L).forall(ids.contains), "docs with a shingle get a row")
+    assert(!ids.exists(Set(-1L, -2L, -3L)), "docs with no shingle get no row")
+    assert(udfSig.where(size($"sig") =!= 16 || exists($"sig", _.isNull)).isEmpty)
+  }
+
+  /** Occurrences of the minhash signature UDF in `p`'s expressions. */
+  private def minhashUdfs(p: LogicalPlan): Int =
+    p.collect { case n => n.expressions.map(_.collect {
+      case u: ScalaUDF if u.udfName.contains("minhash") => u
+    }.size).sum }.sum
+
+  // a parquet scan: over a local Seq the optimizer folds the UDF into the relation
+  private def scanned = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+  test("minhash signatures plan as a narrow projection: no Aggregate, no Generate") {
+    val plan = Dedup.minhashSigDf(scanned, "doc_id", "text", 3, 16).queryExecution.optimizedPlan
+    val wide = plan.collect { case n @ (_: Aggregate | _: Generate) => n.nodeName }
+    assert(wide.isEmpty, s"signature plan has $wide:\n$plan")
+    assert(minhashUdfs(plan) == 1, plan.toString)
+  }
+
+  test("minhash LSH evaluates the signature UDF once, in the staged band relation") {
+    val bands = Dedup.bandRows(Dedup.shingleDf(scanned, "doc_id", "text", 3), 16, 4)
+      .queryExecution.optimizedPlan
+    assert(minhashUdfs(bands) == 1, s"band relation re-expands the signature:\n$bands")
+    val lsh = Dedup.minhashLsh(scanned, "doc_id", "text").queryExecution.optimizedPlan
+    assert(minhashUdfs(lsh) == 0, s"a band-join side recomputes signatures:\n$lsh")
+  }
+
+  test("ngram jaccard returns one staged pair relation") {
+    val ng = Dedup.ngramJaccard(scanned, "doc_id", "text")
+    assert(ng.queryExecution.analyzed.isInstanceOf[LogicalRDD], ng.queryExecution.analyzed.toString)
   }
 
   test("ANN LSH top-k achieves recall vs brute force on real embeddings") {

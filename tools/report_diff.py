@@ -9,7 +9,9 @@ that differ between two runs of identical code are masked: expression ids
 (`#123`, `#123L`), `plan_id=123` and generated lambda names. RDD ids
 (`RDD[123]`, set by how many RDDs the session made before) and source
 call-site lines (`Staging.scala:28`) of a scanned checkpoint are masked too,
-so an edit elsewhere in a file does not read as a plan change.
+so an edit elsewhere in a file does not read as a plan change, and so are
+the identity hashes of objects printed by their default `toString`
+(`VecOps$VecAvg@1a2b3c`), which differ between any two JVMs.
 
 Usage: python3 tools/report_diff.py A.jsonl B.jsonl
        e.g. A = perf/local4_before.jsonl, B = a fresh QueryReport run.
@@ -25,6 +27,7 @@ MASKS = [
     (re.compile(r"Lambda[^,]*"), "Lambda_"),
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
     (re.compile(r"\.scala:\d+"), ".scala:_"),
+    (re.compile(r"(?<=[\w$])@[0-9a-f]+\b"), "@_"),
 ]
 
 
