@@ -99,7 +99,9 @@ object Dedup {
     * are compared as unsigned bytes, the order of their lowercase-hex
     * strings, so each value is exactly [[minhashSigAgg]]'s
     * `min(md5(concat(seed, ':', s)))`; null shingles are skipped, as `min`
-    * skips them. */
+    * skips them. A null or empty set must not throw: the optimizer may
+    * evaluate the UDF in a predicate ahead of [[sigFromShingles]]' size
+    * filter (it does when folding a local relation). */
   private[dedup] def minhashHex(sh: Seq[String], k: Int): Seq[String] = {
     if (sh == null) return null
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -169,9 +171,9 @@ object Dedup {
     * ([[Staging]]): Spark does not dedupe self-join subtrees, so without
     * staging the plan re-runs the shingle and signature UDFs on BOTH
     * band-join sides and twice more for the Jaccard verify — 4× the corpus
-    * shingling (round-2 judge finding; q_minhash_lsh was 64 s of a 191 s
-    * driver bench). The band relation has no shuffle inside, so staging it
-    * runs no job until its first reader. */
+    * shingling (q_minhash_lsh was 64 s of a 191 s bench run in round 2).
+    * The band relation has no shuffle inside, so staging it runs no job
+    * until its first reader. */
   def minhashLsh(
       docs: DataFrame,
       idCol: String,

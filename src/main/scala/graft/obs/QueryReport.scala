@@ -134,8 +134,8 @@ object QueryReport {
     val cols = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       if (hasMap(f.dataType)) to_json(col(s"c$i")) else col(s"c$i")
     }
-    val digest = if (cols.isEmpty) lit(0L) else bit_xor(xxhash64(cols: _*))
-    df.toDF(cols.indices.map(i => s"c$i"): _*).agg(count(lit(1)), digest).head().getLong(0)
+    df.toDF(cols.indices.map(i => s"c$i"): _*)
+      .agg(count(lit(1)), bit_xor(xxhash64(cols: _*))).head().getLong(0)
   }
 
   /** Milliseconds of [t0, t1] inside at least one job: a union, because

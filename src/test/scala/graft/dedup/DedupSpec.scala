@@ -97,7 +97,7 @@ class DedupSpec extends SparkSpec {
       (-6L, "naïve café über straße 東京 タワー déjà vu"),
       (-7L, "x y z x y z x y z")) // repeated shingles
       .toDF("doc_id", "text")
-    val all = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    val all = spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.01/documents.parquet")
       .select($"doc_id", $"text").unionByName(edge)
     val udfSig = Dedup.minhashSigDf(all, "doc_id", "text", 3, 16)
     val aggSig = Dedup.minhashSigAgg(Dedup.shingleDf(all, "doc_id", "text", 3), 16)
@@ -118,7 +118,8 @@ class DedupSpec extends SparkSpec {
     }.size).sum }.sum
 
   // a parquet scan: over a local Seq the optimizer folds the UDF into the relation
-  private def scanned = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+  private def scanned =
+    spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.001/documents.parquet")
 
   test("minhash signatures plan as a narrow projection: no Aggregate, no Generate") {
     val plan = Dedup.minhashSigDf(scanned, "doc_id", "text", 3, 16).queryExecution.optimizedPlan
