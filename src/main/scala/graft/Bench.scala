@@ -82,18 +82,6 @@ object Bench {
     s
   }
 
-  /** Force the WHOLE pipeline per row: a bare count() lets Catalyst prune
-    * the decode UDF and window columns away, benchmarking an empty plan.
-    * One pass: row count + an all-columns digest. */
-  private def consumeAll(df: org.apache.spark.sql.DataFrame): Long =
-    df.agg(
-      count(lit(1)),
-      expr(
-        "bit_xor(xxhash64(concat_ws(',', entity, ts, coalesce(caption_filled, ''), " +
-          "session_id, to_json(vec), to_json(vec_delta))))"))
-      .head()
-      .getLong(0)
-
   /** One scaling unit: the flagship pipeline over the given fixture chunks
     * (directory-pruned scan). Returns feature rows produced. */
   def consumeChunks(spark: SparkSession, inputPath: String, chunks: Seq[Int]): Long = {
@@ -101,12 +89,12 @@ object Bench {
     val filtered =
       if (in.columns.contains("__chunk")) in.where(col("__chunk").isin(chunks: _*))
       else in
-    consumeAll(graft.pipeline.FeaturePipeline.frameFeatures(filtered))
+    graft.obs.QueryReport.consume(graft.pipeline.FeaturePipeline.frameFeatures(filtered))
   }
 
   /** Release every persisted RDD's blocks (the flagship's `frameFeatures`
-    * stages two relations per pipeline instance, the decoded frames and
-    * the frame features: 5.97 MB per 3.2k-frame pass; ScaleChild builds the
+    * stages two relations per pipeline instance, its window pass's
+    * windowed frames and the frame features; ScaleChild builds the
     * pipeline once per unit and calls this between units so the block
     * manager does not grow monotonically). */
   private[graft] def releasePersistedRdds(spark: SparkSession): Unit =
@@ -639,10 +627,9 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_FAULT_SLEEP_SEC").map { s =>
         val sleepSec = s.toLong
         "zz_fault_sleep" -> ((sp: SparkSession, _: String) => {
-          // the sleep is a FILTER condition, not a projected column: the
-          // loop consumes via count(), which prunes projected UDF columns
-          // (even asNondeterministic ones — an unreferenced project can be
-          // collapsed away); a filter is always evaluated
+          // the sleep is a FILTER condition, not a projected column: a
+          // filter is always evaluated, whatever columns the loop's
+          // consumer (QueryReport.consume) reads
           val slp = udf((_: Long) => { Thread.sleep(sleepSec * 1000L); true })
             .asNondeterministic()
           sp.range(0, 64, 1, 64).where(slp(col("id"))).toDF()
@@ -654,7 +641,10 @@ object Bench {
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         capSec: Long): Double = {
       val gc0 = gcMillis
-      val (sec, status) = runGuarded(spark, name, capSec)(fn(spark, sfDir).count(): Unit)
+      // count plus an all-column digest: a bare count() would let Catalyst
+      // prune work that only unread columns need
+      val (sec, status) =
+        runGuarded(spark, name, capSec)(graft.obs.QueryReport.consume(fn(spark, sfDir)): Unit)
       val quiet = quietRef.getOrElse(name, DefaultQuietRef)
       if (status != RunOk || sec > 4 * quiet)
         System.err.println(

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -27,6 +28,10 @@ import graft.{Bench, SparkEntry}
   *    from a SparkListener;
   *  - `driver_gap_s`: wall time not covered by any job (planning, codegen,
   *    commit), median over the warm reps;
+  *  - `cold_compiles` and `compiles` (of the median warm rep): generated
+  *    classes Janino compiled during the rep, the count of Spark's
+  *    `CodegenMetrics` compilation-time histogram (driver and tasks share
+  *    the JVM at `local[n]`);
   *  - `plan`: the cold rep's formatted plan, written to
   *    `<out-stem>.plans/<query>.txt`;
   *  - `cpus`, `nproc`, `sf_dir`.
@@ -99,7 +104,8 @@ object QueryReport {
     }
   }
 
-  private final case class Rep(wallMs: Long, gapMs: Long, rows: Long, jobs: Seq[Job], df: DataFrame)
+  private final case class Rep(
+      wallMs: Long, gapMs: Long, rows: Long, jobs: Seq[Job], compiles: Long, df: DataFrame)
 
   /** One timed [[consume]] of `fn(spark, sfDir)`, then the between-query hygiene.
     * Wall time and job stamps share one clock (the listener's
@@ -108,13 +114,15 @@ object QueryReport {
     ListenerBridge.drain(spark.sparkContext)
     log.take()
     try {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.currentTimeMillis()
       val df = fn(spark, sfDir)
       val rows = consume(df)
       val t1 = System.currentTimeMillis()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       ListenerBridge.drain(spark.sparkContext)
       val jobs = log.take()
-      Rep(t1 - t0, t1 - t0 - covered(jobs, t0, t1), rows, jobs, df)
+      Rep(t1 - t0, t1 - t0 - covered(jobs, t0, t1), rows, jobs, compiles, df)
     } finally SparkEntry.releaseBetweenQueries(spark, sfDir)
   }
 
@@ -123,8 +131,8 @@ object QueryReport {
     * every column, and with them the work that only those columns need.
     * Columns are renamed by position, so duplicate or odd names cannot clash;
     * a column holding a map, which `xxhash64` cannot hash, goes through
-    * `to_json`. */
-  private def consume(df: DataFrame): Long = {
+    * `to_json`. `Bench` consumes each timed query through it too. */
+  private[graft] def consume(df: DataFrame): Long = {
     def hasMap(t: DataType): Boolean = t match {
       case _: MapType => true
       case ArrayType(e, _) => hasMap(e)
@@ -164,6 +172,7 @@ object QueryReport {
           ("desc" -> j.desc.take(110))
       }) ~
       ("driver_gap_s" -> warm.map(_.gapMs).sorted.apply(WarmReps / 2) / 1e3) ~
+      ("cold_compiles" -> cold.compiles) ~ ("compiles" -> med.compiles) ~
       ("plan" -> planFile.toString) ~ ("cpus" -> spark.sparkContext.defaultParallelism) ~
       ("nproc" -> Runtime.getRuntime.availableProcessors) ~ ("sf_dir" -> sfDir)
   }

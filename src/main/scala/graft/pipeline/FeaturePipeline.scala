@@ -17,10 +17,11 @@ import graft.synth.SynthImages
   * Layout decisions for 10^12 rows:
   *  - the fused codec UDF means raw pixels never leave the row pipeline —
   *    only the 54-float feature crosses any exchange;
-  *  - two relations are staged ([[Staging]]) per run: the decoded frames,
-  *    which feed the window stage's rows/summary diamond, and the frame
-  *    features, which feed the per-second mean and both build branches of
-  *    the as-of join — so the codec and the window stage each run once;
+  *  - three relations are staged ([[Staging]]) per run: the window pass's
+  *    windowed frames (read by its bucket summaries and its final rows),
+  *    the frame features (read by the per-second mean and the as-of
+  *    join), and the as-of pass's windowed union — so the codec, the
+  *    window stage and the as-of window each run once;
   *  - ALL per-frame window features (LOCF fill, lag-1 delta, gap session)
   *    run in ONE fused time-bucketed pass ([[BucketedWindows]], round-5
   *    judge directive #3): one `(entity, bucket)` exchange of the decoded
@@ -49,15 +50,14 @@ object FeaturePipeline {
     * times callers read the result; with AQE that runs the decode and the
     * window stage's exchanges here, before any action. */
   def frameFeatures(images: DataFrame): DataFrame = {
-    val frames = SynthImages.withEntityTs(images)
-    // decode ONCE: frameWindows' windows/summary diamond would otherwise
-    // re-run the codec UDF on both branches
-    val decoded = Staging.stage(
-      frames
-        .withColumn("vec", ImageCodec.imageFeaturesCol(col("bytes"), ResizeTo, CropTo))
-        // P9 string rewrite: `imagebind_feature_extractor.py:62`
-        .withColumn("caption_rw", regexp_replace(col("caption"), "#C C", "actor"))
-        .drop("bytes"))
+    // the window pass stages its own windowed relation, so the decode runs
+    // once, in the map side of the pass's (entity, bucket) exchange
+    val decoded = SynthImages
+      .withEntityTs(images)
+      .withColumn("vec", ImageCodec.imageFeaturesCol(col("bytes"), ResizeTo, CropTo))
+      // P9 string rewrite: `imagebind_feature_extractor.py:62`
+      .withColumn("caption_rw", regexp_replace(col("caption"), "#C C", "actor"))
+      .drop("bytes")
     Staging.stage(
       BucketedWindows
         .frameWindows(

@@ -58,4 +58,20 @@ class QueryReportSpec extends SparkSpec {
       assert(Files.readString(plan).contains("== Physical Plan =="), q)
     }
   }
+
+  test("compiles: a fresh plan's cold rep compiles its generated classes, its warm reps reuse them") {
+    val s = spark.newSession()
+    // the literal is inlined into the generated code, so no earlier
+    // suite can have compiled these classes
+    val nonce = System.nanoTime() % 1000000007L
+    val probe = (ss: SparkSession, _: String) => ss.range(0, 1000, 1, 2).selectExpr(s"id * $nonce AS x")
+    val out = Files.createTempDirectory("graft_report").resolve("c.jsonl")
+
+    assert(QueryReport.report(s, Seq("codegen_probe" -> probe), dir, out) == 0)
+
+    val r = parse(Files.readAllLines(out).asScala.head)
+    assert((r \ "rows").extract[Long] == 1000L)
+    assert((r \ "cold_compiles").extract[Long] > 0, r)
+    assert((r \ "compiles").extract[Long] == 0, r)
+  }
 }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -99,14 +101,14 @@ class AsOfJoinSpec extends SparkSpec {
     val build = buildRows.toDF("entity", "ts", "v")
     val probes = probeRows.toDF("entity", "ts")
     val plan = AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), 100L).queryExecution.optimizedPlan
-    val groupings = plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-      a.groupingExpressions.map {
-        case n: org.apache.spark.sql.catalyst.expressions.NamedExpression => n.name
-        case x => x.sql
-      }.toSet
+    assert(plan.collectFirst { case r: LogicalRDD => r }.nonEmpty, s"expected the staged pass relation in:\n$plan")
+    // the staged relation's own plan: the tagged union through the pass's window stage
+    val (rows, pass) = AsOfJoin.tagged(probes, build, "entity", "ts", Seq("v"), 100L)
+    val staged = pass.windowed(rows).queryExecution.optimizedPlan
+    Seq("asOf" -> plan, "staged relation" -> staged).foreach { case (name, p) =>
+      val aggs = p.collect { case a: Aggregate => a }
+      assert(aggs.isEmpty, s"$name plans an aggregate (${aggs.mkString("; ")}):\n$p")
     }
-    assert(groupings.nonEmpty, s"expected the per-bucket aggregates in:\n$plan")
-    assert(!groupings.contains(Set("entity", "ts")), s"per-(entity, ts) dedup aggregate in:\n$plan")
   }
 
   test("bucket width does not change semantics") {

@@ -1,5 +1,10 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,7 +17,7 @@ import graft.SparkSpec
   * width, session gaps that land exactly ON bucket boundaries, sparse
   * (mostly-null) LOCF columns with whole buckets of nulls, single-row
   * entities, and an entity with ts holes spanning several buckets. */
-class BucketedWindowsSpec extends SparkSpec {
+class BucketedWindowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val W = 8L // bucket width — small so carries are exercised a lot
@@ -53,27 +58,36 @@ class BucketedWindowsSpec extends SparkSpec {
   }
 
   test("no exchange partitions on entity alone (hot-entity safety) and row count is preserved") {
+    def exchanges(df: DataFrame): Seq[(Seq[String], Long)] = {
+      df.queryExecution.toRdd.count() // finalize the adaptive plan
+      collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec =>
+        val keys = s.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+          case other => Seq(other.toString)
+        }
+        keys -> s.metrics("shuffleRecordsWritten").value
+      }
+    }
+    // The big relation must only ever hash on (entity, bucket). That
+    // exchange and the window stage sit inside the pass's staged relation,
+    // so read that relation's own plan (frameWindows' parameters).
+    val windowed = BucketedWindows
+      .Pass("entity", "ts", W, Nil, Seq("cap"), Seq("v"), Some(Gap))
+      .windowed(df)
+    val inner = exchanges(windowed)
+    assert(inner.map(_._1).contains(Seq("entity", "__bw_bucket")), s"expected an (entity, bucket) exchange: $inner")
+    assert(inner.forall(_._1.contains("__bw_bucket")), s"an exchange of the rows without the bucket: $inner")
+    // Above the staged relation, an entity-alone exchange is allowed ONLY
+    // over the per-bucket summaries (the carry windows): at most one row
+    // per non-empty (entity, bucket).
     val out = bucketed
     assert(out.count() == rows.size)
-    out.queryExecution.toRdd.count() // finalize the adaptive plan
-    val plan = out.queryExecution.executedPlan.toString
-    // The big relation must only ever hash on (entity, bucket); an
-    // entity-alone exchange is allowed ONLY over the tiny per-bucket
-    // summary (the carry windows). Structural check: every
-    // `hashpartitioning(entity, N)` exchange's direct child (the next plan
-    // line) must be the per-(entity, __bw_bucket) aggregate — never a
-    // raw-data node.
-    val lines = plan.linesIterator.toVector
-    val entityOnlyIdx = lines.zipWithIndex.collect {
-      case (l, i) if l.contains("Exchange hashpartitioning(entity#") && !l.contains("__bw_bucket") => i
-    }
-    val withBucket = "hashpartitioning\\(entity#\\d+, __bw_bucket".r.findAllIn(plan).size
-    assert(withBucket >= 1, s"expected an (entity, bucket) exchange:\n$plan")
-    entityOnlyIdx.foreach { i =>
-      val child = lines.lift(i + 1).getOrElse("")
-      assert(
-        child.contains("Aggregate(key=[entity#") && child.contains("__bw_bucket"),
-        s"entity-alone exchange over a non-summary relation:\n${lines(i)}\n$child")
-    }
+    val buckets = rows.map(r => (r._1, math.floorDiv(r._2, W))).distinct.size
+    val outer = exchanges(out)
+    val entityAlone = outer.filter(_._1 == Seq("entity"))
+    assert(entityAlone.size == 1, s"expected one entity-alone exchange: $outer")
+    assert(entityAlone.head._2 <= buckets,
+      s"the entity-alone exchange wrote ${entityAlone.head._2} rows for $buckets (entity, bucket)s")
+    assert(outer.forall(x => x._1 == Seq("entity")), s"a second exchange above the staged relation: $outer")
   }
 }
