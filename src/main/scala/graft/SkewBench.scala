@@ -74,10 +74,12 @@ object SkewBench {
     // Per-stage (numTasks, max task ms) of the jobs run since the last
     // reset (listener bus is async — reads happen after a short drain
     // sleep). Two max-task views per rep:
-    //  - MERGE-STAGE max task: the highest-id stage with ≥2 tasks — in this
-    //    plan that is deterministically the per-(entity, bucket) window/
-    //    merge stage, the stage whose biggest task IS the skew signal (the
-    //    only later stage is the single-task final agg);
+    //  - MERGE-STAGE max task: of the stages with ≥2 tasks, the one whose
+    //    tasks pulled the most rows over an exchange — the stage that reads
+    //    the full relation's (entity, bucket) exchange, whose biggest task
+    //    IS the skew signal. (Not simply the last multi-task stage: the
+    //    bucketed pass stages its windowed relation, so the final stage
+    //    reads staged blocks and pulls no shuffle rows.)
     //  - ANY-STAGE max task: global, kept for transparency — under heavy
     //    external load any 300-task prep stage draws straggler tasks that
     //    have nothing to do with key skew, so the global max saturates at
@@ -85,6 +87,7 @@ object SkewBench {
     val debug = sys.env.contains("SPARK_GRAFT_SKEW_DEBUG")
     val stageMax = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val stageMaxRows = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val stageRows = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     // task-END events observed per stage: the multi-task evidence that does
     // NOT depend on onStageCompleted surviving the bus (round-4 advice — a
@@ -92,7 +95,7 @@ object SkewBench {
     val stageTaskEnds = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val eventsSeen = new java.util.concurrent.atomic.AtomicLong
     def resetStages(): Unit = {
-      stageMax.clear(); stageMaxRows.clear(); stageTasks.clear(); stageTaskEnds.clear()
+      stageMax.clear(); stageMaxRows.clear(); stageRows.clear(); stageTasks.clear(); stageTaskEnds.clear()
     }
     // The listener bus is async: stageTasks is only populated by
     // onStageCompleted, and reading before the merge stage's event drains
@@ -118,7 +121,7 @@ object SkewBench {
       val ids = stageMax.asScala.keys.toSeq
         .filter(id =>
           stageTasks.getOrDefault(id, 1) >= 2 || stageTaskEnds.getOrDefault(id, 0) >= 2)
-        .sorted(Ordering.Int.reverse)
+        .sortBy(id => (-stageRows.getOrDefault(id, 0L), -id))
       ids.headOption.foreach { id =>
         if (!stageTasks.containsKey(id))
           System.err.println(
@@ -148,6 +151,7 @@ object SkewBench {
         val rows =
           if (t.taskMetrics != null) t.taskMetrics.shuffleReadMetrics.recordsRead else 0L
         stageMaxRows.merge(t.stageId, rows, math.max(_, _))
+        stageRows.merge(t.stageId, rows, _ + _)
         eventsSeen.incrementAndGet()
       }
       override def onStageCompleted(

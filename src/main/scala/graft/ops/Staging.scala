@@ -16,17 +16,20 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    round of `components`, and `ngramJaccard`'s output (read by the
   *    caller and by `components`' edges);
   *  - `TextAnalysis.tfidf`: the tf relation;
-  *  - `FeaturePipeline.frameFeatures`: the decoded frames, and its output
-  *    (read by the per-second mean and both build branches of the as-of
-  *    join).
+  *  - `BucketedWindows.Pass`: its windowed relation (read by the bucket
+  *    summaries and the final rows), so `frameWindows` and `AsOfJoin.asOf`
+  *    each stage once, and the input's work runs once, in the map side of
+  *    the pass's exchange;
+  *  - `FeaturePipeline.frameFeatures`: its output (read by the per-second
+  *    mean and the as-of join).
   *
   * [[stage]] is a lazy local checkpoint: the first action over the
   * relation writes its partitions to the block manager, and the returned
   * DataFrame's lineage is truncated onto those blocks. "Lazy" covers the
   * final stage only: with AQE on, checkpointing plans the relation
   * adaptively, which runs every shuffle stage inside it when [[stage]] is
-  * called (staging `frameFeatures`' output runs the window stage's
-  * exchanges there, 4 jobs). Blocks stay pinned until [[release]] or
+  * called (staging a bucketed pass runs its `(entity, bucket)` exchange
+  * there). Blocks stay pinned until [[release]] or
   * `unpersist`, and they cannot be recomputed after an executor loss.
   * Swapping the medium (a reliable checkpoint, a parquet write-then-read)
   * is a change to this file only. */

@@ -3,7 +3,8 @@
 
 For every query in either report it prints the warm median wall time of
 each side (with that side's warm spread), the relative change, the job
-count, the driver gap, and whether the two cold-rep plans
+count, the driver gap, the median warm rep's Janino compiles ("-" for a
+report written before QueryReport recorded them), and whether the two cold-rep plans
 (`<stem>.plans/<query>.txt` next to each JSONL) are equal once the ids
 that differ between two runs of identical code are masked: expression ids
 (`#123`, `#123L`), `plan_id=123` and generated lambda names. RDD ids
@@ -69,7 +70,7 @@ def main(argv):
     a_path, b_path = argv[1], argv[2]
     a, b = load(a_path), load(b_path)
     hdr = (f"{'query':<28} {'A warm_s (spread)':>18} {'B warm_s (spread)':>18} {'delta':>7}"
-           f" {'jobs A>B':>9} {'gap_s A>B':>12}  plan")
+           f" {'jobs A>B':>9} {'gap_s A>B':>12} {'compiles A>B':>13}  plan")
     print(hdr)
     n_plan_diff = 0
     for q in sorted(set(a) | set(b)):
@@ -90,7 +91,7 @@ def main(argv):
         print(f"{q:<28} {ma:>7.3f} ({ra['warm_spread']:>5.2f})    "
               f"{mb:>7.3f} ({rb['warm_spread']:>5.2f})    {delta:>7}"
               f" {ra['jobs']:>4}>{rb['jobs']:<4} {ra['driver_gap_s']:>5.2f}>"
-              f"{rb['driver_gap_s']:<6.2f}  {plan}")
+              f"{rb['driver_gap_s']:<6.2f} {ra.get('compiles', '-'):>6}>{rb.get('compiles', '-'):<6}  {plan}")
     print(f"{n_plan_diff} plan(s) differ after masking")
     return 0
 
