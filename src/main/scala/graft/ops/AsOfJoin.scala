@@ -21,9 +21,11 @@ import org.apache.spark.sql.types.StructType
   * pass of [[BucketedWindows]]: `bucket = floor(ts / bucketWidth)` acts as
   * the salt, so one entity spreads over (ts-range / bucketWidth) tasks, and
   * the latest match of any EARLIER bucket arrives as the pass's LOCF carry
-  * (taken from each bucket's last row, one row per bucket). Total shuffle:
-  * one hash exchange of both sides on (entity, bucket) + a negligible
-  * exchange of the bucket timeline. No build row is replicated.
+  * (taken from each bucket's last row, one row per bucket). The pass is one
+  * `BucketedPassExec` per step (the row scan and the carry-in scan), no
+  * `WindowExec`. Total shuffle: one hash exchange of both sides on
+  * (entity, bucket) + a negligible exchange of the bucket timeline. No
+  * build row is replicated.
   *
   * [[asOf]] is the one implementation (verified against DuckDB's native
   * `ASOF JOIN` oracle); [[asOfWithin]] is a staleness post-predicate over
@@ -55,8 +57,10 @@ object AsOfJoin {
     * `max(struct(payload))` per `(entity, ts)` would keep.
     *
     * The pass stages its windowed union ([[Staging]]), so each side's
-    * input runs once; a caller whose side is read elsewhere too stages it
-    * first, as `FeaturePipeline.frameFeatures` does. */
+    * input runs once; it keeps only what is read later: the probe rows and
+    * each bucket's last row (the carries' source), with the LOCF fill of
+    * the match but not the match. A caller whose side is read elsewhere
+    * too stages it first, as `FeaturePipeline.frameFeatures` does. */
   def asOf(
       probes: DataFrame,
       build: DataFrame,
@@ -69,7 +73,7 @@ object AsOfJoin {
     require(!probes.columns.contains(SrcTs), s"probe side already has a '$SrcTs' column")
     val (rows, pass) = tagged(probes, build, entityCol, tsCol, payload, bucketWidth)
     val m = col(s"${M}_filled")
-    pass(rows)
+    pass(rows, reads = col(TAG) === 1, unread = Seq(M))
       .where(col(TAG) === 1)
       .select(
         probes.columns.map(c => col(PRB).getField(c).as(c)) ++
@@ -103,7 +107,7 @@ object AsOfJoin {
     * null, left-join row kept) — "join the latest sensor reading, unless
     * it is more than an hour stale". Composes the proven operator with a
     * pure column post-predicate (Spark-first preference order (a)): the
-    * filter runs inside the same whole-stage-codegen stage as the window
+    * filter runs inside the same whole-stage-codegen stage as the stitch
     * projection, so the bound costs zero extra exchanges. The leakage
     * invariant is unchanged (src_ts ∈ [ts − tolerance, ts]). */
   def asOfWithin(

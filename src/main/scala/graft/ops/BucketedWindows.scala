@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Hot-entity-safe per-row window features over ONE time-bucketed pass
@@ -11,29 +10,40 @@ import org.apache.spark.sql.functions._
   * The pass ([[Pass]]) is the engine's one bucketed temporal operator:
   * [[frameWindows]] and [[AsOfJoin.asOf]] are both built on it.
   *
-  * Shape:
-  *  1. `bucket = floor(ts / bucketWidth)`; ONE `repartition(entity, bucket)`
-  *     of the full relation. Everything upstream (e.g. the flagship's
-  *     decode UDF) runs exactly once, in that exchange's map side.
-  *  2. One window stage over `(entity, bucket) orderBy (ts +: tieBreak)`:
-  *     `lead(ts)` (null ⟺ the bucket's last row), `lag(c)` per lag column,
-  *     cumulative `last(c, ignoreNulls)` per LOCF column, and, when
-  *     sessions are asked for, `lag(ts)`, `first(ts)`, the internal gap
-  *     flag and its running sum. This windowed relation feeds two
-  *     branches (the bucket summaries and the final rows), so it is
-  *     [[Staging staged]]: the exchange and the window stage run once.
+  * Shape (one logical node, [[BucketedPass]], planned into
+  * [[BucketedPassExec]] by [[BucketedPassStrategy]]):
+  *  1. `bucket = floor(ts / bucketWidth)`. The Exec requires its input
+  *     clustered on exactly `(entity, bucket)` and sorted by
+  *     `(entity, bucket, ts +: tieBreak)`, so `EnsureRequirements` plans ONE
+  *     exchange of the full relation and its sort. Everything upstream
+  *     (e.g. the flagship's decode UDF) runs exactly once, in that
+  *     exchange's map side.
+  *  2. One streaming scan per `(entity, bucket)` (row mode), with a one-row
+  *     lookahead: `lead(ts)` (null ⟺ the bucket's last row), `lag(c)` per
+  *     lag column, the running last non-null value per LOCF column, and,
+  *     when sessions are asked for, `lag(ts)`, `first(ts)`, the internal
+  *     gap flag and its running sum. No window projection is generated.
+  *     This relation feeds two branches (the bucket summaries and the
+  *     final rows), so it is [[Staging staged]]: the exchange and the scan
+  *     run once.
   *  3. Each bucket's summary is its LAST row — no aggregate: its running
   *     values already are the bucket's last ts, first ts, internal
   *     boundary count, last lag values and last non-null LOCF values. The
   *     summary is tiny (one row per non-empty bucket), so the cross-bucket
-  *     carries are a window over the per-entity bucket timeline: the
-  *     previous bucket's last values (the first row's lag), the latest
-  *     non-null LOCF value of any earlier bucket, whether this bucket
-  *     STARTS a session (`first_ts - prev_last_ts > gap`), and the running
-  *     count of session boundaries in earlier buckets.
+  *     carries are the same Exec in carry-in mode over the per-entity
+  *     bucket timeline (clustered on entity, ordered by bucket, exclusive
+  *     of the bucket itself): the previous bucket's last values (the first
+  *     row's lag), the latest non-null LOCF value of any earlier bucket,
+  *     whether this bucket STARTS a session (`first_ts - prev_last_ts >
+  *     gap`), and the running count of session boundaries in earlier
+  *     buckets.
   *  4. Broadcast-join the carries back on (entity, bucket) and stitch:
   *     `session_id = carried_offset + bucket_start_flag + internal_cumsum`,
   *     first-row lag and LOCF fall back to the carried values.
+  *
+  * No `WindowExec` is planned, so a pass generates no window projections;
+  * its only generated classes beyond the exchange, sort and stitch are one
+  * output projection per Exec.
   *
   * The carries hold one row per non-empty (entity, bucket), lag and LOCF
   * payloads included. Only at extreme scale (10^12 rows at 10^5-10^6 rows
@@ -90,47 +100,55 @@ object BucketedWindows {
       gap: Option[Long]) {
     require(bucketWidth > 0, "bucketWidth must be positive")
 
-    def apply(df: DataFrame): DataFrame = stitch(Staging.stage(windowed(df)))
+    /** The pass over `df`. Its staged relation keeps only the rows `reads`
+      * selects (and each bucket's last row, which the carries read), so
+      * the output holds no others; it also drops the `unread` columns,
+      * which the stitch must not need. */
+    def apply(df: DataFrame, reads: Column = lit(true), unread: Seq[String] = Nil): DataFrame =
+      stitch(Staging.stage(windowed(df).where(reads || col(NEXT).isNull).drop(unread: _*)))
 
-    /** Steps 1-2: the one exchange and the one window stage (unstaged). */
+    /** Steps 1-2: the one exchange and the row-mode pass (unstaged). */
     def windowed(df: DataFrame): DataFrame = {
-      val ts = col(tsCol)
-      val w = Window.partitionBy(col(entityCol), col(B)).orderBy(ts +: tieBreak.map(col): _*)
-      val cum = w.rowsBetween(Window.unboundedPreceding, 0)
-      val prev = if (lagCols.nonEmpty || gap.nonEmpty) Seq(lag(ts, 1).over(w).as(PREV)) else Nil
-      val local = df
-        .withColumn(B, floor(ts / bucketWidth))
-        .repartition(col(entityCol), col(B))
-        .select(
-          Seq(col("*"), lead(ts, 1).over(w).as(NEXT)) ++ prev ++
-            gap.map(_ => first(ts).over(cum).as(FIRST)) ++
-            lagCols.map(c => lag(col(c), 1).over(w).as(lagOf(c))) ++
-            locfCols.map(c => last(col(c), ignoreNulls = true).over(cum).as(locfOf(c))): _*)
-      gap.fold(local)(g =>
-        local
-          .withColumn(GAP, when(col(PREV).isNotNull && ts - col(PREV) > g, 1L).otherwise(0L))
-          .withColumn(SESS, sum(col(GAP)).over(cum)))
+      val withPrev = lagCols.nonEmpty || gap.nonEmpty
+      BucketedPass(
+        df.withColumn(B, floor(col(tsCol) / bucketWidth)),
+        keys = Seq(entityCol, B),
+        order = tsCol +: tieBreak,
+        ts = tsCol,
+        start = tsCol,
+        inner = None,
+        lagIn = lagCols,
+        locfIn = locfCols,
+        gap = gap,
+        carryIn = false,
+        withPrev = withPrev,
+        names = Seq(NEXT) ++ (if (withPrev) Seq(PREV) else Nil) ++ gap.map(_ => FIRST) ++
+          lagCols.map(lagOf) ++ locfCols.map(locfOf) ++ gap.toSeq.flatMap(_ => Seq(GAP, SESS)))
     }
 
     /** Steps 3-4 over the staged windowed relation. */
     private def stitch(local: DataFrame): DataFrame = {
-      val e = col(entityCol)
-      val wPrev = Window.partitionBy(e).orderBy(col(B))
-      val wBefore = wPrev.rowsBetween(Window.unboundedPreceding, -1)
       // each bucket's summary is its last row; null-ts rows carry nothing
-      val summary = local.where(col(NEXT).isNull && col(B).isNotNull)
-      val flagged = summary.select(
-        Seq(e, col(B)) ++
-          lagCols.map(c => lag(col(c), 1).over(wPrev).as(s"__carry_lag_$c")) ++
-          locfCols.map(c => last(col(locfOf(c)), ignoreNulls = true).over(wBefore).as(s"__carry_$c")) ++
-          gap.toSeq.flatMap(_ => Seq(col(FIRST), col(SESS), lag(col(tsCol), 1).over(wPrev).as("__prev_last"))): _*)
-      val carries = gap.fold(flagged)(g =>
-        flagged
-          .withColumn(
-            "__flag",
-            when(col("__prev_last").isNull || col(FIRST) - col("__prev_last") > g, 1L).otherwise(0L))
-          .withColumn("__offset", coalesce(sum(col("__flag") + col(SESS)).over(wBefore), lit(0L)))
-          .drop(FIRST, SESS, "__prev_last"))
+      val summary = local
+        .where(col(NEXT).isNull && col(B).isNotNull)
+        .select((Seq(entityCol, B, tsCol) ++ gap.toSeq.flatMap(_ => Seq(FIRST, SESS)) ++ lagCols ++
+          locfCols.map(locfOf)).map(col): _*)
+      val carryCols = lagCols.map(c => s"__carry_lag_$c") ++ locfCols.map(c => s"__carry_$c") ++
+        gap.toSeq.flatMap(_ => Seq("__flag", "__offset"))
+      val carries = BucketedPass(
+        summary,
+        keys = Seq(entityCol),
+        order = Seq(B),
+        ts = tsCol,
+        start = gap.fold(tsCol)(_ => FIRST),
+        inner = gap.map(_ => SESS),
+        lagIn = lagCols,
+        locfIn = locfCols.map(locfOf),
+        gap = gap,
+        carryIn = true,
+        withPrev = false,
+        names = carryCols)
+        .select((Seq(entityCol, B) ++ carryCols).map(col): _*)
       val isFirst = col(PREV).isNull
       val out = local
         .join(broadcast(carries), Seq(entityCol, B), "left")
@@ -142,10 +160,7 @@ object BucketedWindows {
                 (col("__offset") + col("__flag") + col(SESS)).as("session_id"))) ++
             lagCols.map(c => when(isFirst, col(s"__carry_lag_$c")).otherwise(col(lagOf(c))).as(s"${c}_lag1")) ++
             locfCols.map(c => coalesce(col(locfOf(c)), col(s"__carry_$c")).as(s"${c}_filled")): _*)
-      out.drop(
-        Seq(B, NEXT, PREV, FIRST, GAP, SESS, "__flag", "__offset") ++
-          lagCols.flatMap(c => Seq(lagOf(c), s"__carry_lag_$c")) ++
-          locfCols.flatMap(c => Seq(locfOf(c), s"__carry_$c")): _*)
+      out.drop(Seq(B, NEXT, PREV, FIRST, GAP, SESS) ++ lagCols.map(lagOf) ++ locfCols.map(locfOf) ++ carryCols: _*)
     }
   }
 }

@@ -2,6 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLMetric
+
+import java.util.{Collections, WeakHashMap}
 
 /** The one place a relation is materialized.
   *
@@ -16,10 +20,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    round of `components`, and `ngramJaccard`'s output (read by the
   *    caller and by `components`' edges);
   *  - `TextAnalysis.tfidf`: the tf relation;
-  *  - `BucketedWindows.Pass`: its windowed relation (read by the bucket
-  *    summaries and the final rows), so `frameWindows` and `AsOfJoin.asOf`
-  *    each stage once, and the input's work runs once, in the map side of
-  *    the pass's exchange;
+  *  - `BucketedWindows.Pass`: the output of its row-mode
+  *    `BucketedPassExec` (read by the bucket summaries and the final
+  *    rows), so `frameWindows` and `AsOfJoin.asOf` each stage once, and the
+  *    input's work runs once, in the map side of the pass's exchange;
+  *    `asOf` stages only its probe rows and each bucket's last row, and
+  *    the match's fill but not the match;
   *  - `FeaturePipeline.frameFeatures`: its output (read by the per-second
   *    mean and the as-of join).
   *
@@ -35,7 +41,27 @@ import org.apache.spark.sql.execution.LogicalRDD
   * is a change to this file only. */
 object Staging {
 
-  def stage(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+  /** The SQL metrics of each staged relation's executed plan, held for as
+    * long as the staged relation's RDD is reachable. The tasks that compute
+    * the staged partitions report to them, also after the planning
+    * Dataset is gone; were they collected, the driver would log
+    * `Failed to update accumulator` and lose their updates. Only the
+    * metrics: holding the whole QueryExecution kept the staged blocks from
+    * ever being released (a flagship pass left 11 MB pinned). */
+  private val planMetrics = Collections.synchronizedMap(new WeakHashMap[AnyRef, Seq[SQLMetric]])
+  private val plans = new AdaptiveSparkPlanHelper {}
+
+  def stage(df: DataFrame): DataFrame = {
+    val staged = df.localCheckpoint(eager = false)
+    staged.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        planMetrics.put(lr.rdd, plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+          case p => p.metrics.values
+        }.flatten)
+      case _ => ()
+    }
+    staged
+  }
 
   /** Best-effort release of a [[stage]]d relation's blocks (a no-op for
     * any other relation). Iterative callers stage a new relation per round

@@ -18,17 +18,20 @@ import graft.synth.SynthImages
   *  - the fused codec UDF means raw pixels never leave the row pipeline —
   *    only the 54-float feature crosses any exchange;
   *  - three relations are staged ([[Staging]]) per run: the window pass's
-  *    windowed frames (read by its bucket summaries and its final rows),
+  *    scanned frames (read by its bucket summaries and its final rows),
   *    the frame features (read by the per-second mean and the as-of
-  *    join), and the as-of pass's windowed union — so the codec, the
-  *    window stage and the as-of window each run once;
+  *    join), and the as-of pass's scanned union (probe rows and each
+  *    bucket's last row only) — so the codec, the window scan and the
+  *    as-of scan each run once;
   *  - ALL per-frame window features (LOCF fill, lag-1 delta, gap session)
   *    run in ONE fused time-bucketed pass ([[BucketedWindows]], round-5
   *    judge directive #3): one `(entity, bucket)` exchange of the decoded
   *    rows + a negligible per-bucket carry relation, so a hot entity (hot
   *    phash cluster) spreads over ts-range/bucketWidth tasks instead of
   *    landing its whole history in one — the same skew treatment the as-of
-  *    join downstream already had;
+  *    join downstream already had. Both passes run as the hand-written
+  *    `BucketedPassExec` (no `WindowExec`), so a pass generates few
+  *    classes and a warm pass finds all of them in Spark's codegen cache;
   *  - the per-second aggregate is a partial-aggregating `vecAvg` groupBy on a
   *    prefix of the same key (entity, sec) — map-side combine before shuffle;
   *  - the probe as-of join is the time-bucketed AsOfJoin (hot-entity safe).

@@ -121,4 +121,42 @@ class AsOfJoinSpec extends SparkSpec {
       .orderBy("entity", "ts", "probe_id").collect().toSeq
     assert(a == b)
   }
+
+  test("null-ts rows, one-bucket entities and ties at one ts keep their matches") {
+    val build = Seq[(String, Option[Long], Double)](
+      ("e0", Some(10L), 1.0), // a tie at ts 10: the largest match struct wins
+      ("e0", Some(10L), 3.0),
+      ("e0", Some(10L), 2.0),
+      ("e0", Some(250L), 7.0),
+      ("e0", None, 5.0), // null-ts builds: only null-ts probes, in their own group, see them
+      ("e0", None, 6.0),
+      ("solo", Some(3L), 4.0)) // an entity with one bucket
+      .toDF("entity", "ts", "v")
+    val probes = Seq[(String, Option[Long], Int)](
+      ("e0", Some(10L), 0), // at the tie
+      ("e0", Some(9L), 1), // before every build
+      ("e0", Some(260L), 2),
+      ("e0", Some(120L), 3), // carried from bucket 0
+      ("e0", None, 4), // no carry: the last of its group's builds, by match struct
+      ("solo", Some(5L), 5),
+      ("solo", None, 6),
+      ("none", None, 7)) // no builds at all
+      .toDF("entity", "ts", "probe_id")
+    val got = AsOfJoin
+      .asOf(probes, build, "entity", "ts", Seq("v"), bucketWidth = 100L)
+      .select($"probe_id", col(AsOfJoin.SrcTs), $"v")
+      .orderBy("probe_id")
+      .collect()
+      .map(r => (r.getInt(0), Option(r.get(1)), Option(r.get(2))))
+      .toSeq
+    assert(got == Seq(
+      (0, Some(10L), Some(3.0)),
+      (1, None, None),
+      (2, Some(250L), Some(7.0)),
+      (3, Some(10L), Some(3.0)),
+      (4, None, Some(6.0)),
+      (5, Some(3L), Some(4.0)),
+      (6, None, None),
+      (7, None, None)))
+  }
 }

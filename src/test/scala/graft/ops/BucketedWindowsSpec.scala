@@ -38,9 +38,9 @@ class BucketedWindowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val df = rows.toDF("entity", "ts", "cap", "v")
 
-  private def plain = {
+  private def plain(in: DataFrame = df) = {
     val w = Window.partitionBy($"entity").orderBy($"ts")
-    val filled = Backfill.locf(df, "entity", "ts", Seq("cap"))
+    val filled = Backfill.locf(in, "entity", "ts", Seq("cap"))
     Sessionize
       .sessionize(filled, "entity", "ts", Gap)
       .withColumn("v_lag1", lag($"v", 1).over(w))
@@ -51,7 +51,7 @@ class BucketedWindowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("bucketed frameWindows == plain locf+lag+sessionize on an adversarial fixture") {
     val cols = Seq("entity", "ts", "cap", "v", "cap_filled", "v_lag1", "is_session_start", "session_id")
-    val a = plain.select(cols.map(col): _*).orderBy("entity", "ts").collect().map(_.toSeq).toSeq
+    val a = plain().select(cols.map(col): _*).orderBy("entity", "ts").collect().map(_.toSeq).toSeq
     val b = bucketed.select(cols.map(col): _*).orderBy("entity", "ts").collect().map(_.toSeq).toSeq
     assert(a.size == rows.size)
     assert(a == b)
@@ -89,5 +89,31 @@ class BucketedWindowsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(entityAlone.head._2 <= buckets,
       s"the entity-alone exchange wrote ${entityAlone.head._2} rows for $buckets (entity, bucket)s")
     assert(outer.forall(x => x._1 == Seq("entity")), s"a second exchange above the staged relation: $outer")
+  }
+
+  test("null-ts rows are kept with no carries; one-bucket entities need none") {
+    val extra = Seq[(String, Option[Long], Option[String], Double)](
+      ("solo", Some(3L), Some("s"), 1.0), // three rows in one bucket
+      ("solo", Some(5L), None, 2.0),
+      ("solo", Some(7L), None, 3.0),
+      ("hot", None, Some("cx"), 9.0), // a null ts in an entity with many buckets
+      ("nul", None, None, 1.0),
+      ("nul", None, None, 4.0),
+      ("ghost", None, Some("g"), 2.0)) // an entity with no ts at all
+    val in = (rows.map(r => (r._1, Option(r._2), r._3, r._4)) ++ extra).toDF("entity", "ts", "cap", "v")
+    val out = BucketedWindows.frameWindows(in, "entity", "ts", W, Gap, locfCols = Seq("cap"), lagCols = Seq("v"))
+    val cols = Seq("entity", "ts", "cap", "v", "cap_filled", "v_lag1", "is_session_start", "session_id").map(col)
+    def sorted(d: DataFrame) = d.select(cols: _*).orderBy("entity", "ts", "v").collect().map(_.toSeq).toSeq
+    // rows with a ts: the plain formulation over those rows alone
+    assert(sorted(out.where($"ts".isNotNull)) == sorted(plain(in.where($"ts".isNotNull))))
+    // a null-ts row keeps its columns, fills only from its own group's
+    // rows (each group here has at most one non-null cap) and takes no
+    // lag, session or carry
+    val nulls = sorted(out.where($"ts".isNull))
+    assert(nulls == Seq(
+      Seq("ghost", null, "g", 2.0, "g", null, null, null),
+      Seq("hot", null, "cx", 9.0, "cx", null, null, null),
+      Seq("nul", null, null, 1.0, null, null, null, null),
+      Seq("nul", null, null, 4.0, null, null, null, null)))
   }
 }
