@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   * domain (frames per recording, ~10^3..10^4 — `frame_utils.py:44-51` at
   * 30 fps), so entity-partitioned windows hold at 10^12 total rows: scale
   * comes from entity cardinality, not entity size. For unbounded entities use
-  * [[locfBucketed]], which reuses the AsOfJoin carry-in trick to keep any one
-  * task's state at one time-bucket.
+  * [[locfBucketed]], which runs on the shared bucketed pass
+  * ([[BucketedWindows.Pass]], the same operator as the flagship windows and
+  * the as-of join), so any one task holds one time-bucket. [[locf]] stays
+  * the plain `Window` form: the properties compare the pass against it.
   */
 object Backfill {
 
@@ -62,48 +64,16 @@ object Backfill {
     }
   }
 
-  /** Skew-proof LOCF: bucket the time axis, compute per-(entity, bucket) last
-    * non-null value (tiny relation), carry it across buckets with a window
-    * over the bucket timeline, then fill within buckets and coalesce with the
-    * carry. Any single task only ever holds one (entity, bucket). */
+  /** Skew-proof LOCF: the same fill as [[locf]] (`<c>_filled`), run as one
+    * [[BucketedWindows.Pass]] — the fill within each `(entity, time-bucket)`
+    * plus the pass's carry of the latest non-null value of earlier buckets.
+    * Any single task only ever holds one (entity, bucket). */
   def locfBucketed(
       df: DataFrame,
       entityCol: String,
       tsCol: String,
       c: String,
       bucketWidth: Long,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    require(bucketWidth > 0)
-    val b = "__locf_bucket"
-    val e = col(entityCol)
-    val withB = df.withColumn(b, floor(col(tsCol) / bucketWidth))
-    // last non-null value per (entity, bucket): max over (ts, tieBreak, value)
-    // struct restricted to non-null values.
-    val orderFields = (col(tsCol) +: tieBreak.map(col)) :+ col(c)
-    val lastPerBucket = withB
-      .where(col(c).isNotNull)
-      .groupBy(e, col(b))
-      .agg(max(struct(orderFields: _*)).as("__last"))
-    val wCarry = Window
-      .partitionBy(e)
-      .orderBy(col(b))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = withB
-      .select(e, col(b))
-      .distinct()
-      .join(lastPerBucket, Seq(entityCol, b), "left_outer")
-      .withColumn("__carry", max(col("__last")).over(wCarry))
-      .select(e, col(b), col(s"__carry.$c").as("__carry_val"))
-    val order: Seq[Column] = col(tsCol) +: tieBreak.map(col)
-    val wIn = Window
-      .partitionBy(e, col(b))
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    withB
-      .join(carries, Seq(entityCol, b), "left_outer")
-      .withColumn(
-        s"${c}_filled",
-        coalesce(last(col(c), ignoreNulls = true).over(wIn), col("__carry_val")))
-      .drop(b, "__carry_val")
-  }
+      tieBreak: Seq[String] = Nil): DataFrame =
+    BucketedWindows.Pass(entityCol, tsCol, bucketWidth, tieBreak, Seq(c), Nil, None)(df)
 }

@@ -16,7 +16,8 @@ import org.apache.spark.util.AccumulatorV2
 /** The logical node of [[BucketedWindows.Pass]]: one ordered scan of each
   * cluster of rows with equal `keys`, in `order` (ascending, nulls first).
   * It keeps every child row and appends `added`, in this order:
-  *  - row mode only: `lead(ts)`, then `lag(ts)` if `withPrev`, then
+  *  - row mode only: `lead(ts)`, then `lag(ts)` with `lagIn` columns or a
+  *    `gap` (the stitch finds each bucket's first row by it), then
   *    `first(ts)` with a `gap`;
   *  - `lag(c)` per `lagIn` entry;
   *  - the LOCF of each `locfIn` entry, the last non-null value so far:
@@ -43,7 +44,6 @@ private[ops] final case class BucketedPass(
     locfIn: Seq[Expression],
     gap: Option[Long],
     carryIn: Boolean,
-    withPrev: Boolean,
     added: Seq[Attribute],
     child: LogicalPlan)
     extends UnaryNode {
@@ -68,7 +68,6 @@ private[ops] object BucketedPass {
       locfIn: Seq[String],
       gap: Option[Long],
       carryIn: Boolean,
-      withPrev: Boolean,
       names: Seq[String]): DataFrame = {
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute =
@@ -78,7 +77,7 @@ private[ops] object BucketedPass {
       require(
         Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType).contains(t.dataType),
         s"a session gap needs a numeric ts, not ${t.dataType}")
-    val rowTs = if (carryIn) Nil else Seq(t) ++ (if (withPrev) Seq(t) else Nil) ++ gap.map(_ => t)
+    val rowTs = if (carryIn) Nil else Seq(t) ++ (if (lagIn.nonEmpty || gap.nonEmpty) Seq(t) else Nil) ++ gap.map(_ => t)
     val types = (rowTs ++ lagIn.map(attr) ++ locfIn.map(attr)).map(_.dataType) ++ gap.toSeq.flatMap(_ => Seq(LongType, LongType))
     require(types.size == names.size, s"${names.size} names for ${types.size} added columns")
     val added = names.zip(types).map { case (n, dt) => AttributeReference(n, dt)() }
@@ -87,7 +86,7 @@ private[ops] object BucketedPass {
       df.sparkSession,
       BucketedPass(
         keys.map(attr), order.map(attr), t, attr(start), inner.fold[Expression](Literal(0L))(attr),
-        lagIn.map(attr), locfIn.map(attr), gap, carryIn, withPrev, added, child))
+        lagIn.map(attr), locfIn.map(attr), gap, carryIn, added, child))
   }
 }
 
@@ -96,7 +95,7 @@ private[ops] object BucketedPassStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: BucketedPass =>
       BucketedPassExec(
-        p.keys, p.order, p.ts, p.start, p.inner, p.lagIn, p.locfIn, p.gap, p.carryIn, p.withPrev, p.added,
+        p.keys, p.order, p.ts, p.start, p.inner, p.lagIn, p.locfIn, p.gap, p.carryIn, p.added,
         planLater(p.child)) :: Nil
     case _ => Nil
   }
@@ -132,7 +131,6 @@ private[ops] final case class BucketedPassExec(
     locfIn: Seq[Expression],
     gap: Option[Long],
     carryIn: Boolean,
-    withPrev: Boolean,
     added: Seq[Attribute],
     child: SparkPlan)
     extends UnaryExecNode {
@@ -168,7 +166,7 @@ private[ops] final case class BucketedPassExec(
       case _ => (a, b) => a.asInstanceOf[Number].longValue - b.asInstanceOf[Number].longValue > limit
     }
     val types = (in ++ added).map(_.dataType).toArray
-    val (g, carry, prevTs, nAdded) = (gap, carryIn, withPrev, added.size)
+    val (g, carry, prevTs, nAdded) = (gap, carryIn, lagIn.nonEmpty || gap.nonEmpty, added.size)
     val rowsOut = longMetric("numOutputRows")
     val (buckets, maxRows, carried) = (metrics.get("numBuckets"), metrics.get("maxBucketRows"), metrics.get("carryInRows"))
 

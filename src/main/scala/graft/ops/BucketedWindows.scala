@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * `Window.partitionBy(entity)`, so a hot entity — a hot phash cluster, the
   * north rule's skew case — landed its entire history in a single task).
   * The pass ([[Pass]]) is the engine's one bucketed temporal operator:
-  * [[frameWindows]] and [[AsOfJoin.asOf]] are both built on it.
+  * [[frameWindows]], [[AsOfJoin.asOf]] and [[Backfill.locfBucketed]] are
+  * all built on it.
   *
   * Shape (one logical node, [[BucketedPass]], planned into
   * [[BucketedPassExec]] by [[BucketedPassStrategy]]):
@@ -108,8 +109,7 @@ object BucketedWindows {
       stitch(Staging.stage(windowed(df).where(reads || col(NEXT).isNull).drop(unread: _*)))
 
     /** Steps 1-2: the one exchange and the row-mode pass (unstaged). */
-    def windowed(df: DataFrame): DataFrame = {
-      val withPrev = lagCols.nonEmpty || gap.nonEmpty
+    def windowed(df: DataFrame): DataFrame =
       BucketedPass(
         df.withColumn(B, floor(col(tsCol) / bucketWidth)),
         keys = Seq(entityCol, B),
@@ -121,10 +121,8 @@ object BucketedWindows {
         locfIn = locfCols,
         gap = gap,
         carryIn = false,
-        withPrev = withPrev,
-        names = Seq(NEXT) ++ (if (withPrev) Seq(PREV) else Nil) ++ gap.map(_ => FIRST) ++
+        names = Seq(NEXT) ++ (if (lagCols.nonEmpty || gap.nonEmpty) Seq(PREV) else Nil) ++ gap.map(_ => FIRST) ++
           lagCols.map(lagOf) ++ locfCols.map(locfOf) ++ gap.toSeq.flatMap(_ => Seq(GAP, SESS)))
-    }
 
     /** Steps 3-4 over the staged windowed relation. */
     private def stitch(local: DataFrame): DataFrame = {
@@ -146,7 +144,6 @@ object BucketedWindows {
         locfIn = locfCols.map(locfOf),
         gap = gap,
         carryIn = true,
-        withPrev = false,
         names = carryCols)
         .select((Seq(entityCol, B) ++ carryCols).map(col): _*)
       val isFirst = col(PREV).isNull

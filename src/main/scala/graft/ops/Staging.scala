@@ -22,8 +22,9 @@ import java.util.{Collections, WeakHashMap}
   *  - `TextAnalysis.tfidf`: the tf relation;
   *  - `BucketedWindows.Pass`: the output of its row-mode
   *    `BucketedPassExec` (read by the bucket summaries and the final
-  *    rows), so `frameWindows` and `AsOfJoin.asOf` each stage once, and the
-  *    input's work runs once, in the map side of the pass's exchange;
+  *    rows), so `frameWindows`, `AsOfJoin.asOf` and
+  *    `Backfill.locfBucketed` each stage once, and the input's work runs
+  *    once, in the map side of the pass's exchange;
   *    `asOf` stages only its probe rows and each bucket's last row, and
   *    the match's fill but not the match;
   *  - `FeaturePipeline.frameFeatures`: its output (read by the per-second

@@ -20,8 +20,8 @@ class PinnedBlocksSpec extends SparkSpec {
       SparkEntry.releaseBetweenQueries(s, dir)
     }
 
-    Seq("q_ann_lsh", "q_ann_recall", "q_ann_topk", "q_image_seconds_ceil", "q_image_seconds_floor")
-      .foreach(run)
+    Seq("q_ann_lsh", "q_ann_recall", "q_ann_topk", "q_image_seconds_ceil", "q_image_seconds_floor",
+      "q_locf_bucketed").foreach(run)
     assert(SparkEntry.pairGraphStagedIds(s, dir).isEmpty)
     assert(sc.getPersistentRDDs.isEmpty, s"pinned after hygiene: ${sc.getPersistentRDDs.keys}")
 

@@ -13,12 +13,12 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** The one bucketed pass takes each bucket's summary from the bucket's last
-  * row: neither `frameWindows` nor `asOf` executes an aggregate (the
-  * payload-sorting `max_by(vec, ts)` / `max(struct(payload))`
-  * SortAggregates), and `asOf` builds no full-outer carry timeline. Both
-  * passes run as [[BucketedPassExec]], with no `WindowExec`, and publish
-  * its metrics. Both the operator's own plan and its staged windowed
-  * relation are checked. */
+  * row: none of `frameWindows`, `asOf` and `locfBucketed` executes an
+  * aggregate (the payload-sorting `max_by(vec, ts)` / `max(struct(payload))`
+  * SortAggregates), and `asOf` builds no full-outer carry timeline. All
+  * three run as [[BucketedPassExec]], with no `WindowExec`, and publish its
+  * metrics. Each operator's own plan and its staged windowed relation are
+  * checked. */
 class BucketedPassPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -46,6 +46,8 @@ class BucketedPassPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val fwPass = BucketedWindows.Pass("entity", "ts", 8L, Nil, Seq("cap"), Seq("vec"), Some(2L))
   private val build = events.select($"entity", $"ts", $"vec".as("f_vec"), $"cap".as("f_cap"))
   private def aj = AsOfJoin.asOf(probes, build, "entity", "ts", Seq("f_vec", "f_cap"), 8L)
+  private def lb = Backfill.locfBucketed(events, "entity", "ts", "cap", 8L)
+  private val lbPass = BucketedWindows.Pass("entity", "ts", 8L, Nil, Seq("cap"), Nil, None)
 
   /** Fresh plans on every call: metrics accumulate over a plan's runs. */
   private def plans = {
@@ -54,7 +56,9 @@ class BucketedPassPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "frameWindows" -> fw,
       "frameWindows' staged relation" -> fwPass.windowed(events),
       "asOf" -> aj,
-      "asOf's staged relation" -> ajPass.windowed(tagged))
+      "asOf's staged relation" -> ajPass.windowed(tagged),
+      "locfBucketed" -> lb,
+      "locfBucketed's staged relation" -> lbPass.windowed(events))
   }
 
   test("frameWindows and asOf execute no aggregate and no full outer join") {
@@ -95,6 +99,8 @@ class BucketedPassPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(execs("frameWindows") == carryIn(frames))
     assert(execs("asOf's staged relation") == rowMode(union))
     assert(execs("asOf") == carryIn(union))
+    assert(execs("locfBucketed's staged relation") == rowMode(frames))
+    assert(execs("locfBucketed") == carryIn(frames))
   }
 
   test("the pass registers its strategy once, on the session that builds it") {

@@ -138,8 +138,25 @@ object EngineProps extends Properties("graft") {
       val plain = toMapOut(Backfill.locf(df, "entity", "ts", Seq("v")), "v_filled")
       val bucketed = toMapOut(
         Backfill.locfBucketed(df, "entity", "ts", "v", width), "v_filled")
+      // duplicate ts kept, ordered by a unique tie-break id; every other
+      // row's value is null, so ties mix null and non-null values
+      val tied = rows.zipWithIndex.map { case ((e, t, v), i) => (e, t, i, if (i % 2 == 0) Some(v) else None) }
+      val tiedDf = tied.toDF("entity", "ts", "id", "v")
+      val wantTied = tied.map { case (e, t, i, _) =>
+        i -> tied.filter(x => x._1 == e && (x._2 < t || x._2 == t && x._3 <= i) && x._4.isDefined)
+          .sortBy(x => (x._2, x._3)).lastOption.flatMap(_._4)
+      }.toMap
+      def byId(df2: DataFrame) =
+        df2.collect().map { r =>
+          r.getInt(r.fieldIndex("id")) ->
+            (if (r.isNullAt(r.fieldIndex("v_filled"))) None else Some(r.getDouble(r.fieldIndex("v_filled"))))
+        }.toMap
+      val plainTied = byId(Backfill.locf(tiedDf, "entity", "ts", Seq("v"), Seq("id")))
+      val bucketedTied = byId(Backfill.locfBucketed(tiedDf, "entity", "ts", "v", width, Seq("id")))
       (plain == want) :| s"locf: $plain != $want" &&
-      (bucketed == want) :| s"locfBucketed($width): $bucketed != $want"
+      (bucketed == want) :| s"locfBucketed($width): $bucketed != $want" &&
+      (plainTied == wantTied) :| s"locf with ties: $plainTied != $wantTied" &&
+      (bucketedTied == wantTied) :| s"locfBucketed($width) with ties: $bucketedTied != $wantTied"
     }
 
   property("sessionize: consecutive gaps <= threshold inside, > threshold across") =
