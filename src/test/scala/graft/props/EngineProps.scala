@@ -138,9 +138,10 @@ object EngineProps extends Properties("graft") {
       val plain = toMapOut(Backfill.locf(df, "entity", "ts", Seq("v")), "v_filled")
       val bucketed = toMapOut(
         Backfill.locfBucketed(df, "entity", "ts", "v", width), "v_filled")
-      // duplicate ts kept, ordered by a unique tie-break id; every other
-      // row's value is null, so ties mix null and non-null values
-      val tied = rows.zipWithIndex.map { case ((e, t, v), i) => (e, t, i, if (i % 2 == 0) Some(v) else None) }
+      // duplicate ts kept, ordered by a unique tie-break id that runs
+      // against the input order; every other row's value is null, so ties
+      // mix null and non-null values
+      val tied = rows.zipWithIndex.map { case ((e, t, v), i) => (e, t, -i, if (i % 2 == 0) Some(v) else None) }
       val tiedDf = tied.toDF("entity", "ts", "id", "v")
       val wantTied = tied.map { case (e, t, i, _) =>
         i -> tied.filter(x => x._1 == e && (x._2 < t || x._2 == t && x._3 <= i) && x._4.isDefined)
