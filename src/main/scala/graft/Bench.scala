@@ -92,11 +92,13 @@ object Bench {
     graft.obs.QueryReport.consume(graft.pipeline.FeaturePipeline.frameFeatures(filtered))
   }
 
-  /** Release every persisted RDD's blocks (the flagship's `frameFeatures`
-    * stages two relations per pipeline instance, its window pass's
-    * windowed frames and the frame features; ScaleChild builds the
-    * pipeline once per unit and calls this between units so the block
-    * manager does not grow monotonically). */
+  /** Release every persisted RDD's blocks: the between-query hygiene of
+    * every timing loop (this one, `obs.QueryReport`) and ScaleChild's
+    * between-unit hygiene. A query's staged relations (the flagship's
+    * window pass and frame features, the dedup shingle stages, resume
+    * state) are dead once its action returns; releasing them keeps a loop
+    * from growing the block manager monotonically and from letting one
+    * query time another's work. */
   private[graft] def releasePersistedRdds(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
 
@@ -132,7 +134,8 @@ object Bench {
   /** Quiet-host per-query reference seconds (sf0.1, local[32], host load
     * < 3 — round-5 base; the entries that moved ≥25% were refreshed from
     * round 7's quiet validation run 7 after the staged-tfidf /
-    * streaming-state-store / pair-graph work landed). Used as the
+    * streaming-state-store / pair-graph memo work landed; the memo is
+    * gone since, see the q_dedup_components note). Used as the
     * repair-pass trigger (first pass above 2× reference earns one re-run)
     * and to size the watchdog cap (10×, floor 20 s — every cap keeps ≥2×
     * headroom over the worst CONTENDED timing observed in rounds 5-7).
@@ -145,10 +148,9 @@ object Bench {
     "q_asof_merge" -> 2.87, "q_asof_stateful" -> 0.88, "q_asof_tolerance" -> 0.37,
     "q_audio_clip_stats" -> 1.00, "q_audio_resample" -> 0.26, "q_audio_roundtrip" -> 0.27,
     "q_bfill" -> 0.21, "q_chunked" -> 0.20, "q_cosine_near_dup" -> 0.83,
-    // r6: q_dedup_components no longer recomputes the LSH pipeline (it
-    // reads the session-staged pair graph its loop predecessor
-    // q_minhash_lsh now owns and pays for — see the loop-order note);
-    // q_minhash_lsh gains that one-time stage materialization.
+    // q_dedup_components builds its own MinHash pair graph, so its first
+    // pass exceeds 2× this reference (set in r6, when it read the graph
+    // q_minhash_lsh staged for it) and earns one repair re-run.
     "q_dedup_components" -> 2.0, "q_tfidf" -> 0.7, "q_hash_split" -> 0.3,
     "q_dedup_exact" -> 0.49, "q_depth_clamp" -> 0.26, "q_depth_roundtrip" -> 0.21,
     "q_fingerprint" -> 0.18, "q_grayscale" -> 0.22, "q_histogram" -> 0.45,
@@ -617,7 +619,7 @@ object Bench {
     // publish each timing as it lands: a driver-timeout SIGTERM during the
     // query phase must still emit every COMPLETED timing
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val orderedQ = SparkEntry.orderedQueries // pair-graph owner before its consumer
+    val orderedQ = SparkEntry.orderedQueries // alphabetical
     // Fault-injection hook (validates the watchdog END-TO-END): with
     // SPARK_GRAFT_BENCH_FAULT_SLEEP_SEC=N set, an extra query whose every
     // task sleeps N seconds joins the loop — it must cost its cap (not N×
@@ -636,8 +638,8 @@ object Bench {
         })
       }.toSeq
     // persisted-block hygiene after every run (first pass and repair
-    // alike): SparkEntry.releaseBetweenQueries
-    def afterQuery(): Unit = SparkEntry.releaseBetweenQueries(spark, sfDir)
+    // alike): no blocks survive a query
+    def afterQuery(): Unit = releasePersistedRdds(spark)
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         capSec: Long): Double = {
       val gc0 = gcMillis

@@ -79,75 +79,6 @@ object SparkEntry {
     p.toString
   }
 
-  /** The MinHash-LSH near-dup pair graph `(doc_a, doc_b, jaccard)` feeds TWO
-    * driver queries — q_minhash_lsh (the pairs themselves) and
-    * q_dedup_components (canonicalization over them). Recomputing it per
-    * query made q_dedup_components the heaviest loop entry (round-5 judge:
-    * 10.1 s, ~6 s of it the redundant LSH recompute). Memoized per
-    * (session, dir) with the RESULT relation staged ([[Staging]]): the
-    * owner builds it ([[ownPairGraph]]), the consumer reads the staged
-    * relation ([[memoPairGraph]]). Keyed on the session so a fresh session
-    * (new Verify/Bench run in one JVM) never reuses blocks a stopped
-    * session dropped; the map stays O(runs) small. */
-  private val pairGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** RDD ids backing the LIVE memoized pair graph (empty when no memo):
-    * exactly the blocks [[releaseBetweenQueries]] must keep —
-    * a staged relation's lineage is truncated, so releasing them would FAIL
-    * the memo's next reader, not slow it. Derived from the memo itself
-    * rather than a persisted-RDDs snapshot (r7 review): a snapshot
-    * over-protects the owner's dead intermediates (signature stage) for the
-    * loop's lifetime, and misses a memo built by a non-owner consumer after
-    * a cancelled owner run. */
-  private[graft] def pairGraphStagedIds(s: SparkSession, dir: String): Set[Int] =
-    Option(pairGraphCache.get((s, dir))).toSeq.flatMap { df =>
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }
-    }.toSet
-
-  /** The query that owns the pair-graph memo: it runs right before its
-    * consumer q_dedup_components, and every run of it builds the graph, so
-    * no harness that re-times it can record a memo hit. */
-  private[graft] val PairGraphOwner = "q_minhash_lsh"
-
-  /** `queries` in the order every timing loop runs them: alphabetical,
-    * except that [[PairGraphOwner]] runs right before q_dedup_components.
-    * The owner then pays the one-time staging of the relation it defines,
-    * and the consumer measures only canonicalization; alphabetical order
-    * would bill the whole LSH pipeline to q_dedup_components ('d' < 'm')
-    * and make q_minhash_lsh look free. */
-  private[graft] def orderedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = {
-    val sortedQ = queries.toSeq.sortBy(_._1)
-    sortedQ.find(_._1 == PairGraphOwner) match {
-      case Some(owner) if sortedQ.exists(_._1 == "q_dedup_components") =>
-        val without = sortedQ.filterNot(_._1 == PairGraphOwner)
-        val i = without.indexWhere(_._1 == "q_dedup_components")
-        (without.take(i) :+ owner) ++ without.drop(i)
-      case _ => sortedQ
-    }
-  }
-
-  /** Between-query block hygiene: unpersist every persisted RDD except the
-    * ones backing the live pair-graph memo. A query's staged relations
-    * (flagship decode stage, dedup/ngram shingle stages, resume state) are
-    * dead once its action returns; releasing them keeps a loop of queries
-    * from growing the block manager monotonically and from letting one
-    * query time another's work. The pair graph is the exception: its owner
-    * stages blocks that q_dedup_components reads later, and a staged
-    * relation's lineage is truncated, so releasing them would FAIL the
-    * consumer rather than slow it. Protection is recomputed from the live
-    * memo on every call: the owner's dead intermediates and superseded
-    * graphs are released, and a memo built by the consumer after a
-    * cancelled owner run is still protected. */
-  private[graft] def releaseBetweenQueries(s: SparkSession, dir: String): Unit = {
-    val keep = pairGraphStagedIds(s, dir)
-    s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep.contains(id)) rdd.unpersist(blocking = false)
-    }
-  }
-
   /** The LSH ANN relation (query_id, rank, nn_id, cos) over the embeddings
     * table — q_ann_lsh's declared output, and q_ann_recall's ann side. */
   private def annApprox(s: SparkSession, dir: String): DataFrame = {
@@ -165,25 +96,6 @@ object SparkEntry {
       emb, emb.where(col("vec_id") % 50 === 0),
       "vec_id", "embedding", "vec_id", "embedding", 5)
   }
-
-  private def stagedPairGraph(s: SparkSession, dir: String): DataFrame =
-    Staging.stage(
-      graft.dedup.Dedup.minhashLsh(
-        spread(s.read.parquet(s"$dir/documents.parquet")), "doc_id", "text"))
-
-  /** [[PairGraphOwner]]'s body: builds, stages and memoizes a new graph on
-    * every run. The superseded memo loses its protection, so the next
-    * [[releaseBetweenQueries]] frees its blocks. */
-  private def ownPairGraph(s: SparkSession, dir: String): DataFrame = {
-    val g = stagedPairGraph(s, dir)
-    pairGraphCache.put((s, dir), g)
-    g
-  }
-
-  /** q_dedup_components' input: the live memo, built only when no owner run
-    * left one (e.g. a cancelled owner run). */
-  private def memoPairGraph(s: SparkSession, dir: String): DataFrame =
-    pairGraphCache.computeIfAbsent((s, dir), { case (sess, d) => stagedPairGraph(sess, d) })
 
   /** Shared body of q_tumbling_ceil / q_tumbling_floor: windows of 7 frames
     * on a dense per-label rank axis (row_number − 1, the reference's frame
@@ -331,6 +243,11 @@ object SparkEntry {
 
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     spread(s.read.parquet(s"$dir/documents.parquet"))
+
+  /** The MinHash-LSH near-dup pair graph `(doc_a, doc_b, jaccard)`:
+    * q_minhash_lsh's output and q_dedup_components' input, built by each. */
+  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    graft.dedup.Dedup.minhashLsh(docsSpread(s, dir), "doc_id", "text")
 
   private def embSpread(s: SparkSession, dir: String): DataFrame =
     spread(s.read.parquet(s"$dir/embeddings.parquet"))
@@ -991,7 +908,7 @@ object SparkEntry {
         .select(col("doc").as("doc_id"), concat_ws("|", col("sig")).as("sig"))),
     Query("q_minhash_lsh", Some(
       s"""WITH $MinhashPairsCte
-         |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin))(ownPairGraph),
+         |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin))(minhashPairs),
     Query("q_ngram_jaccard", Some(
       s"""WITH sh AS ($ShinglesCte),
          |e AS (SELECT doc_id, unnest(shs) AS s FROM sh),
@@ -1036,7 +953,7 @@ object SparkEntry {
          |  UNION
          |  SELECT e2.t, reach.r FROM reach JOIN edges e2 ON e2.s = reach.id)
          |SELECT id AS doc_id, min(r) AS comp FROM reach GROUP BY id""".stripMargin))((s, dir) =>
-      graft.dedup.Dedup.components(memoPairGraph(s, dir), "doc_a", "doc_b")),
+      graft.dedup.Dedup.components(minhashPairs(s, dir), "doc_a", "doc_b")),
     Query("q_cosine_near_dup", Some(
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS cos
@@ -1317,6 +1234,10 @@ object SparkEntry {
   /** Each query's body by name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.build).toMap
+
+  /** `queries` in the order every timing loop runs them: alphabetical. */
+  private[graft] def orderedQueries: Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1)
 
   /** Each SQL-expressible query's DuckDB oracle by name. */
   def oracleSql: Map[String, String] = registry.flatMap(q => q.oracle.map(q.name -> _)).toMap

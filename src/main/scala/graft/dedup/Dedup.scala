@@ -389,9 +389,14 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 15): DataFrame = {
+    // symmetrized from ONE read of `pairs`: a union of two projections
+    // would run an unstaged pair pipeline (e.g. minhashLsh's verification
+    // joins) once per branch
     val edges = Staging.stage(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+      pairs.select(explode(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
+        .select("e.*")
         .distinct())
     // Initial labels = min(self, min neighbor) — exactly what the first
     // propagation round used to compute from self-labels, folded into the

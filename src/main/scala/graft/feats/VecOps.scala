@@ -75,26 +75,9 @@ object VecOps {
     when(n === 0.0d, lit(null).cast("double")).otherwise(d / n)
   }
 
-  /** Cosine as a compiled UDF — the hot-loop form for all-pairs scans.
-    * Accumulates left-to-right in double exactly like the zip_with/aggregate
-    * formulation (and DuckDB's list_cosine_similarity), so results are
-    * bit-identical to [[cosine]]; ~10× faster than interpreted higher-order
-    * functions on wide crossJoins. */
-  val cosineUdf = udf { (a: Seq[Double], b: Seq[Double]) =>
-    if (a == null || b == null) null
-    else {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      val den = math.sqrt(na) * math.sqrt(nb)
-      if (den == 0.0) null else java.lang.Double.valueOf(d / den)
-    }
-  }
-
   /** Cosine as a native codegen'd Catalyst expression — the production hot
-    * path (same left-to-right accumulation as [[cosine]]/[[cosineUdf]], but
-    * no per-pair Seq boxing and no UDF boundary; see graft.plans.CosineSim). */
+    * path (same left-to-right accumulation as [[cosine]], but no
+    * higher-order functions; see graft.plans.CosineSim). */
   def cosineFast(a: Column, b: Column): Column = graft.plans.CosineSim(a, b)
 
   /** round every element to `d` decimals — for oracle-stable output. */

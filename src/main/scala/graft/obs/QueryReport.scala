@@ -123,7 +123,7 @@ object QueryReport {
       ListenerBridge.drain(spark.sparkContext)
       val jobs = log.take()
       Rep(t1 - t0, t1 - t0 - covered(jobs, t0, t1), rows, jobs, compiles, df)
-    } finally SparkEntry.releaseBetweenQueries(spark, sfDir)
+    } finally Bench.releasePersistedRdds(spark)
   }
 
   /** Row count of `df`, in one action that also folds every output column

@@ -14,18 +14,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * `ArrayData` into a `Seq[Double]` per invocation, i.e. one object + n
   * boxed doubles allocated per PAIR inside crossJoin/top-k loops; this
   * expression reads `ArrayData.getDouble(i)` in generated Java and stays
-  * inside whole-stage codegen — no UDF boundary, no allocation). Measured
-  * (graft.CosBench, 1M pairs × dim 64, local[8]): 0.7s vs 3.3s — 4.5×.
-  * The UDF also has a latent cliff the expression cannot have: when the
-  * input Seq materializes as a List (e.g. from an InMemoryRelation), the
-  * UDF's a(i) indexing turns O(dim²) per pair.
+  * inside whole-stage codegen — no UDF boundary, no allocation). When it
+  * replaced that UDF it measured 0.7s vs 3.3s (1M pairs × dim 64,
+  * local[8]) — 4.5×.
   *
-  * Accumulation is left-to-right in double, IDENTICAL to
-  * `VecOps.cosineUdf`, `VecOps.cosine` (zip_with/aggregate) and DuckDB's
+  * Accumulation is left-to-right in double, IDENTICAL to the reference
+  * `VecOps.cosine` (zip_with/aggregate) and DuckDB's
   * `list_cosine_similarity`, so every oracle comparison is unchanged
-  * (asserted by VecOpsSpec's three-way equality test). Zero-norm inputs
-  * yield null, mismatched lengths use the common prefix — same contract as
-  * the UDF it replaces.
+  * (asserted by VecOpsSpec: column algebra == this expression). Zero-norm
+  * inputs yield null, mismatched lengths use the common prefix (VecOpsSpec
+  * checks those against a scalar common-prefix cosine).
   */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
 

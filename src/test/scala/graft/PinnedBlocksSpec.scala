@@ -1,38 +1,28 @@
 package graft
 
-/** Between-query block hygiene, as the bench loop applies it
-  * (`SparkEntry.releaseBetweenQueries`: unpersist every persisted RDD not
-  * backing the memoized pair graph): no query may keep blocks pinned for
-  * another query, except the pair graph its owner q_minhash_lsh stages for
-  * q_dedup_components. A cross-query memo would both survive the hygiene
-  * and make one query time another's work. */
+/** Between-query block hygiene, as every timing loop applies it
+  * (`Bench.releasePersistedRdds`): no query may keep blocks pinned for
+  * another query. A cross-query cache would either survive the hygiene or,
+  * staged with truncated lineage, fail its next reader once released; and
+  * it would make one query time another's work. */
 class PinnedBlocksSpec extends SparkSpec {
 
   // sf0.001 fixture tables (TESTDATA.md)
   private val dir = s"${sys.props("user.home")}/testdata/sf0.001"
 
-  test("only the memoized pair graph survives between-query hygiene") {
-    // a fresh session: no memo built by another suite applies
+  test("no query keeps blocks pinned after between-query hygiene") {
     val s = spark.newSession()
     val sc = s.sparkContext
-    def run(name: String): Unit = {
-      SparkEntry.queries(name)(s, dir).count()
-      SparkEntry.releaseBetweenQueries(s, dir)
+    // every query that stages, q_minhash_lsh before its former memo reader
+    val names = Seq("q_ann_lsh", "q_ann_recall", "q_ann_topk", "q_image_seconds_ceil",
+      "q_image_seconds_floor", "q_locf_bucketed", "q_minhash_lsh", "q_dedup_components")
+    def loop(): Seq[Long] = names.map { n =>
+      val rows = graft.obs.QueryReport.consume(SparkEntry.queries(n)(s, dir))
+      Bench.releasePersistedRdds(s)
+      assert(sc.getPersistentRDDs.isEmpty, s"$n: pinned after hygiene: ${sc.getPersistentRDDs.keys}")
+      rows
     }
-
-    Seq("q_ann_lsh", "q_ann_recall", "q_ann_topk", "q_image_seconds_ceil", "q_image_seconds_floor",
-      "q_locf_bucketed").foreach(run)
-    assert(SparkEntry.pairGraphStagedIds(s, dir).isEmpty)
-    assert(sc.getPersistentRDDs.isEmpty, s"pinned after hygiene: ${sc.getPersistentRDDs.keys}")
-
-    Seq("q_minhash_lsh", "q_dedup_components").foreach(run)
-    val graph = SparkEntry.pairGraphStagedIds(s, dir)
-    assert(graph.size == 1)
-    assert(sc.getPersistentRDDs.keySet == graph)
-    run("q_minhash_lsh")
-    assert(SparkEntry.pairGraphStagedIds(s, dir) != graph,
-      "a second q_minhash_lsh run read the memo instead of building")
-    assert(sc.getPersistentRDDs.keySet == SparkEntry.pairGraphStagedIds(s, dir),
-      "only the new graph stays pinned")
+    val first = loop()
+    assert(loop() == first, "a query's rows changed after another query's blocks were released")
   }
 }
