@@ -13,7 +13,8 @@ class PinnedBlocksSpec extends SparkSpec {
   test("no query keeps blocks pinned after between-query hygiene") {
     val s = spark.newSession()
     val sc = s.sparkContext
-    // every query that stages, q_minhash_lsh before its former memo reader
+    // the queries that stage; q_minhash_lsh runs before q_dedup_components,
+    // so a graph staged by one for the other would be read after its release
     val names = Seq("q_ann_lsh", "q_ann_recall", "q_ann_topk", "q_image_seconds_ceil",
       "q_image_seconds_floor", "q_locf_bucketed", "q_minhash_lsh", "q_dedup_components")
     def loop(): Seq[Long] = names.map { n =>
